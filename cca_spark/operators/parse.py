@@ -22,6 +22,14 @@ Two physical strategies, same logical result:
 - ``strategy="sql"``: pure JVM ``regexp_extract_all`` — stays inside
   whole-stage codegen; used as the bench comparison point and for oracle
   parity checks.
+
+Python-boundary task layout: both Python stages (``parse_fact_partials``'s
+``mapInArrow``, ``parse_facts``'s ``mapInPandas``) take their input through
+``python_stage_input``. Scans split at 2x task slots so the hot
+conversation's split cannot hold a whole wave back (session.py); a small
+input instead runs as one wave of ``defaultParallelism`` fuller tasks,
+because every Python task pays a fixed start-up cost that a small input's
+kernel work does not amortise (see ``ONE_WAVE_MAX_BYTES``).
 """
 
 from __future__ import annotations
@@ -223,6 +231,39 @@ PARTIAL_AGG_SCHEMA = (
     "conv_id string, tool string, date_bucket timestamp_ntz, sink string, n long"
 )
 
+# Below this Catalyst size estimate of the kernel input, a Python stage runs
+# as one wave of defaultParallelism tasks instead of one task per scan split.
+# Every Python-UDF task pays a fixed cost c before its function runs: the
+# worker calls importlib.invalidate_caches() per task, so each task re-reads
+# the directory of every zip on its sys.path (the spark-core jar's 5,359
+# entries ~51 ms, pyspark.zip ~12 ms, before any import). A no-op mapInArrow
+# over 8 rows at local[4] measures c = 0.28-0.44 s from task launch to the
+# function's first call. One wave saves about one c per slot and gives up
+# the 2x split's straggler balance, which costs a share of the per-slot
+# kernel work. Measured at local[4] on 4 vCPUs, the Arrow/RE2 kernel covers
+# ~1.3 MB of estimate per second per slot (~50 ms per 2.3k-turn file). A
+# 40k-turn corpus (estimate 1.1 MB, ~0.2 s of kernel per slot) runs 21%
+# faster as one wave; the 1.6M-turn bench corpus (estimate 42 MB, ~8 s per
+# slot) runs 6% slower, an imbalance of ~12% of the per-slot work. That
+# imbalance equals c at 12-18 MB, so 4 MiB sits 3-4x below the crossover
+# and 4x above the small corpus.
+ONE_WAVE_MAX_BYTES = 4 << 20
+
+
+def python_stage_input(df: DataFrame) -> DataFrame:
+    """The input a Python-UDF stage runs over: ``df`` regrouped into one
+    wave of ``defaultParallelism`` tasks when Catalyst estimates it below
+    ``ONE_WAVE_MAX_BYTES``; otherwise, or for a streaming DataFrame, ``df``
+    itself. ``coalesce`` only merges existing splits without a shuffle and
+    never raises the partition count, so no partition count is read here
+    (reading one through ``.rdd`` can run AQE query stages)."""
+    if df.isStreaming:
+        return df
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    if size >= ONE_WAVE_MAX_BYTES:
+        return df
+    return df.coalesce(df.sparkSession.sparkContext.defaultParallelism)
+
 
 def _extract_batch_partials(pdf: pd.DataFrame, bank: list[BankEntry]) -> pd.DataFrame:
     """Map-side combine THROUGH the Arrow boundary: emit per-batch partial
@@ -407,14 +448,18 @@ def _extract_partials_arrow(batch):
 
 
 def parse_fact_partials(transcripts: DataFrame) -> DataFrame:
-    """Per-batch partial fact counts. r6: ``mapInArrow`` + the RE2 counting
-    kernel (_extract_partials_arrow) replaces ``mapInPandas`` + the
-    Python-re kernel — the Arrow->pandas conversion of the corpus-sized
-    ``text`` column (one Python str object per turn) disappears along
-    with the Python-loop regex counting. The pandas kernel
-    (_extract_batch_partials) stays as the reference implementation;
-    parity is pinned by test_arrow_partials_kernel_parity and the
-    end-to-end test_fused_pipeline_agg_equivalence."""
+    """transcripts -> per-batch partial fact counts (PARTIAL_AGG_SCHEMA).
+
+    Contract: summing ``n`` per key over the output equals counting the
+    full fact stream per key; how many partial rows carry one key depends
+    on the batch layout, so only aggregates over the output are stable.
+    The kernel is ``mapInArrow`` + RE2 counting (_extract_partials_arrow):
+    ``text`` never becomes Python string objects, at the cost of RE2
+    semantics, which the oracle shares. The pandas kernel
+    (_extract_batch_partials) is the reference; parity is pinned by
+    test_arrow_partials_kernel_parity and test_fused_pipeline_agg_equivalence.
+    Task layout follows ``python_stage_input``: fewer, larger batches on a
+    small input combine more keys per batch."""
 
     def run(batches):
         for batch in batches:
@@ -422,7 +467,7 @@ def parse_fact_partials(transcripts: DataFrame) -> DataFrame:
             if out is not None:
                 yield out
 
-    return transcripts.mapInArrow(run, schema=PARTIAL_AGG_SCHEMA)
+    return python_stage_input(transcripts).mapInArrow(run, schema=PARTIAL_AGG_SCHEMA)
 
 
 def _extract_batch(
@@ -529,14 +574,22 @@ def parse_facts(
 ) -> DataFrame:
     """transcripts(conv_id, turn_idx, role, text, tool, ts) -> fact stream.
 
-    ``slim=True`` emits only the meta columns an aggregate consumes
-    (SLIM_FACT_COLUMNS) — manual projection pushdown through the Arrow
-    boundary; row multiset per (turn, rule) is identical to the full
-    stream. ``with_value=False`` (r6) keeps entity_id/spans but skips the
-    per-match group extraction and the value bytes' Arrow crossing —
-    manual column pruning for consumers (the range-containment join) that
-    never read ``value``; Catalyst cannot push the projection into the
-    opaque kernel."""
+    One row per rule match; the row multiset is independent of the task
+    layout. Catalyst cannot push a projection into the opaque kernel, so
+    the pruning is explicit:
+
+    - ``slim=True`` emits only the meta columns an aggregate consumes
+      (SLIM_FACT_COLUMNS); row multiset per (turn, rule) is identical to
+      the full stream.
+    - ``with_value=False`` keeps entity_id/spans but skips the per-match
+      group extraction and the value bytes' Arrow crossing, for consumers
+      (the range-containment join) that never read ``value``. The slim
+      stream has no value column to drop, so the pair is rejected.
+
+    The pandas strategy's ``mapInPandas`` takes its input through
+    ``python_stage_input`` (one wave of fuller tasks on a small input)."""
+    if slim and not with_value:
+        raise ValueError("with_value=False applies to the full stream; slim=True has no value")
     if strategy == "pandas":
         if slim:
             kernel = _extract_batch_slim
@@ -553,14 +606,15 @@ def parse_facts(
             for pdf in batches:
                 yield kernel(pdf, bank)
 
+        kernel_input = python_stage_input(transcripts)
         if slim:
-            return transcripts.mapInPandas(run, schema=SLIM_FACT_SCHEMA)
+            return kernel_input.mapInPandas(run, schema=SLIM_FACT_SCHEMA)
         # entity_id as a JVM projection over the kernel output (r6): same
         # bytes as the former pandas concat, built in whole-stage codegen,
         # and never shipped through Arrow
         schema = KERNEL_FACT_SCHEMA if with_value else KERNEL_NOVALUE_SCHEMA
         out_cols = KERNEL_FACT_COLUMNS if with_value else KERNEL_NOVALUE_COLUMNS
-        facts = transcripts.mapInPandas(run, schema=schema)
+        facts = kernel_input.mapInPandas(run, schema=schema)
         return facts.select(
             F.concat_ws(
                 "-", "conv_id", "turn_idx", "span_start", "span_end", "rule_id"

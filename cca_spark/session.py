@@ -66,16 +66,25 @@ def get_spark(
         # reversed-order rerun flipped the winner —
         # logs/ab_shj_out.json vs logs/ab_shj_reversed_out.json).
         .config("spark.ui.enabled", "false")
+        # the console progress bar draws even with the UI off and floods
+        # stdout that scripts and the bench emit as JSON
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # parquet writers: bound file sizes like the reference bounds its
         # N-Triples shards (fact_size_threshold,
         # /root/reference/src/ast/analyzing/common/fact_options.ml:37)
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        # scan splits at 2x task slots: one-task-per-slot scans straggle on
-        # the hot conversation (one split carries ~15x the parse work), and
-        # per-slot Arrow-UDF waves leave cores idle behind the straggler.
-        # Measured at local[32], 1.6M turns: 32 splits 5.7-7.4s / 64 splits
-        # 4.6s (±0.2%) / 128 splits 7.6s (per-batch overhead dominates).
+        # Scans split at 2x task slots for straggler balance: with one split
+        # per slot, the split holding the hot conversation carries ~15x the
+        # parse work and the other cores idle behind it. Measured at
+        # local[32], 1.6M turns: 32 splits 5.7-7.4 s, 64 splits 4.6 s
+        # (±0.2%), 128 splits 7.6 s (per-batch overhead dominates).
+        # The tradeoff is two waves of Python-UDF tasks, and each Python
+        # task pays a fixed 0.28-0.44 s start-up at local[4] (the worker
+        # re-reads every zip on its sys.path per task). On a small input
+        # that fixed cost outweighs the balance, so the Python stages
+        # collapse to one wave below parse.ONE_WAVE_MAX_BYTES (40k turns:
+        # 21% less wall time); the 1.6M-turn corpus keeps its 2x split.
         .config("spark.sql.files.minPartitionNum", str(2 * int(cpus_for_splits)))
     )
     if extra_conf:
