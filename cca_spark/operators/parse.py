@@ -1,30 +1,32 @@
 """PARSE — regex/grok bank extraction over turn text.
 
 Reference analog: per-language parsers + fact extractors turn one input
-tree into many triple rows (UDTF shape,
-/root/reference/src/ast/analyzing/common/fact_base.ml:447-507; language
-dispatch at /root/reference/src/ast/analyzing/diffastcore.ml:42-48). Here
-one turn's ``text`` becomes 0..n fact rows, one per rule match.
+tree into many triple rows (UDTF shape, fact_base.ml:447-507; language
+dispatch at diffastcore.ml:42-48). Here one turn's ``text`` becomes 0..n
+fact rows, one per rule match.
 
 Entity identity mirrors the reference's ``(encoding, file-id, range)`` URI
-scheme (/root/reference/src/ast/analyzing/common/entity.ml:68-92,
-triple.ml:589-596): ``entity_id = conv_id-turn_idx-span_start-span_end-rule_id``
-— a deterministic key independent of partitioning, which is what makes
+scheme (entity.ml:68-92, triple.ml:589-596):
+``entity_id = conv_id-turn_idx-span_start-span_end-rule_id`` — a
+deterministic key independent of partitioning, which is what makes
 routed-row **set equality** hold across cluster sizes.
 
-Two physical strategies, same logical result:
+One kernel per output contract:
 
-- ``strategy="pandas"`` (default): ``mapInPandas`` with the regex bank
-  compiled **once per Arrow batch iterator** (i.e. once per task), applied
-  via ``pandas.Series.str`` vectorized ops where possible. This is the
-  north-star path: Arrow batches in, Arrow batches out, zero per-row Spark
-  UDF calls.
-- ``strategy="sql"``: pure JVM ``regexp_extract_all`` — stays inside
-  whole-stage codegen; used as the bench comparison point and for oracle
-  parity checks.
+- **facts** (``parse_facts``): one row per match with all of
+  FACT_COLUMNS. ``strategy="pandas"`` (default) runs ``_extract_batch``
+  through ``mapInPandas`` with the bank compiled once per task;
+  ``strategy="sql"`` runs the same bank as JVM ``regexp_extract_all`` in
+  whole-stage codegen, with no Python boundary, and is the parity check.
+  Every column crosses the Arrow boundary because Catalyst cannot prune
+  inside the kernel; a consumer that reads few columns still pays for all.
+- **per-key counts** (``parse_fact_partials``): ``_extract_partials_arrow``
+  counts matches with RE2 on the Arrow batch and combines them per
+  (conv_id, tool, day, sink) inside the kernel, so aggregate-only
+  consumers ship keys, not facts. It trades Python ``re`` for RE2
+  semantics, which the DuckDB oracle shares.
 
-Python-boundary task layout: both Python stages (``parse_fact_partials``'s
-``mapInArrow``, ``parse_facts``'s ``mapInPandas``) take their input through
+Python-boundary task layout: both Python stages take their input through
 ``python_stage_input``. Scans split at 2x task slots so the hot
 conversation's split cannot hold a whole wave back (session.py); a small
 input instead runs as one wave of ``defaultParallelism`` fuller tasks,
@@ -106,12 +108,8 @@ def _candidate_masks(texts_s, tools_s, roles_s, bank: list[BankEntry]) -> list:
             out.append(am & sm)
     return out
 
-FACT_SCHEMA = (
-    "entity_id string, conv_id string, turn_idx int, role string, "
-    "tool string, ts timestamp_ntz, rule_id string, sink string, "
-    "significance int, span_start int, span_end int, value string"
-)
 
+# One fact row per rule match, in this column order, from either strategy.
 FACT_COLUMNS = [
     "entity_id",
     "conv_id",
@@ -127,9 +125,9 @@ FACT_COLUMNS = [
     "value",
 ]
 
-# What the full pandas kernel emits through Arrow: FACT_COLUMNS minus the
+# What the pandas kernel emits through Arrow: FACT_COLUMNS minus the
 # derived entity_id, which parse_facts reattaches as a JVM concat_ws
-# projection (r6) — identical bytes, built in codegen instead of pandas.
+# projection — identical bytes, built in codegen instead of pandas.
 KERNEL_FACT_SCHEMA = (
     "conv_id string, turn_idx int, role string, "
     "tool string, ts timestamp_ntz, rule_id string, sink string, "
@@ -137,95 +135,6 @@ KERNEL_FACT_SCHEMA = (
 )
 
 KERNEL_FACT_COLUMNS = [c for c in FACT_COLUMNS if c != "entity_id"]
-
-# No-value kernel output (r6): consumers that never read ``value`` (the
-# range-containment suppression reads only spans/meta) skip the per-match
-# group extraction AND the value bytes' Arrow crossing — measured −12% on
-# the full kernel at sf0.1 batches. Row multiset per (turn, rule, span)
-# is identical to the full stream minus the column.
-KERNEL_NOVALUE_SCHEMA = (
-    "conv_id string, turn_idx int, role string, "
-    "tool string, ts timestamp_ntz, rule_id string, sink string, "
-    "significance int, span_start int, span_end int"
-)
-
-KERNEL_NOVALUE_COLUMNS = [c for c in KERNEL_FACT_COLUMNS if c != "value"]
-
-# Slim fact stream: manual column pruning THROUGH the UDF boundary.
-# Catalyst cannot push a projection into an opaque mapInPandas, so callers
-# that never read entity_id/span/value (the flagship aggregate) request the
-# slim schema instead — at 10^12 turns the full stream ships ~150 B/fact of
-# derived strings through Arrow that the aggregate immediately drops.
-SLIM_FACT_SCHEMA = (
-    "conv_id string, turn_idx int, role string, tool string, "
-    "ts timestamp_ntz, rule_id string, sink string, significance int"
-)
-
-SLIM_FACT_COLUMNS = [
-    "conv_id",
-    "turn_idx",
-    "role",
-    "tool",
-    "ts",
-    "rule_id",
-    "sink",
-    "significance",
-]
-
-
-def _extract_batch_slim(pdf: pd.DataFrame, bank: list[BankEntry]) -> pd.DataFrame:
-    """Slim kernel: one output row per match, meta columns only — no span
-    arithmetic, no value extraction, no entity_id concat. Same candidate
-    discipline as the full kernel (vectorized anchor + tool-scope masks);
-    emits exactly the same NUMBER of rows per (turn, rule), so any
-    aggregate over the slim stream equals the same aggregate over the full
-    stream (pinned by test_slim_parse_agg_equivalence)."""
-    import numpy as np
-
-    texts_s = pdf["text"].fillna("")
-    tools_s = pdf["tool"]
-    texts = texts_s.tolist()
-    masks = _candidate_masks(texts_s, tools_s, pdf["role"], bank)
-    hits: list[tuple[int, int, int]] = []  # (row, rule, significance)
-    for j, (rule, cre, sfn) in enumerate(bank):
-        mask = masks[j]
-        finditer = cre.finditer
-        base = rule.significance
-        if sfn is None:
-            for i in np.nonzero(mask.to_numpy())[0]:
-                for _ in finditer(texts[i]):
-                    hits.append((i, j, base))
-        else:
-            for i in np.nonzero(mask.to_numpy())[0]:
-                for m in finditer(texts[i]):
-                    hits.append((i, j, sfn(m)))
-
-    if hits:
-        ix = np.fromiter((h[0] for h in hits), dtype=np.int64, count=len(hits))
-        rj = np.fromiter((h[1] for h in hits), dtype=np.int64, count=len(hits))
-        sig = np.fromiter((h[2] for h in hits), dtype=np.int32, count=len(hits))
-    else:
-        ix = rj = np.empty(0, dtype=np.int64)
-        sig = np.empty(0, dtype=np.int32)
-    rule_ids = np.array([r.rule_id for r, _, _ in bank], dtype=object)
-    sinks = np.array([r.sink for r, _, _ in bank], dtype=object)
-    res = pd.DataFrame(
-        {
-            "conv_id": pdf["conv_id"].to_numpy()[ix],
-            "turn_idx": pdf["turn_idx"].to_numpy()[ix].astype("int32"),
-            "role": pdf["role"].to_numpy()[ix],
-            "tool": pdf["tool"].to_numpy()[ix],
-            "ts": pdf["ts"].to_numpy()[ix],
-            "rule_id": rule_ids[rj],
-            "sink": sinks[rj],
-            "significance": sig,
-        }
-    )
-    res["ts"] = pd.to_datetime(res["ts"])
-    for c in ("conv_id", "role", "tool", "rule_id", "sink"):
-        res[c] = res[c].astype(object)
-    return res[SLIM_FACT_COLUMNS]
-
 
 PARTIAL_AGG_SCHEMA = (
     "conv_id string, tool string, date_bucket timestamp_ntz, sink string, n long"
@@ -265,83 +174,8 @@ def python_stage_input(df: DataFrame) -> DataFrame:
     return df.coalesce(df.sparkSession.sparkContext.defaultParallelism)
 
 
-def _extract_batch_partials(pdf: pd.DataFrame, bank: list[BankEntry]) -> pd.DataFrame:
-    """Map-side combine THROUGH the Arrow boundary: emit per-batch partial
-    counts keyed by (conv_id, tool, date, sink) instead of one row per
-    fact. Spark's partial HashAggregate cannot reach inside a mapInPandas,
-    so a 10k-turn batch that produces ~55k facts would ship 55k Arrow rows
-    the JVM immediately combines; the pandas groupby here shrinks that to
-    the batch's distinct key count (~10-15x fewer rows at this corpus).
-    The sink column is the RULE's sink (pre-reroute): dead-letter routing
-    needs the ontology and stays a JVM broadcast join downstream, so
-    routing logic never gets duplicated in Python."""
-    import numpy as np
-
-    texts_s = pdf["text"].fillna("")
-    tools_s = pdf["tool"]
-    masks = _candidate_masks(texts_s, tools_s, pdf["role"], bank)
-    # COUNT-BASED kernel (r3): the output keys only need per-(row, sink)
-    # match COUNTS, so the per-match Python loop (1M match objects + tuple
-    # appends per 100k-row batch) is replaced with pandas' C-looped
-    # ``str.count`` per rule, accumulated into one int array per sink —
-    # and the 10x-larger per-hit frame never materializes. Measured 1.9x
-    # on the identical batch, output bit-identical (multi-match counting
-    # stays exact: str.count counts non-overlapping matches like finditer).
-    n_rows = len(pdf)
-    sink_counts: dict[str, np.ndarray] = {}
-    for j, (rule, cre, _sfn) in enumerate(bank):
-        mnp = masks[j].to_numpy()
-        if not mnp.any():
-            continue
-        cnt = texts_s[mnp].str.count(cre).to_numpy().astype(np.int64)
-        if not cnt.any():
-            continue
-        arr = sink_counts.get(rule.sink)
-        if arr is None:
-            arr = np.zeros(n_rows, dtype=np.int64)
-            sink_counts[rule.sink] = arr
-        arr[mnp] += cnt
-    date = pd.to_datetime(pdf["ts"]).dt.floor("D")
-    base = pd.DataFrame(
-        {"conv_id": pdf["conv_id"], "tool": pdf["tool"], "date_bucket": date}
-    )
-    outs = []
-    for sink, arr in sink_counts.items():
-        nz = arr > 0
-        if not nz.any():
-            continue
-        g = base[nz].copy()
-        g["n"] = arr[nz]
-        g["sink"] = sink
-        outs.append(g)
-    if outs:
-        facts = pd.concat(outs, ignore_index=True)
-        out = (
-            facts.groupby(["conv_id", "tool", "date_bucket", "sink"], dropna=False)["n"]
-            .sum()
-            .reset_index()
-        )
-    else:
-        out = pd.DataFrame(
-            {
-                "conv_id": pd.Series([], dtype=object),
-                "tool": pd.Series([], dtype=object),
-                "date_bucket": pd.Series([], dtype="datetime64[ns]"),
-                "sink": pd.Series([], dtype=object),
-                "n": pd.Series([], dtype="int64"),
-            }
-        )
-    out["n"] = out["n"].astype("int64")
-    out["date_bucket"] = pd.to_datetime(out["date_bucket"])
-    for c in ("conv_id", "tool", "sink"):
-        out[c] = out[c].astype(object)
-    # dropna=False keeps NaN tool groups; Arrow wants None, not NaN
-    out["tool"] = out["tool"].where(pd.notna(out["tool"]), None)
-    return out[["conv_id", "tool", "date_bucket", "sink", "n"]]
-
-
 def _extract_partials_arrow(batch):
-    """Arrow-native partials kernel (r6): per-rule match COUNTS via
+    """Arrow-native partials kernel: per-rule match COUNTS via
     pyarrow's RE2 (``count_substring_regex``) directly on the incoming
     Arrow batch — the ``text`` column never becomes Python string objects
     (guide §4.2: hand whole batches to vectorized native code).
@@ -455,9 +289,10 @@ def parse_fact_partials(transcripts: DataFrame) -> DataFrame:
     on the batch layout, so only aggregates over the output are stable.
     The kernel is ``mapInArrow`` + RE2 counting (_extract_partials_arrow):
     ``text`` never becomes Python string objects, at the cost of RE2
-    semantics, which the oracle shares. The pandas kernel
-    (_extract_batch_partials) is the reference; parity is pinned by
-    test_arrow_partials_kernel_parity and test_fused_pipeline_agg_equivalence.
+    semantics, which the oracle shares. The reference is the full-fact
+    kernel's output counted per key; parity is pinned by
+    test_arrow_partials_kernel_parity, test_partials_kernel_hostile_input_parity
+    and test_fused_pipeline_agg_equivalence.
     Task layout follows ``python_stage_input``: fewer, larger batches on a
     small input combine more keys per batch."""
 
@@ -470,9 +305,7 @@ def parse_fact_partials(transcripts: DataFrame) -> DataFrame:
     return python_stage_input(transcripts).mapInArrow(run, schema=PARTIAL_AGG_SCHEMA)
 
 
-def _extract_batch(
-    pdf: pd.DataFrame, bank: list[BankEntry], with_value: bool = True
-) -> pd.DataFrame:
+def _extract_batch(pdf: pd.DataFrame, bank: list[BankEntry]) -> pd.DataFrame:
     """Apply the compiled bank to one Arrow batch; emit one row per match.
 
     Hot-loop discipline (measured, not guessed — see git history):
@@ -487,8 +320,7 @@ def _extract_batch(
       similarity prefilters (comparison.ml:30-38).
     - the loop appends ONE small tuple per fact (not 12 per-column
       appends); row attributes are materialized afterwards by numpy
-      fancy-indexing and the entity_id by vectorized pandas string
-      concatenation — 2.5x faster end-to-end than the naive kernel.
+      fancy-indexing — 2.5x faster end-to-end than the naive kernel.
     """
     import numpy as np
 
@@ -496,35 +328,23 @@ def _extract_batch(
     tools_s = pdf["tool"]  # per-tool sub-bank dispatch (rules.py)
     texts = texts_s.tolist()
     masks = _candidate_masks(texts_s, tools_s, pdf["role"], bank)
-    # (row, rule, start, end, value, significance) — or without value in
-    # the no-value variant (separate loop bodies: a per-match branch in
-    # the hot loop would tax the common path)
+    # (row, rule, start, end, value, significance)
     hits: list[tuple] = []
-    if with_value:
-        for j, (rule, cre, sfn) in enumerate(bank):
-            finditer = cre.finditer
-            base = rule.significance
-            for i in np.nonzero(masks[j].to_numpy())[0]:
-                for m in finditer(texts[i]):
-                    hits.append(
-                        (
-                            i,
-                            j,
-                            m.start(),
-                            m.end(),
-                            m.group(1) if m.groups() else m.group(0),
-                            base if sfn is None else sfn(m),
-                        )
+    for j, (rule, cre, sfn) in enumerate(bank):
+        finditer = cre.finditer
+        base = rule.significance
+        for i in np.nonzero(masks[j].to_numpy())[0]:
+            for m in finditer(texts[i]):
+                hits.append(
+                    (
+                        i,
+                        j,
+                        m.start(),
+                        m.end(),
+                        m.group(1) if m.groups() else m.group(0),
+                        base if sfn is None else sfn(m),
                     )
-    else:
-        for j, (rule, cre, sfn) in enumerate(bank):
-            finditer = cre.finditer
-            base = rule.significance
-            for i in np.nonzero(masks[j].to_numpy())[0]:
-                for m in finditer(texts[i]):
-                    hits.append(
-                        (i, j, m.start(), m.end(), base if sfn is None else sfn(m))
-                    )
+                )
 
     if hits:
         ix = np.fromiter((h[0] for h in hits), dtype=np.int64, count=len(hits))
@@ -534,101 +354,74 @@ def _extract_batch(
     rule_ids = np.array([r.rule_id for r, _, _ in bank], dtype=object)
     sinks = np.array([r.sink for r, _, _ in bank], dtype=object)
 
-    sig_ix = 5 if with_value else 4
-    cols = {
-        "conv_id": pdf["conv_id"].to_numpy()[ix],
-        "turn_idx": pdf["turn_idx"].to_numpy()[ix].astype("int32"),
-        "role": pdf["role"].to_numpy()[ix],
-        "tool": pdf["tool"].to_numpy()[ix],
-        "ts": pdf["ts"].to_numpy()[ix],
-        "rule_id": rule_ids[rj],
-        "sink": sinks[rj],
-        "significance": np.fromiter(
-            (h[sig_ix] for h in hits), dtype=np.int32, count=len(hits)
-        ),
-        "span_start": np.fromiter(
-            (h[2] for h in hits), dtype=np.int32, count=len(hits)
-        ),
-        "span_end": np.fromiter((h[3] for h in hits), dtype=np.int32, count=len(hits)),
-    }
-    if with_value:
-        cols["value"] = np.array([h[4] for h in hits], dtype=object)
-    res = pd.DataFrame(cols)
+    res = pd.DataFrame(
+        {
+            "conv_id": pdf["conv_id"].to_numpy()[ix],
+            "turn_idx": pdf["turn_idx"].to_numpy()[ix].astype("int32"),
+            "role": pdf["role"].to_numpy()[ix],
+            "tool": pdf["tool"].to_numpy()[ix],
+            "ts": pdf["ts"].to_numpy()[ix],
+            "rule_id": rule_ids[rj],
+            "sink": sinks[rj],
+            "significance": np.fromiter(
+                (h[5] for h in hits), dtype=np.int32, count=len(hits)
+            ),
+            "span_start": np.fromiter(
+                (h[2] for h in hits), dtype=np.int32, count=len(hits)
+            ),
+            "span_end": np.fromiter(
+                (h[3] for h in hits), dtype=np.int32, count=len(hits)
+            ),
+            "value": np.array([h[4] for h in hits], dtype=object),
+        }
+    )
     # entity_id is built JVM-side (parse_facts): concat_ws in codegen beats
     # five pandas string materializations per batch, and ~35 B/fact of
-    # derived string never crosses the Arrow boundary (r6, guide §4.1)
+    # derived string never crosses the Arrow boundary
     # explicit dtypes: a zero-match batch must still carry Arrow-castable
     # columns (an empty object/float64 'ts' breaks the timestamp cast)
     res["ts"] = pd.to_datetime(res["ts"])
-    obj_cols = ("conv_id", "role", "tool", "rule_id", "sink", "value")
-    for c in obj_cols if with_value else obj_cols[:-1]:
+    for c in ("conv_id", "role", "tool", "rule_id", "sink", "value"):
         res[c] = res[c].astype(object)
-    return res[KERNEL_FACT_COLUMNS if with_value else KERNEL_NOVALUE_COLUMNS]
+    return res[KERNEL_FACT_COLUMNS]
 
 
-def parse_facts(
-    transcripts: DataFrame,
-    strategy: str = "pandas",
-    slim: bool = False,
-    with_value: bool = True,
-) -> DataFrame:
+def parse_facts(transcripts: DataFrame, strategy: str = "pandas") -> DataFrame:
     """transcripts(conv_id, turn_idx, role, text, tool, ts) -> fact stream.
 
-    One row per rule match; the row multiset is independent of the task
-    layout. Catalyst cannot push a projection into the opaque kernel, so
-    the pruning is explicit:
+    Contract: one row per rule match with all of FACT_COLUMNS; the row
+    multiset is independent of the task layout and identical for both
+    strategies (the pandas kernel is authoritative for overlapping
+    multi-match spans, see ``_parse_facts_sql``).
 
-    - ``slim=True`` emits only the meta columns an aggregate consumes
-      (SLIM_FACT_COLUMNS); row multiset per (turn, rule) is identical to
-      the full stream.
-    - ``with_value=False`` keeps entity_id/spans but skips the per-match
-      group extraction and the value bytes' Arrow crossing, for consumers
-      (the range-containment join) that never read ``value``. The slim
-      stream has no value column to drop, so the pair is rejected.
-
-    The pandas strategy's ``mapInPandas`` takes its input through
-    ``python_stage_input`` (one wave of fuller tasks on a small input)."""
-    if slim and not with_value:
-        raise ValueError("with_value=False applies to the full stream; slim=True has no value")
+    Tradeoff: the pandas kernel is opaque to Catalyst, so every fact
+    crosses the Arrow boundary with all its columns, ``value`` included,
+    even when the consumer projects them away. Consumers that only count
+    facts per key use ``parse_fact_partials`` instead, which combines
+    counts inside the kernel; consumers of individual facts (spans, ids,
+    values) pay for the full row. The pandas strategy's ``mapInPandas``
+    takes its input through ``python_stage_input``."""
     if strategy == "pandas":
-        if slim:
-            kernel = _extract_batch_slim
-        elif with_value:
-            kernel = _extract_batch
-        else:
-            def kernel(pdf, bank):
-                return _extract_batch(pdf, bank, with_value=False)
 
         def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             # compile once per task (reference compiles its rule bank once
             # per language engine instance, java_change.ml:788-793)
             bank = compile_bank()
             for pdf in batches:
-                yield kernel(pdf, bank)
+                yield _extract_batch(pdf, bank)
 
-        kernel_input = python_stage_input(transcripts)
-        if slim:
-            return kernel_input.mapInPandas(run, schema=SLIM_FACT_SCHEMA)
-        # entity_id as a JVM projection over the kernel output (r6): same
-        # bytes as the former pandas concat, built in whole-stage codegen,
-        # and never shipped through Arrow
-        schema = KERNEL_FACT_SCHEMA if with_value else KERNEL_NOVALUE_SCHEMA
-        out_cols = KERNEL_FACT_COLUMNS if with_value else KERNEL_NOVALUE_COLUMNS
-        facts = kernel_input.mapInPandas(run, schema=schema)
+        facts = python_stage_input(transcripts).mapInPandas(
+            run, schema=KERNEL_FACT_SCHEMA
+        )
         return facts.select(
             F.concat_ws(
                 "-", "conv_id", "turn_idx", "span_start", "span_end", "rule_id"
             ).alias("entity_id"),
-            *out_cols,
+            *KERNEL_FACT_COLUMNS,
         )
 
     if strategy == "sql":
-        df = _parse_facts_sql(transcripts)
-        if slim:
-            return df.select(*SLIM_FACT_COLUMNS)
-        if not with_value:
-            return df.select("entity_id", *KERNEL_NOVALUE_COLUMNS)
-        return df
+        return _parse_facts_sql(transcripts)
 
     raise ValueError(f"unknown parse strategy: {strategy}")
 

@@ -170,17 +170,13 @@ def range_containment_suppression(spark: SparkSession, sf_dir: str) -> DataFrame
     # localCheckpoint (not persist): materializes eagerly, truncates the
     # plan, and is released with the RDD — a bare persist() leaked cached
     # storage across the 50-query driver battery (ADVICE r02).
-    # r6 (guide §2.3, project before materializing): only the 7 columns
-    # the containment join and the output read are checkpointed — the
-    # former full-width checkpoint also materialized value/ts/role/tool
-    # and the ontology enrichment columns, ~2.4x the bytes, none of them
-    # consumed below. with_value=False (r6 session 3) additionally skips
-    # the per-match value extraction inside the parse kernel and the
-    # value bytes' Arrow crossing — this query never reads value, and
-    # Catalyst cannot prune into the opaque kernel (−12% on the kernel,
-    # output row set unchanged: test_novalue_kernel_matches_full).
+    # Project before materializing: only the 7 columns the
+    # containment join and the output read are checkpointed, not value,
+    # ts, role, tool or the ontology columns. The parse kernel still
+    # extracts and ships value, since Catalyst cannot prune inside it;
+    # skipping that measured as noise on this query end to end.
     facts = (
-        routed_facts(spark, load_transcripts(spark, sf_dir), with_value=False)
+        routed_facts(spark, load_transcripts(spark, sf_dir))
         .select(
             "entity_id", "conv_id", "turn_idx", "sink", "rule_id",
             "span_start", "span_end",

@@ -43,13 +43,10 @@ def salted_repartition(
 
     ``repartition(conv_id, salt)`` splits a hot conversation across up to
     ``n_salts`` partitions while keeping co-location for everyone else.
-    Slim fact streams (no entity_id) salt on the stable natural key
-    (conv_id, turn_idx, rule_id) — equally deterministic.
+    Fact streams salt on entity_id; raw transcripts on (conv_id, turn_idx).
     """
     if "entity_id" in df.columns:
         salt_src = F.xxhash64("entity_id")
-    elif "rule_id" in df.columns:
-        salt_src = F.xxhash64("conv_id", "turn_idx", "rule_id")
     else:  # raw transcripts: the stable natural key is (conv_id, turn_idx)
         salt_src = F.xxhash64("conv_id", "turn_idx")
     salted = df.withColumn("_salt", F.pmod(salt_src, F.lit(n_salts)))

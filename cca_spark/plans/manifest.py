@@ -28,6 +28,7 @@ import os
 import time
 import uuid
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,10 +47,18 @@ def _facts_dir(out_dir: str) -> str:
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
-    path = _manifest_dir(out_dir)
+    """The manifest rows; empty only when no manifest was ever written.
+
+    A missing ``_manifest`` directory means "nothing processed". Any other
+    read error (a corrupt or unreadable file) propagates: reading it as
+    empty would make ``run_with_resume`` redo every partition and append
+    duplicate manifest rows. The explicit schema makes an empty directory
+    read as zero rows instead of failing schema inference."""
     try:
-        return spark.read.parquet(path)
-    except Exception:
+        return spark.read.schema(MANIFEST_SCHEMA).parquet(_manifest_dir(out_dir))
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         return spark.createDataFrame([], MANIFEST_SCHEMA)
 
 

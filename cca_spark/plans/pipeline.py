@@ -12,7 +12,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from cca_spark.operators.aggregate import agg_per_sink
 from cca_spark.operators.enrich import enrich_facts
 from cca_spark.operators.parse import parse_facts
 from cca_spark.operators.route import route_facts, salted_repartition
@@ -25,18 +24,17 @@ def routed_facts(
     parse_strategy: str = "pandas",
     salt: bool = False,
     n_salts: int = 16,
-    slim: bool = False,
-    with_value: bool = True,
 ) -> DataFrame:
-    """``slim=True`` prunes the fact stream to aggregate-needed columns at
-    the UDF boundary (parse.SLIM_FACT_COLUMNS) — Catalyst cannot project
-    into an opaque mapInPandas, so the pruning is explicit. Salting keys
-    on conv_id alone in slim mode (no entity_id). ``with_value=False``
-    keeps entity_id/spans but drops the value extraction (r6 — for
-    consumers like the range-containment join that never read it)."""
-    facts = parse_facts(
-        transcripts, strategy=parse_strategy, slim=slim, with_value=with_value
-    )
+    """parse → enrich → route: one row per fact with all of
+    parse.FACT_COLUMNS plus the ontology and routing columns.
+
+    This is the stream for consumers of individual facts (sink writes,
+    span joins, deltas); it pays for every fact column at the kernel's
+    Arrow boundary. Aggregate-only consumers use ``fused_pipeline_agg``,
+    which counts inside the kernel. ``salt=True`` repartitions on
+    (conv_id, hash(entity_id) mod n_salts) so a hot conversation spreads
+    over up to ``n_salts`` partitions."""
+    facts = parse_facts(transcripts, strategy=parse_strategy)
     enriched = enrich_facts(spark, facts)
     routed = route_facts(enriched)
     if salt:
@@ -44,16 +42,9 @@ def routed_facts(
     return routed
 
 
-def pipeline_agg(
-    spark: SparkSession,
-    sf_dir: str,
-    parse_strategy: str = "pandas",
-) -> DataFrame:
+def pipeline_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship query: routed fact counts per (sink, tool, date_bucket)."""
-    transcripts = load_transcripts(spark, sf_dir)
-    if parse_strategy == "pandas":
-        return fused_pipeline_agg(spark, transcripts)
-    return agg_per_sink(routed_facts(spark, transcripts, parse_strategy, slim=True))
+    return fused_pipeline_agg(spark, load_transcripts(spark, sf_dir))
 
 
 def fused_pipeline_agg(spark: SparkSession, transcripts: DataFrame) -> DataFrame:

@@ -73,7 +73,7 @@ def main() -> None:
 
     def parse_wall(df) -> float:
         t0 = time.time()
-        parse_facts(df, slim=True).count()
+        parse_facts(df).count()
         return round(time.time() - t0, 1)
 
     # explicit width on BOTH layouts: AQE otherwise coalesces the

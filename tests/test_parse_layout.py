@@ -7,7 +7,6 @@ its layout; and the layout never changes what the pipeline computes.
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -19,7 +18,6 @@ def test_small_input_runs_one_wave(spark, sf_dir):
     n = spark.sparkContext.defaultParallelism
     assert parse_fact_partials(t).rdd.getNumPartitions() == n
     assert parse_facts(t).rdd.getNumPartitions() == n
-    assert parse_facts(t, slim=True).rdd.getNumPartitions() == n
 
 
 def test_one_wave_keeps_fused_aggregate(spark, sf_dir, monkeypatch):
@@ -65,13 +63,3 @@ def test_streaming_input_passes_through(spark, sf_dir, tmp_path):
     load_transcripts(spark, sf_dir).write.parquet(input_dir)
     stream = stream_transcripts(spark, input_dir)
     assert python_stage_input(stream) is stream
-
-
-def test_slim_without_value_is_rejected(spark, sf_dir):
-    from cca_spark.operators.parse import parse_facts
-    from cca_spark.transcripts import load_transcripts
-
-    t = load_transcripts(spark, sf_dir)
-    for strategy in ("pandas", "sql"):
-        with pytest.raises(ValueError, match="with_value"):
-            parse_facts(t, strategy=strategy, slim=True, with_value=False)

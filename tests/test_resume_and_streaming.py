@@ -89,6 +89,23 @@ def test_crash_between_data_and_manifest_is_idempotent(spark, sf_dir, tmp_out):
     assert facts.count() == facts.select("entity_id").distinct().count()
 
 
+def test_unreadable_manifest_is_not_read_as_empty(spark, sf_dir, tmp_out):
+    """An empty _manifest/ directory means nothing processed; a corrupt
+    manifest file fails the run instead of reading as "nothing processed"
+    (which would redo every partition and duplicate manifest rows)."""
+    import os
+
+    import cca_spark.plans.manifest as M
+
+    os.makedirs(M._manifest_dir(tmp_out))
+    assert M.processed_partitions(spark, tmp_out) == set()
+    with open(os.path.join(M._manifest_dir(tmp_out), "part-0.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        M.run_with_resume(spark, sf_dir, tmp_out)
+    assert not os.path.exists(M._facts_dir(tmp_out))
+
+
 def test_streaming_matches_batch(spark, sf_dir, tmp_out):
     from cca_spark.plans.pipeline import routed_facts
     from cca_spark.streaming.pipeline import run_stream_to_memory

@@ -125,8 +125,6 @@ def test_parse_handles_null_empty_huge_text(spark):
     # null/empty rows emit nothing; multi-match emits one fact per match
     assert (pandas_res["turn_idx"].astype(int) >= 0).all()
     assert len(pandas_res[pandas_res["rule_id"] == "r_error_code"]) == 2
-    slim_res = parse_facts(t, slim=True).count()
-    assert slim_res == len(pandas_res)
 
 
 def test_snapshot_mapping_all_classes_present(spark, sf_dir):
@@ -143,10 +141,10 @@ def test_snapshot_mapping_all_classes_present(spark, sf_dir):
     assert dup_old == 0
 
 
-def test_slim_parse_agg_equivalence(spark, sf_dir):
-    """The slim (column-pruned) fact stream must aggregate identically to
-    the full stream — same row multiset per (turn, rule), narrower
-    columns. The flagship pipeline_agg runs on the slim path."""
+def test_salted_parse_agg_equivalence(spark, sf_dir):
+    """Salting the routed fact stream (repartition on conv_id plus an
+    entity_id hash) moves rows between partitions but must not change any
+    aggregate over them."""
     from cca_spark.operators.aggregate import agg_per_sink
     from cca_spark.plans.pipeline import routed_facts
     from cca_spark.transcripts import load_transcripts
@@ -154,12 +152,10 @@ def test_slim_parse_agg_equivalence(spark, sf_dir):
 
     t = load_transcripts(spark, sf_dir)
     full = normalize(agg_per_sink(routed_facts(spark, t)).toPandas())
-    slim = normalize(agg_per_sink(routed_facts(spark, t, slim=True)).toPandas())
-    assert full.equals(slim)
-    # slim + salted still equals (salt keys on the natural key in slim mode)
     salted = normalize(
-        agg_per_sink(routed_facts(spark, t, slim=True, salt=True, n_salts=5)).toPandas()
+        agg_per_sink(routed_facts(spark, t, salt=True, n_salts=5)).toPandas()
     )
+    assert len(full) > 0
     assert full.equals(salted)
 
 

@@ -2,7 +2,8 @@
 took this round keeps a focused parity pin here (the brief's rule —
 optimizations must not change what any query computes).
 
-- the Arrow/RE2 partials kernel vs the pandas/re reference kernel
+- the Arrow/RE2 partials kernel vs the full-fact pandas/re kernel's
+  per-key counts, on corpus text and on hostile text
 - the single-generate (inline) SQL parse strategy vs the pandas strategy
 - the JVM-side entity_id projection vs the kernel-derived fields
 - the dedup materialization changes (distinct-before-persist) vs a
@@ -26,31 +27,101 @@ def _multiset_equal(df_a, df_b, cols):
     return ha.exceptAll(hb).count() == 0 and hb.exceptAll(ha).count() == 0
 
 
+_PARTIAL_KEYS = ["conv_id", "tool", "date_bucket", "sink"]
+
+
+def _full_kernel_counts(pdf):
+    """Reference for the counting kernel: the full-fact pandas/re kernel's
+    rows counted per (conv_id, tool, floor(ts, day), sink)."""
+    from cca_spark.operators.parse import _extract_batch, compile_bank
+
+    facts = _extract_batch(pdf, compile_bank())
+    facts["date_bucket"] = facts["ts"].dt.floor("D")
+    return facts.groupby(_PARTIAL_KEYS, dropna=False).size().rename("n").reset_index()
+
+
+def _assert_same_counts(ref, got):
+    r = ref.sort_values(_PARTIAL_KEYS).reset_index(drop=True)
+    g = got.sort_values(_PARTIAL_KEYS).reset_index(drop=True)
+    assert len(r) == len(g)
+    for c in _PARTIAL_KEYS + ["n"]:
+        rc = r[c].where(pd.notna(r[c]), None).astype(str)
+        gc = g[c].where(pd.notna(g[c]), None).astype(str)
+        assert (rc.values == gc.values).all(), f"column {c} diverged"
+
+
 def test_arrow_partials_kernel_parity(spark, sf_dir):
-    """The RE2 counting kernel must reproduce the pandas/re reference
-    kernel's partial counts bit-for-bit on real corpus text — per-rule
+    """The RE2 counting kernel must reproduce the full-fact pandas/re
+    kernel's per-key counts bit-for-bit on real corpus text — per-rule
     counts, role/tool scoping, date flooring and the grouping tail."""
     import pyarrow as pa
 
-    from cca_spark.operators.parse import (
-        _extract_batch_partials,
-        _extract_partials_arrow,
-        compile_bank,
-    )
+    from cca_spark.operators.parse import _extract_partials_arrow
     from cca_spark.transcripts import load_transcripts
 
     pdf = load_transcripts(spark, sf_dir).toPandas()
     batch = pa.RecordBatch.from_pandas(pdf, preserve_index=False)
-    old = _extract_batch_partials(pdf, compile_bank())
-    new = _extract_partials_arrow(batch).to_pandas()
-    keys = ["conv_id", "tool", "date_bucket", "sink"]
-    o = old.sort_values(keys).reset_index(drop=True)
-    n = new.sort_values(keys).reset_index(drop=True)[old.columns.tolist()]
-    assert len(o) == len(n)
-    for c in keys + ["n"]:
-        oc = o[c].where(pd.notna(o[c]), None).astype(str)
-        nc = n[c].where(pd.notna(n[c]), None).astype(str)
-        assert (oc.values == nc.values).all(), f"column {c} diverged"
+    _assert_same_counts(
+        _full_kernel_counts(pdf), _extract_partials_arrow(batch).to_pandas()
+    )
+
+
+def test_partials_kernel_hostile_input_parity():
+    """Both kernels count the same facts per key on hostile text: NULL and
+    empty text, a 1M-char tool turn, a multi-match turn, and non-ASCII
+    text whose Arabic-Indic digits must not match ``\\d`` in either regex
+    engine (the bank is ASCII in Python re and in RE2)."""
+    import datetime
+
+    import pyarrow as pa
+
+    from cca_spark.operators.parse import _extract_partials_arrow
+
+    day1 = datetime.datetime(2024, 1, 1, 23, 59)
+    day2 = datetime.datetime(2024, 1, 2, 0, 1)
+    huge = (
+        "exit code 3\n"
+        + "x" * 1_000_000
+        + "\nTOOL_CALL: name=bash args={\"q\": 7}\nexit code 12\nretry 1/3 scheduled"
+    )
+    rows = [
+        ("c1", 0, "user", None, None, day1),
+        ("c1", 1, "assistant", "", None, day1),
+        ("c1", 2, "tool", None, "bash", day1),
+        ("c1", 3, "tool", huge, "bash", day2),
+        ("c2", 0, "assistant", "ERROR 1: a\nERROR 2: b", None, day1),
+        ("c2", 1, "assistant", "ERROR 1: a\nERROR 2: b", None, day2),
+        ("c3", 0, "tool", "exit code \u0663\nexit code 4", "bash", day1),
+        ("c3", 1, "assistant", "ERROR \u0662: x\nERROR 7: café naïve 漢字", None, day1),
+        ("c3", 2, "assistant", "WARN 警告 déjà vu\nx = 5 ü\nrender 12ms", None, day1),
+        ("c3", 3, "user", "check item \u0665 and report 日本語", None, day1),
+        ("c3", 4, "system", "session start for user 42 locale=fr-FR ñ", None, day1),
+    ]
+    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+    pdf = pd.DataFrame(rows, columns=cols)
+    pdf["turn_idx"] = pdf["turn_idx"].astype("int32")
+    schema = pa.schema(
+        [
+            ("conv_id", pa.string()),
+            ("turn_idx", pa.int32()),
+            ("role", pa.string()),
+            ("text", pa.string()),
+            ("tool", pa.string()),
+            ("ts", pa.timestamp("us")),
+        ]
+    )
+    batch = pa.RecordBatch.from_pandas(pdf, schema=schema, preserve_index=False)
+    ref = _full_kernel_counts(pdf)
+    got = _extract_partials_arrow(batch).to_pandas()
+    _assert_same_counts(ref, got)
+    # the probes reach the paths they target: both multi-match days count
+    # 2 error facts, and the Arabic-Indic digits add nothing
+    err = ref[(ref["conv_id"] == "c2") & (ref["sink"] == "error_signature")]
+    assert err["n"].tolist() == [2, 2]
+    c3 = ref[(ref["conv_id"] == "c3") & ref["tool"].isna()].set_index("sink")["n"]
+    assert c3["error_signature"] == 2  # ERROR 7 and WARN; not ERROR \u0662
+    bash = ref[(ref["conv_id"] == "c3") & (ref["tool"] == "bash")]
+    assert bash["n"].tolist() == [2]  # two rules on exit code 4; not \u0663
 
 
 def test_sql_parse_strategy_single_generate_parity(spark, sf_dir):
@@ -265,29 +336,3 @@ def test_shingle_repartition_single_exchange_feeds_distinct_and_sigs(spark, sf_d
     plan = sigs._jdf.queryExecution().executedPlan().toString()
     n_exchanges = plan.count("Exchange hashpartitioning")
     assert n_exchanges == 1, f"expected 1 exchange, plan has {n_exchanges}:\n{plan}"
-
-
-def test_novalue_kernel_matches_full(spark, sf_dir):
-    """parse_facts(with_value=False) must emit exactly the full stream
-    minus the value column — same rows, same spans, same significance —
-    for both strategies, and the two strategies must agree with each
-    other (the range-containment consumer switches on this)."""
-    from cca_spark.transcripts import load_transcripts
-    from cca_spark.operators.parse import parse_facts
-
-    # a key predicate, not an unordered limit: every derivation below reads
-    # the same turns whatever the task layout
-    t = load_transcripts(spark, sf_dir).filter(
-        F.pmod(F.xxhash64("conv_id", "turn_idx"), 2) == 0
-    )
-    cols = [
-        "entity_id", "conv_id", "turn_idx", "role", "tool", "ts",
-        "rule_id", "sink", "significance", "span_start", "span_end",
-    ]
-    full = parse_facts(t).select(*cols)
-    nv = parse_facts(t, with_value=False)
-    assert nv.columns == cols
-    assert _multiset_equal(full, nv, cols)
-    nv_sql = parse_facts(t, strategy="sql", with_value=False)
-    assert nv_sql.columns == cols
-    assert _multiset_equal(nv, nv_sql, cols)
