@@ -54,7 +54,7 @@ def build_queries(spark, sf_dir: str, transcripts):
     from cca_spark.operators import similarity as SIM
     from cca_spark.operators import textstats as TS
     from cca_spark.operators.aggregate import agg_per_sink
-    from cca_spark.operators.route import write_sinks
+    from cca_spark.operators.route import salted_sink_repartition, write_sinks
     from cca_spark.plans.pipeline import fused_pipeline_agg, routed_facts
 
     def fanout_write(df) -> None:
@@ -79,7 +79,7 @@ def build_queries(spark, sf_dir: str, transcripts):
         # fan-out write components (replicated corpus)
         "fanout_parse_noop": (lambda: routed_facts(spark, transcripts), "noop"),
         "fanout_shuffle_noop": (
-            lambda: _fanout_shuffled(routed_facts(spark, transcripts)),
+            lambda: salted_sink_repartition(routed_facts(spark, transcripts)),
             "noop",
         ),
         "fanout_write": (lambda: routed_facts(spark, transcripts), fanout_write),
@@ -107,16 +107,6 @@ def build_queries(spark, sf_dir: str, transcripts):
         ),
     }
     return q
-
-
-def _fanout_shuffled(routed):
-    from pyspark.sql import functions as F
-
-    return (
-        routed.withColumn("_w", F.pmod(F.xxhash64("entity_id"), F.lit(8)))
-        .repartition(F.col("sink"), F.col("date_bucket"), F.col("_w"))
-        .drop("_w")
-    )
 
 
 def main() -> None:

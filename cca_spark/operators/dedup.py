@@ -128,121 +128,109 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh_verified_pairs(dedup_corpus(spark, sf_dir))
 
 
-# Above this many docs in one (band_idx, band_key) bucket, the in-bucket
-# self-join stops emitting all pairs and emits only hub-star pairs
-# (hub = bucket-min doc_id). See lsh_verified_pairs for the recall note.
+# Above this many docs in one bucket, the in-bucket self-join emits only
+# hub-star pairs (see _capped_bucket_pairs).
 LSH_BUCKET_CAP = 64
+LSH_JACCARD_THRESHOLD = 0.5
 
 
-def lsh_verified_pairs(
-    corpus: DataFrame,
-    threshold: float = 0.5,
-    bucket_cap: int = LSH_BUCKET_CAP,
-    max_shingle_df: int | None = None,
-) -> DataFrame:
-    """The LSH pipeline over an arbitrary (doc_id, text) corpus.
+def _distinct_shingles(corpus: DataFrame) -> DataFrame:
+    """The distinct ``(doc_id, shingle)`` rows of ``corpus``, hash-partitioned
+    by doc_id and cached lazily on disk: the one shingle stage of every
+    near-dup operator.
 
-    The shingle stream is materialized ONCE (localCheckpoint) and shared
-    by the minhash pass and the Jaccard verify — at 100 TB the shingle
-    explode is the dominant shuffle and round 2 ran it twice per query
-    (VERDICT r02 flagged this as the dedup_minhash_lsh 1.8x regression).
-
-    DENSE-BUCKET BOUND (VERDICT r04 #2): a high-duplicate corpus (30-60%
-    is routine for web crawls; the production-day replica corpus is ~99%)
-    packs thousands of docs into single band buckets, making the in-bucket
-    self-join — and the exact-Jaccard verify behind it — quadratic
-    (measured 1,293s for 93k docs). Buckets larger than ``bucket_cap``
-    therefore emit only HUB-STAR candidates: each member paired with the
-    bucket's min doc_id, O(n) per bucket instead of O(n^2). The hub filter
-    is a predicate on the left side only, so Catalyst pushes it below the
-    join — oversized buckets never materialize their cross product.
-    RECALL NOTE: in an oversized bucket, a non-hub pair (b, c) survives
-    only via another (smaller) shared bucket or transitively through the
-    hub (hub~b and hub~c both pass verify — always the case when the
-    bucket is one replica family, the situation that creates oversized
-    buckets in practice). The verify stage itself stays exact for every
-    emitted candidate. Downstream connected-components dedup is unaffected
-    whenever the hub verifies against bucket members (the star spans the
-    component). The DuckDB oracle mirrors the cap bit-for-bit.
-
-    ``max_shingle_df`` (optional, default off): drop shingles whose
-    document frequency exceeds the cutoff BEFORE min-hashing — the
-    complementary bound for boilerplate-heavy ORGANIC corpora (headers,
-    license blurbs, nav chrome shared by millions of unrelated pages pack
-    band buckets the way replicas do). The pruned stream feeds both the
-    signatures and the Jaccard verify, so "similarity" becomes similarity
-    over distinctive shingles — the standard stop-shingle semantics of
-    web-dedup pipelines. Off in the oracled driver queries; semantics
-    pinned by test_lsh_max_shingle_df_drops_boilerplate_candidates.
-
-    MATERIALIZATION DISCIPLINE (r6, VERDICT r05 weak #1): the corpus-sized
-    shingle stream is cached LAZILY on disk — ``persist(DISK_ONLY)`` —
-    instead of the former eager ``localCheckpoint``: no Spark job runs at
-    DataFrame-build time, lineage is preserved (a lost block recomputes
-    instead of killing the query), and the cache never competes with
-    execution memory at 100x scale — the exact treatment r5 applied to
-    tfidf's tf table (textstats.py). The stream is DISTINCT'd *before*
-    caching: min-hash is invariant under shingle multiplicity, and the
-    Jaccard verify required distinct rows anyway, so one distinct here
-    replaces the verify-side re-distinct AND shrinks the cached bytes.
-
-    ONE EXCHANGE FEEDS DISTINCT *AND* THE PER-DOC AGG (r6, guide §2.4):
-    the stream is ``repartition(doc_id)`` BEFORE the distinct.
-    hashpartitioning(doc_id) satisfies the clustering requirement of BOTH
-    the (doc_id, shingle) distinct and the groupBy(doc_id) signature
-    aggregation, so the distinct dedups in place and the K-minhash agg
-    reads the cache with NO further exchange — the former shape paid two
-    corpus-sized shuffles (distinct by (doc_id, shingle), then sigs by
-    doc_id). Position-controlled interleaved A/B at sf0.1 (new shape in
-    the penalized slot): lsh median 3.22 vs 3.86 (−17%), containment
-    4.72 vs 5.12 (−8%), identical pair sets; production-day dense-corpus
-    near-dup stage 53.7s → 25.1s. Tradeoff, stated: the single exchange carries the
-    RAW (pre-dedup) shingle stream — map-side partial dedup only ever
-    collapsed WITHIN-doc duplicate shingles, which are rare for k-token
-    shingles (and bounded upstream by the repetition filter for
-    degenerate docs), so the byte trade is ~neutral while the exchange
-    count halves. A single giant doc makes one partition hot, but the
-    per-doc aggregation downstream had that same hot key anyway.
-    The doc-sized ``sigs`` table (one row/doc: K hashes + the set size) IS
-    eagerly localCheckpoint'd: the band explode reads it twice (the
-    prefiltered lhs and the b side of the self-join) and the verify reads
-    its ``n_sh`` twice more; without materialization each consumer would
-    replay the K-minhash aggregation over the corpus shingle stream
-    (ADVICE r05 — the per-consumer replay class VERDICT r02 flagged).
-    Bounded at one row/doc, it is never corpus(token)-sized, so the
-    checkpoint hazard does not apply.
-
-    BUCKET STATS VIA WINDOW (r6): bucket_n / bucket_hub come from window
-    aggregates over the same (band_idx, band_key) partitioning the
-    self-join shuffles by anyway — the former groupBy + join-back is one
-    whole join and one aggregate exchange removed (guide §2.4). A dense
-    bucket makes one window partition large, but count/min over it is the
-    same O(n) the join build would have paid, and WindowExec spills.
-
-    SIZES FOLDED INTO THE SIGNATURE AGG (r6): the Jaccard verify's per-doc
-    set sizes ride the sigs aggregation (``with_count=True``) instead of a
-    second corpus-scan ``groupBy(doc_id).count()`` over the cached shingle
-    stream — one fewer full pass at any scale."""
+    - Distinct before caching: min-hash, bottom-k and fingerprint minima
+      are invariant under shingle multiplicity, and the exact verify needs
+      distinct rows anyway, so one distinct serves every consumer and
+      shrinks the cached bytes.
+    - ``repartition(doc_id)`` before the distinct: hashpartitioning on
+      doc_id satisfies the clustering of both the ``(doc_id, shingle)``
+      distinct and any downstream ``groupBy(doc_id)``, so the per-doc
+      aggregates read the cache with no further exchange. The tradeoff:
+      the one exchange carries the raw (pre-distinct) stream, since no
+      map-side partial distinct runs ahead of it; within-doc duplicate
+      k-token shingles are rare, so the bytes are about the same while the
+      exchange count halves. A giant doc makes one partition hot, as the
+      per-doc aggregates would anyway.
+    - ``persist(DISK_ONLY)``, not an eager checkpoint: the stream is
+      corpus(token)-sized, so it must not compete with execution memory;
+      no job runs at DataFrame-build time, and a lost block recomputes from
+      lineage instead of failing the query. The doc-sized aggregates built
+      on it (one row per doc) are the opposite case: callers checkpoint
+      those eagerly, because several consumers read them and would
+      otherwise each replay the per-doc aggregation over this stream."""
     from pyspark import StorageLevel
-    from pyspark.sql import Window
 
-    shingles = (
+    return (
         corpus_shingles(corpus)
         .repartition(F.col("doc_id"))
         .distinct()
         .persist(StorageLevel.DISK_ONLY)
     )
-    if max_shingle_df is not None:
-        dfreq = shingles.groupBy("shingle").agg(F.count("*").alias("sh_df"))
-        shingles = (
-            shingles.join(
-                dfreq.filter(F.col("sh_df") > max_shingle_df), "shingle", "left_anti"
-            )
-            # the anti join shuffles by shingle; restore the doc_id
-            # partitioning so the signature agg stays exchange-free
-            .repartition(F.col("doc_id"))
-            .persist(StorageLevel.DISK_ONLY)
+
+
+def _capped_bucket_pairs(rows: DataFrame, keys: list[str], cap: int) -> DataFrame:
+    """Distinct ``(doc_a, doc_b)`` pairs, ``doc_a < doc_b``, of docs that share
+    a bucket, where ``rows`` holds ``(doc_id, *keys)`` bucket memberships.
+
+    A bucket of at most ``cap`` docs emits all its pairs. A larger one (a
+    replica family, or a boilerplate key shared by unrelated docs) emits
+    only hub-star pairs: each member paired with the bucket's min doc_id,
+    O(n) per bucket instead of O(n^2). Bucket size and hub are window
+    aggregates over the same partitioning the self-join shuffles by, and
+    the hub filter sits on the left side only, so oversized buckets never
+    materialize their cross product. A dense bucket makes one window
+    partition large, but counting it is the same O(n) the join build pays.
+
+    Recall: in an oversized bucket a non-hub pair (b, c) survives only
+    through another, smaller shared bucket. Connected components still
+    join b and c through the hub whenever hub~b and hub~c both verify,
+    which holds when the bucket is one replica family, the case that makes
+    buckets oversized in practice. The DuckDB oracles mirror the cap."""
+    from functools import reduce
+    from operator import and_
+
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(*keys)
+    lhs = (
+        rows.select(
+            "doc_id",
+            *keys,
+            F.count("*").over(w).alias("bucket_n"),
+            F.min("doc_id").over(w).alias("bucket_hub"),
         )
+        .filter((F.col("bucket_n") <= cap) | (F.col("doc_id") == F.col("bucket_hub")))
+        .select("doc_id", *keys)
+    )
+    a, b = lhs.alias("a"), rows.alias("b")
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    on.append(F.col("a.doc_id") < F.col("b.doc_id"))
+    return (
+        a.join(b, reduce(and_, on))
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
+
+
+def lsh_verified_pairs(corpus: DataFrame, bucket_cap: int = LSH_BUCKET_CAP) -> DataFrame:
+    """MinHash+LSH near-dup pairs of a ``(doc_id, text)`` corpus:
+    ``(doc_a, doc_b, jaccard)`` with exact shingle Jaccard at least
+    ``LSH_JACCARD_THRESHOLD``.
+
+    Cheap prematch, exact verify: docs sharing any band key (``N_BANDS``
+    bands of ``N_MINHASHES // N_BANDS`` min-hashes) become candidates, and
+    only candidates pay the exact Jaccard join. Buckets above
+    ``bucket_cap`` emit hub-star candidates only (see
+    ``_capped_bucket_pairs`` for the recall tradeoff), which keeps a
+    high-duplicate corpus linear instead of quadratic in bucket size.
+
+    The shingle stream is built once (``_distinct_shingles``) and feeds
+    both the signatures and the verify. The doc-sized signature table
+    (K hashes plus the set size ``n_sh``) is checkpointed eagerly: the band
+    explode reads it on both join sides and the verify reads its set
+    sizes, so no consumer replays the K-minhash aggregation."""
+    shingles = _distinct_shingles(corpus)
     sigs = minhash_signatures(corpus, shingles=shingles, with_count=True).localCheckpoint(
         eager=True
     )
@@ -253,44 +241,12 @@ def lsh_verified_pairs(
         band_cols.append(
             F.struct(F.lit(b).alias("band_idx"), F.md5(F.concat_ws("|", *parts)).alias("band_key"))
         )
-    # cheap per-row explode over the checkpointed sigs — its two consumers
-    # (lhs, b) re-derive it from the cache, never from the shingle stream
     banded = sigs.select("doc_id", F.explode(F.array(*band_cols)).alias("band")).select(
         "doc_id", "band.band_idx", "band.band_key"
     )
-    w = Window.partitionBy("band_idx", "band_key")
-    # left side pre-filtered: full buckets keep every member (all-pairs),
-    # oversized buckets keep only the hub (star)
-    lhs = (
-        banded.select(
-            "doc_id",
-            "band_idx",
-            "band_key",
-            F.count("*").over(w).alias("bucket_n"),
-            F.min("doc_id").over(w).alias("bucket_hub"),
-        )
-        .filter(
-            (F.col("bucket_n") <= bucket_cap) | (F.col("doc_id") == F.col("bucket_hub"))
-        )
-        .select("doc_id", "band_idx", "band_key")
-    )
-    a, b = lhs.alias("a"), banded.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    # shingles is already distinct (cached above) — skip the re-distinct;
-    # per-doc set sizes come from the checkpointed sigs, not a re-scan
-    jac = _pair_shingle_jaccard(
-        shingles, cands, sizes=sigs.select("doc_id", "n_sh")
-    )
-    return jac.filter(F.col("jaccard") >= threshold)
+    cands = _capped_bucket_pairs(banded, ["band_idx", "band_key"], bucket_cap)
+    jac = _pair_shingle_jaccard(shingles, cands, sizes=sigs.select("doc_id", "n_sh"))
+    return jac.filter(F.col("jaccard") >= LSH_JACCARD_THRESHOLD)
 
 
 def _pair_shingle_intersections(
@@ -302,7 +258,7 @@ def _pair_shingle_intersections(
     join (semantics, skew handling) lands in both or neither. ``sh`` must
     already be DISTINCT (doc_id, shingle) rows. Callers that already hold
     the per-doc set size in a doc-sized table (the signature/sketch aggs
-    carry it since r6) pass it as ``sizes`` = (doc_id, n_sh), skipping the
+    carry it) pass it as ``sizes`` = (doc_id, n_sh), skipping the
     corpus-scan ``groupBy(doc_id).count()`` here."""
     if sizes is None:
         sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
@@ -333,20 +289,9 @@ def _pair_shingle_jaccard(
     )
 
 
-def ngram_jaccard(
-    corpus: DataFrame, pairs: DataFrame, shingles: DataFrame | None = None
-) -> DataFrame:
+def ngram_jaccard(corpus: DataFrame, pairs: DataFrame) -> DataFrame:
     """Exact shingle-set Jaccard for given (doc_a, doc_b) pairs."""
-    sh = (corpus_shingles(corpus) if shingles is None else shingles).distinct()
-    return _pair_shingle_intersections(sh, pairs).select(
-        "doc_a",
-        "doc_b",
-        F.round(
-            F.col("n_inter").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"),
-            6,
-        ).alias("jaccard"),
-    )
+    return _pair_shingle_jaccard(corpus_shingles(corpus).distinct(), pairs)
 
 
 def repeated_span_fraction_over(corpus: DataFrame, k: int = SHINGLE_K) -> DataFrame:
@@ -399,75 +344,33 @@ SKETCH_BUCKET_CAP = 64  # hub-star cap on a sketch-hash bucket (see LSH_BUCKET_C
 def ngram_containment_over(
     corpus: DataFrame, bucket_cap: int = SKETCH_BUCKET_CAP
 ) -> DataFrame:
-    """Asymmetric n-gram CONTAINMENT near-dup: |A∩B| / |A| (and / |B|).
+    """Asymmetric n-gram containment near-dup pairs of a ``(doc_id, text)``
+    corpus: ``(doc_a, doc_b, n_inter, containment_a_in_b,
+    containment_b_in_a)`` where ``|A∩B| / |A|`` or ``|A∩B| / |B|`` is at
+    least ``CONTAINMENT_THRESHOLD``.
 
-    Jaccard misses subset relations — a short doc quoted whole inside a
-    long one has low Jaccard but containment 1.0; training pipelines
-    dedup those separately (the "document A is a chunk of document B"
-    case). Candidate blocking is a BOTTOM-K sketch join: each doc emits
-    its k smallest shingle md5s, pairs sharing any sketch hash become
-    candidates (for A ⊆ B, B's bottom-k are minima of a superset of A's
-    shingles, so sketch overlap is near-certain at high containment —
-    the standard sketch for containment, where a single min-fingerprint
-    block would miss supersets whose extra shingles hash lower). Exact
-    set intersection verifies candidates, like the Jaccard/LSH family.
+    Jaccard misses subset relations: a short doc quoted whole inside a
+    long one has low Jaccard but containment 1.0. Candidates share a hash
+    of their bottom-k sketches (each doc's ``BOTTOM_K_SKETCH`` smallest
+    shingle md5s; for A ⊆ B, B's bottom-k are minima over a superset of
+    A's shingles, so sketches overlap at high containment where a single
+    min-fingerprint would miss). Exact set intersection verifies them. A
+    sketch bucket goes dense for a duplicate cluster or for a boilerplate
+    shingle with a globally small md5, so buckets above ``bucket_cap``
+    emit hub-star candidates only (``_capped_bucket_pairs``).
 
-    Scale shape: sketch is k rows/doc (corpus-sized stream shrinks k×
-    before the self-join); the bottom-k selection is ONE per-doc hash
-    aggregation — ``slice(sort_array(collect_list(h)), 1, k)`` — instead
-    of a row_number sort-window over the full hash stream (r6: the hash
-    agg skips the corpus-wide sort; per-doc arrays are shingle-set-sized
-    and the same agg carries ``n_sh``, the verify's set size, so no second
-    corpus scan computes sizes). Tradeoff, stated: collect_list buffers
-    ONE doc's hash set in the aggregation buffer (a 1M-shingle outlier
-    doc ≈ tens of MB, where the old window spilled rows to disk) —
-    acceptable because corpus pipelines bound doc length upstream
-    (quality gate) and typical docs are KBs; for an uncapped corpus,
-    cap doc length before this operator. A sketch-hash bucket goes dense two
-    ways — a real duplicate cluster, OR a boilerplate shingle whose md5
-    is globally small, landing in MANY unrelated docs' bottom-k — so
-    buckets beyond ``bucket_cap`` emit hub-star candidates only, the
-    same O(n)-per-bucket bound (and the same documented recall
-    tradeoff) as lsh_verified_pairs (reference analog: digest-prematch
-    before expensive verify, analyzing.ml:1292-1326). Bucket stats ride
-    window aggregates over the bucket key the self-join shuffles by
-    anyway (r6) — the former groupBy + join-back removed, as in
-    lsh_verified_pairs.
-
-    Materialization discipline mirrors lsh_verified_pairs (r6): the
-    corpus-sized distinct shingle stream is a LAZY persist(DISK_ONLY)
-    (VERDICT r05 weak #1 — no eager job, lineage preserved); the
-    doc-sized PRE-explode sketch aggregate ``bk_agg`` (1 row/doc:
-    k-array + n_sh) is localCheckpoint'd once because its consumers
-    (lhs, b, sizes) would otherwise each replay the per-doc bottom-k
-    aggregation over the full hash stream (the ADVICE r05
-    per-consumer-replay class); the explode to sketch rows is re-derived
-    per consumer from the cache — per-row work only, exactly the lsh
-    ``sigs``/``banded`` split."""
-    from pyspark import StorageLevel
-    from pyspark.sql import Window
-
-    # one shingle explode pass shared by sketch, sizes and verify;
-    # repartition(doc_id) BEFORE the distinct so the distinct and the
-    # per-doc bottom-k aggregation share ONE exchange (hashpartitioning
-    # on doc_id satisfies both clusterings — see lsh_verified_pairs)
-    shd = (
-        corpus_shingles(corpus)
-        .repartition(F.col("doc_id"))
-        .distinct()
-        .persist(StorageLevel.DISK_ONLY)
-    )
-
-    hashes = shd.select("doc_id", F.md5("shingle").alias("h"))
-    # checkpoint the PRE-explode aggregate (1 row/doc: k-array + n_sh) —
-    # the lsh `sigs` design (r6 session 3): the explode to sketch rows is
-    # re-derived per consumer from the cache (per-row work, no
-    # aggregation replay), and the verify's per-doc sizes read n_sh
-    # straight off the checkpoint instead of re-aggregating the exploded
-    # sketch once per join side (the former shape planned TWO
-    # groupBy(doc_id) exchanges over bk, one per na/nb consumer)
+    The bottom-k is one per-doc hash aggregation,
+    ``slice(sort_array(collect_list(h)), 1, k)``, which skips a
+    corpus-wide sort. Tradeoff: ``collect_list`` holds one doc's whole
+    hash set in its aggregation buffer (a 1M-shingle doc is tens of MB)
+    and does not spill, so bound doc length upstream for corpora without a
+    quality gate. The shingle stream comes from ``_distinct_shingles``;
+    the doc-sized sketch aggregate (k-array plus ``n_sh``) is checkpointed
+    eagerly, since both join sides and the verify's set sizes read it."""
+    shd = _distinct_shingles(corpus)
     bk_agg = (
-        hashes.groupBy("doc_id")
+        shd.select("doc_id", F.md5("shingle").alias("h"))
+        .groupBy("doc_id")
         .agg(
             F.slice(F.sort_array(F.collect_list("h")), 1, BOTTOM_K_SKETCH).alias("hs"),
             F.count("*").alias("n_sh"),
@@ -475,29 +378,10 @@ def ngram_containment_over(
         .localCheckpoint(eager=True)
     )
     bk = bk_agg.select("doc_id", F.explode("hs").alias("h"))
-    w_b = Window.partitionBy("h")
-    lhs = (
-        bk.select(
-            "doc_id",
-            "h",
-            F.count("*").over(w_b).alias("bucket_n"),
-            F.min("doc_id").over(w_b).alias("bucket_hub"),
-        )
-        .filter(
-            (F.col("bucket_n") <= bucket_cap) | (F.col("doc_id") == F.col("bucket_hub"))
-        )
-        .select("doc_id", "h")
-    )
-    a, b = lhs.alias("a"), bk.alias("b")
-    cands = (
-        a.join(b, (F.col("a.h") == F.col("b.h")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    # per-doc set sizes read directly off the checkpointed pre-explode
-    # aggregate — no re-aggregation per consumer
-    sizes = bk_agg.select("doc_id", "n_sh")
-    scored = _pair_shingle_intersections(shd, cands, sizes=sizes).select(
+    cands = _capped_bucket_pairs(bk, ["h"], bucket_cap)
+    scored = _pair_shingle_intersections(
+        shd, cands, sizes=bk_agg.select("doc_id", "n_sh")
+    ).select(
         "doc_a",
         "doc_b",
         "n_inter",
@@ -515,26 +399,17 @@ def ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ngram_jaccard_all_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Blocked exact n-gram Jaccard: candidate pairs share a fingerprint
-    (min shingle hash) block — the winnowing-bucket join. Output pairs with
-    jaccard >= 0.3."""
-    corpus = dedup_corpus(spark, sf_dir)
-    from pyspark import StorageLevel
+    """Blocked exact n-gram Jaccard over ``dedup_corpus``: pairs sharing a
+    fingerprint (min shingle md5) block, kept at ``jaccard >= 0.3``.
 
-    # one explode pass, lazily disk-cached (r6 — VERDICT r05 weak #1);
-    # distinct'd first: the fingerprint min is multiplicity-invariant and
-    # the Jaccard verify needs distinct rows anyway. repartition(doc_id)
-    # lets the distinct and the per-doc fingerprint agg share ONE
-    # exchange (see lsh_verified_pairs)
-    sh = (
-        corpus_shingles(corpus)
-        .repartition(F.col("doc_id"))
-        .distinct()
-        .persist(StorageLevel.DISK_ONLY)
-    )
-    # doc-sized fingerprint table, consumed by both self-join sides —
-    # materialize once instead of re-aggregating the shingle stream twice;
-    # the same agg carries the verify's per-doc set size (r6)
+    One fingerprint per doc blocks far fewer pairs than LSH bands, so
+    recall is lower, and the fingerprint self-join has no bucket cap: a
+    fingerprint shared by n docs costs n^2 candidates. The shingle stream
+    comes from ``_distinct_shingles``; the doc-sized fingerprint table
+    (with the verify's set size ``n_sh``) is checkpointed eagerly, since
+    both join sides and the verify read it."""
+    corpus = dedup_corpus(spark, sf_dir)
+    sh = _distinct_shingles(corpus)
     fp = (
         sh.groupBy("doc_id")
         .agg(F.min(F.md5("shingle")).alias("fp"), F.count("*").alias("n_sh"))
@@ -817,7 +692,7 @@ def dedup_keep_list_transitive(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def canonical_by_quality_over(corpus: DataFrame, threshold: float = 0.5) -> DataFrame:
+def canonical_by_quality_over(corpus: DataFrame) -> DataFrame:
     """Canonical-document selection within near-dup clusters: keep the
     HIGHEST-QUALITY member of each verified-LSH connected component, not
     the arbitrary min-id one. Real corpus pipelines dedupe toward the best
@@ -844,7 +719,7 @@ def canonical_by_quality_over(corpus: DataFrame, threshold: float = 0.5) -> Data
 
     from cca_spark.operators.textstats import quality_score_over
 
-    pairs = lsh_verified_pairs(corpus, threshold=threshold)
+    pairs = lsh_verified_pairs(corpus)
     labels = connected_min_labels(pairs)
     q = quality_score_over(corpus)
     ranked = q.join(labels, "doc_id", "left").select(

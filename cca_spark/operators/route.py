@@ -58,45 +58,52 @@ def salted_repartition(
     return parts.drop("_salt")
 
 
-def write_sinks(
-    routed: DataFrame,
-    out_dir: str,
-    max_records_per_file: int = 1_000_000,
-    n_write_salts: int = 2,
-    compression: str = "zstd",
-) -> None:
-    """Fan-out write: one directory tree partitioned by (sink, date_bucket).
+# Fan-out write layout. Two salts per (sink, date_bucket) leaf keep the
+# files few and large, which lets parquet's dictionary encoding amortize
+# (with 32 shuffle partitions and ~165 leaves writer parallelism is already
+# saturated); at production scale raise the salts until a salt-partition
+# reaches the table's target file size. zstd writes fewer bytes than
+# snappy at equal-or-better wall on local disk.
+FANOUT_WRITE_SALTS = 2
+FANOUT_MAX_RECORDS_PER_FILE = 1_000_000
+FANOUT_COMPRESSION = "zstd"
 
-    Reference: size-rotated per-category N-Triples shards
-    (triple.ml:839-935, fact_size_threshold fact_options.ml:37) —
-    ``maxRecordsPerFile`` is the Spark-native size bound. At cluster scale
-    this is an Iceberg ``append`` with identical partitioning.
 
-    The write repartitions on the partition columns (+ a deterministic
-    salt bounding per-partition writer parallelism) first: without it every
-    task keeps a writer open per (sink, date) it touches — measured 2.4x
-    slower and 4.4x the file count (14.5s/7682 files vs 5.9s/1742 at 1.3M
-    facts). At 100 TB, size ``n_write_salts`` so salt-partitions hit the
-    Iceberg target file size.
-
-    r6 file-layout tuning (guide §6, A/B at 16.7M facts, 2 rounds each):
-    ``n_write_salts`` 8 -> 2 cut the file count 3048 -> 830 and — because
-    parquet dictionary/encoding amortizes over bigger row groups — the
-    bytes 386 -> 306 MB, wall 38.0/24.9 -> 21.4/13.0 s; ``zstd`` instead
-    of snappy cut bytes another 29% (306 -> 217 MB) at equal-or-better
-    wall on this sandbox's noisy disk (guide §6 recommends zstd outright).
-    With 32 shuffle partitions and ~165 (sink, date) leaves the writer
-    parallelism is saturated without a wide salt; keep salts at the point
-    where salt-partitions hit the Iceberg target file size (~512 MB) at
-    production scale.
-    """
-    (
-        routed.withColumn("_w", F.pmod(F.xxhash64("entity_id"), F.lit(n_write_salts)))
+def salted_sink_repartition(routed: DataFrame) -> DataFrame:
+    """The routed fact stream clustered by ``(sink, date_bucket)`` plus a
+    deterministic ``entity_id`` salt, so each write task holds few open
+    writers and each leaf is written by at most ``FANOUT_WRITE_SALTS``
+    tasks. Without it every task keeps a writer open per leaf it touches,
+    which is slower and multiplies the file count."""
+    return (
+        routed.withColumn("_w", F.pmod(F.xxhash64("entity_id"), F.lit(FANOUT_WRITE_SALTS)))
         .repartition(F.col("sink"), F.col("date_bucket"), F.col("_w"))
         .drop("_w")
+    )
+
+
+def write_sinks(routed: DataFrame, out_dir: str) -> None:
+    """Fan-out write of a routed fact stream: one parquet tree under
+    ``out_dir`` partitioned by ``(sink, date_bucket)``.
+
+    Reference: size-rotated per-category N-Triples shards
+    (triple.ml:839-935, fact_size_threshold fact_options.ml:37);
+    ``maxRecordsPerFile`` is the Spark-native size bound. At cluster scale
+    this is an Iceberg ``append`` with the same partitioning.
+
+    Overwrite is dynamic: only the ``(sink, date_bucket)`` partitions
+    present in ``routed`` are replaced, so rewriting one day (a resumed
+    ingest) leaves the other days in place. The tradeoff is a staging
+    directory and a rename per written partition, which static overwrite
+    of a whole fresh directory would skip. Readers select partitions by
+    column name, so the directory nesting order is not part of the
+    contract."""
+    (
+        salted_sink_repartition(routed)
         .write.mode("overwrite")
-        .option("maxRecordsPerFile", str(max_records_per_file))
-        .option("compression", compression)
+        .option("partitionOverwriteMode", "dynamic")
+        .option("maxRecordsPerFile", str(FANOUT_MAX_RECORDS_PER_FILE))
+        .option("compression", FANOUT_COMPRESSION)
         .partitionBy("sink", "date_bucket")
         .parquet(out_dir)
     )

@@ -73,7 +73,6 @@ def run_with_resume(
     sf_dir: str,
     out_dir: str,
     max_partitions: int | None = None,
-    parse_strategy: str = "pandas",
     transcripts: DataFrame | None = None,
 ) -> dict:
     """Process unmanifested date-buckets; return run metrics.
@@ -84,6 +83,7 @@ def run_with_resume(
     STORED corpus (the bench-scale kill/resume evidence in BENCH.md reads
     the materialized 19.2M-turn table, as production reads Iceberg).
     """
+    from cca_spark.operators.route import write_sinks
     from cca_spark.plans.pipeline import routed_facts
     from cca_spark.transcripts import load_transcripts
 
@@ -107,22 +107,11 @@ def run_with_resume(
         return {"run_id": run_id, "processed": [], "skipped": len(done)}
 
     subset = transcripts.filter(F.col("date_bucket_in").isin(pending)).drop("date_bucket_in")
-    routed = routed_facts(spark, subset, parse_strategy=parse_strategy).withColumn(
+    routed = routed_facts(spark, subset).withColumn(
         "date_bucket", F.col("date_bucket").cast("string")
     )
-
-    # one partitioned write, dynamic overwrite => idempotent per partition;
-    # salted column-repartition bounds open writers per task (see
-    # route.write_sinks — measured 2.4x faster, 4.4x fewer files)
-    (
-        routed.withColumn("_w", F.pmod(F.xxhash64("entity_id"), F.lit(8)))
-        .repartition(F.col("date_bucket"), F.col("sink"), F.col("_w"))
-        .drop("_w")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("date_bucket", "sink")
-        .parquet(_facts_dir(out_dir))
-    )
+    # dynamic partition overwrite => a re-run replaces only its own days
+    write_sinks(routed, _facts_dir(out_dir))
 
     # lineage metrics from the committed output (read-back = what a
     # downstream consumer will see, not what we hoped we wrote)

@@ -44,7 +44,7 @@ def test_lsh_bucket_cap_linear_candidates_and_component_intact(spark):
     )
 
     corpus = spark.createDataFrame(_dense_corpus_pdf())
-    pairs = lsh_verified_pairs(corpus, threshold=0.5, bucket_cap=8).localCheckpoint()
+    pairs = lsh_verified_pairs(corpus, bucket_cap=8).localCheckpoint()
     n_pairs = pairs.count()
     # all-pairs for the 60-family alone would be 1,770; hub-star bounds
     # candidates at ~(n-1) per band plus the small families
@@ -67,24 +67,90 @@ def test_lsh_bucket_cap_linear_candidates_and_component_intact(spark):
 def test_lsh_bucket_cap_active_matches_duckdb(spark):
     """Cross-engine parity while the cap is ACTIVE: Spark and the DuckDB
     oracle (same cap) must produce identical verified pairs."""
-    import duckdb
-
-    from cca_spark.operators.dedup import lsh_verified_pairs
-    from cca_spark.oracles_training import minhash_lsh_pairs_sql
-    from tests.util import normalize
-
-    pdf = _dense_corpus_pdf()
-    got = normalize(
-        lsh_verified_pairs(spark.createDataFrame(pdf), bucket_cap=8).toPandas()
-    )
-    con = duckdb.connect()
-    con.register("dense_docs", pdf)
-    sql = minhash_lsh_pairs_sql(
-        corpus_cte="corpus AS (SELECT doc_id, text FROM dense_docs)", bucket_cap=8
-    )
-    want = normalize(con.sql(sql).df())
+    got, want = _dedup_vs_duckdb(spark, _dense_corpus_pdf(), "lsh")
     assert list(got.columns) == list(want.columns)
     assert len(got) == len(want) and len(got) > 50
+    pd.testing.assert_frame_equal(got, want)
+
+
+def _hostile_corpus_pdf() -> pd.DataFrame:
+    """The dense corpus plus docs that stress the tokenizer: NULL, empty,
+    whitespace-only, shorter than a shingle, one long token, CJK and
+    accented text. Each hostile kind comes in a duplicate pair so it
+    reaches the verify join, not only the shingle stage."""
+    cjk = "数据 去重 测试 文档 一 二 三 四 五 六 七 八"
+    accented = "café naïve résumé über straße façade jalapeño ångström piñata"
+    hostile = [
+        (300, None),
+        (301, None),
+        (302, ""),
+        (303, ""),
+        (304, "   "),
+        (305, " \t \n "),
+        (306, "\t"),
+        (307, "hi there"),
+        (308, "hi there"),
+        (309, "solo"),
+        (310, cjk),
+        (311, cjk + " 九"),
+        (312, accented),
+        (313, accented + " crème"),
+        (314, "数据去重测试文档"),
+        (315, "数据去重测试文档"),
+    ]
+    hostile_pdf = pd.DataFrame(hostile, columns=["doc_id", "text"])
+    return pd.concat([_dense_corpus_pdf(), hostile_pdf], ignore_index=True)
+
+
+def _dedup_vs_duckdb(spark, pdf: pd.DataFrame, op: str):
+    """(Spark, DuckDB) normalized outputs of one near-dup operator over
+    ``pdf`` with the bucket cap active."""
+    import duckdb
+
+    from cca_spark.operators.dedup import lsh_verified_pairs, ngram_containment_over
+    from cca_spark.oracles_training import minhash_lsh_pairs_sql, ngram_containment_sql
+    from tests.util import normalize
+
+    spark_op, oracle = {
+        "lsh": (lsh_verified_pairs, minhash_lsh_pairs_sql),
+        "containment": (ngram_containment_over, ngram_containment_sql),
+    }[op]
+    corpus = spark.createDataFrame(pdf, "doc_id long, text string")
+    got = normalize(spark_op(corpus, bucket_cap=8).toPandas())
+    con = duckdb.connect()
+    con.register("docs", pdf)
+    sql = oracle(
+        corpus_cte="corpus AS (SELECT doc_id, text FROM docs)", bucket_cap=8
+    )
+    return got, normalize(con.sql(sql).df())
+
+
+@pytest.mark.parametrize("op", ["lsh", "containment"])
+def test_dedup_hostile_text_matches_duckdb(spark, op):
+    """NULL/empty/whitespace-only/short/CJK/accented docs: Spark and the
+    DuckDB oracle agree on the verified pairs, and the duplicate pairs
+    among the hostile docs are found."""
+    got, want = _dedup_vs_duckdb(spark, _hostile_corpus_pdf(), op)
+    assert list(got.columns) == list(want.columns)
+    pd.testing.assert_frame_equal(got, want)
+    pairs = set(zip(got.doc_a.astype(int), got.doc_b.astype(int)))
+    assert {(307, 308), (310, 311), (312, 313), (314, 315)} <= pairs
+    # docs with no tokens have no shingles, so they pair with nothing
+    assert not any(d in (300, 301, 302, 303) for p in pairs for d in p)
+
+
+@pytest.mark.xfail(
+    strict=True,
+    reason="Spark's split on \\s+ (Java) treats a vertical tab as whitespace; "
+    "DuckDB's string_split_regex (RE2) does not",
+)
+@pytest.mark.parametrize("op", ["lsh", "containment"])
+def test_dedup_vertical_tab_matches_duckdb(spark, op):
+    body = " ".join(f"v{i}" for i in range(8))
+    pdf = pd.DataFrame(
+        [(400, "a\x0bb " + body), (401, "a b " + body)], columns=["doc_id", "text"]
+    )
+    got, want = _dedup_vs_duckdb(spark, pdf, op)
     pd.testing.assert_frame_equal(got, want)
 
 
@@ -278,29 +344,6 @@ def test_pack_token_budget_negative_ids_shard_nonnegative(spark):
     assert (got["shard"] < PACK_SHARDS).all()
 
 
-def test_lsh_max_shingle_df_drops_boilerplate_candidates(spark):
-    """Optional stop-shingle cutoff (VERDICT r04 #2 'and/or'): a
-    boilerplate prefix shared by EVERY doc must not make unrelated docs
-    near-dup candidates once shingles above the df cutoff are dropped,
-    while true near-dups (distinctive shared shingles) survive."""
-    import pandas as pd
-
-    from cca_spark.operators.dedup import lsh_verified_pairs
-
-    boiler = " ".join(f"header{i}" for i in range(20))
-    uniq = lambda d: " ".join(f"body{d}x{i}" for i in range(10))  # noqa: E731
-    rows = [(d, f"{boiler} {uniq(d)}") for d in range(8)]
-    # docs 100/101: true near-dups (same distinctive body, no boilerplate)
-    body = " ".join(f"shared{i}" for i in range(20))
-    rows += [(100, body + " tailA"), (101, body + " tailB")]
-    corpus = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
-
-    # without the cutoff the boilerplate dominates every signature: the 8
-    # unrelated docs all pair up (verify still rejects them on jaccard,
-    # but they all PAY the verify join)
-    with_cutoff = lsh_verified_pairs(corpus, threshold=0.5, max_shingle_df=4).toPandas()
-    assert set(map(tuple, with_cutoff[["doc_a", "doc_b"]].values)) == {(100, 101)}
-
 def test_mixture_weighted_sample_matches_oracle(spark, sf_dir):
     """Source-mixture weighted sampling (new r5): md5-prefix thresholding
     per source — the sampled row SET is bit-for-bit vs DuckDB."""
@@ -382,29 +425,15 @@ def test_containment_bucket_cap_active_matches_duckdb(spark):
     60-doc replica family every doc shares its bottom-k sketch hashes, so
     cap=8 is ACTIVE — Spark and the DuckDB oracle (same cap) must stay
     bit-for-bit, and candidates must be star-shaped, not all-pairs."""
-    import duckdb
-
-    from cca_spark.operators.dedup import ngram_containment_over
-    from cca_spark.oracles_training import ngram_containment_sql
-    from tests.util import normalize
-
-    pdf = _dense_corpus_pdf()
-    got_df = ngram_containment_over(spark.createDataFrame(pdf), bucket_cap=8)
-    got = normalize(got_df.toPandas())
-    con = duckdb.connect()
-    con.register("dense_docs", pdf)
-    sql = ngram_containment_sql(
-        corpus_cte="corpus AS (SELECT doc_id, text FROM dense_docs)", bucket_cap=8
-    )
-    want = normalize(con.sql(sql).df())
+    got, want = _dedup_vs_duckdb(spark, _dense_corpus_pdf(), "containment")
     assert list(got.columns) == list(want.columns)
     assert len(got) == len(want) and len(got) > 10
     pd.testing.assert_frame_equal(got, want)
     # hub-star bound: family pairs all involve the hub (doc 0), so the
     # surviving pair count is O(n), far below the 1,770 all-pairs
-    raw = got_df.toPandas()
-    fam = raw[raw.doc_b < 100]
-    assert (fam.doc_a == 0).all()
+    doc_a, doc_b = got.doc_a.astype(int), got.doc_b.astype(int)
+    fam = doc_a[doc_b < 100]
+    assert (fam == 0).all()
     assert len(fam) <= 59
 
 
