@@ -328,39 +328,15 @@ def _q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Insertion order is PRIORITY order — the driver's correctness battery
-    caps at ~50 entries, so the ROTATION POLICY (VERDICT r02 #1) is:
-    every query whose code or inputs changed this round, plus anything
-    without a fresh driver row, leads; only queries that are code-unchanged
-    AND driver-green in the immediately preceding round absorb the tail
-    shadow.
+    """Name -> query function ``(spark, sf_dir) -> DataFrame``; every name
+    except ``approx_stats`` and ``lcs_pair_alignment`` (rows-only by
+    design) has a DuckDB twin in ``oracle_sql()``.
 
-    Round 6 head (optimization round — no new queries; semantics of every
-    entry unchanged and re-proven vs the DuckDB oracles by a full
-    driver_sim run):
-    (1) r6-changed lineage — the transcripts derivation repartition
-        (transcripts.py) plus the parse-kernel rewrites (Arrow/RE2
-        partials, JVM entity_id, single-generate SQL strategy; parse.py)
-        sit under EVERY transcript/fact query, so the whole `_routed` /
-        transcripts family leads, together with the dedup family
-        (materialization restructure, dedup.py) and the similarity file's
-        brute-force cosine (norm hoist).
-    (2) r4-evidenced, code-unchanged queries rotate back into the head
-        per the standing policy (multimodal x3, ontology closure, cdc x2,
-        patch_hunks, tree_delta_apply, snapshot_rename_move_map).
-    Slack then re-evidences r5-green unchanged ops while the ~50-cap has
-    room (TPC-H relational + retrieval + corpus-assembly families, all
-    code-unchanged this round); the shadow is exclusively r5-green,
-    code-unchanged queries plus the two rows-only-by-design entries.
-
-    TRIMMED in r5 (VERDICT r03 #5 — genuine redundancy; each keeps a
-    pytest oracle in tests/test_round4_ops.py or test_pipeline_oracle.py):
-    ann_ivf (== ann_ivf_nprobe at nprobe=1), dedup_keep_list (subsumed by
-    the transitive variant), turn_text_identity (the north-rule invariant
-    pinned by test_per_turn_text_equality), multimodal_features (fake-codec
-    plumbing superseded by real+payload decode), lsh_bucket_histogram
-    (LSH diagnostics; the ANN itself stays), dedup_simhash_coarse (16-bit
-    histogram; the scale path dedup_simhash64_banded stays)."""
+    Insertion order is priority order. A correctness battery capped below
+    the full list checks a prefix, so the order carries the rotation
+    policy: queries whose code or inputs changed since their last green
+    oracle check lead; code-unchanged queries that were green at the last
+    check fill the tail, with the two rows-only entries last."""
     from cca_spark.operators import dedup as DD
     from cca_spark.operators import delta as DL
     from cca_spark.operators import mapping as MAP

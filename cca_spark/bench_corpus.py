@@ -16,12 +16,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cca_spark.transcripts import load_transcripts
+from cca_spark.transcripts import TRANSCRIPT_DDL, load_transcripts
 
 BENCH_CORPUS_BASE = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".bench_corpus")
-TRANSCRIPT_DDL = (
-    "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp_ntz"
-)
 
 
 def ensure_bench_corpus(

@@ -101,12 +101,3 @@ def guard_fact_lookup(
     )
 
 
-def dead_letters(enriched: DataFrame) -> DataFrame:
-    """Tool invocations whose tool is not in the ontology.
-
-    Anti-join shape (J4); here the broadcast left join already materialized
-    the miss as NULL category, so this is a cheap filter — no extra join.
-    """
-    return enriched.filter(
-        (F.col("sink") == "tool_invocation") & F.col("category").isNull()
-    )

@@ -1,22 +1,23 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
-Image/audio/video payloads are ``binary`` columns with a metadata struct;
-decode / feature-extract / resize / frame-sample run as Arrow-batched
-pandas UDFs over ``mapInPandas``.
+Image/audio payloads are ``binary`` columns; decode and feature
+extraction run as Arrow-batched pandas UDFs over ``mapInPandas``.
 
-Two decode paths:
+The synthetic media corpus encodes real PNG/WAV files whose parameters
+derive from doc_id (even doc_id -> PNG, odd -> WAV), so the DuckDB oracle
+can state the expected features with arithmetic while Spark must earn
+them by parsing bytes. Two decoders read it:
 
-- ``real_decode=False``: a deterministic fake derives features from raw
-  bytes — exercises the plumbing (binary schema, Arrow transfer, batch
-  shapes) without any codec.
-- ``real_decode=True`` (round 3): a REAL header-level decoder — it walks
-  PNG chunks (verifying each CRC32) to the IHDR and RIFF/WAVE chunks to
-  ``fmt ``, recovering width/height/bit-depth/channels/sample-rate from
-  the actual binary layouts. Full-frame pixel/audio decoding (PIL/pyav)
-  is still out of container scope, but the container parsing is genuine:
-  the synthetic corpus encodes real PNG/WAV files whose parameters derive
-  from doc_id, so the DuckDB oracle can state the EXPECTED features with
-  arithmetic while Spark must earn them by parsing bytes.
+- ``multimodal_real_decode`` parses container headers: it walks PNG
+  chunks (verifying each CRC32) to the IHDR and RIFF/WAVE chunks to
+  ``fmt ``, recovering width/height/bit-depth/channels/sample-rate.
+- ``multimodal_payload_decode`` decodes payloads: PNG IDAT is
+  zlib-inflated and unfiltered per scanline, WAV PCM frames are read as
+  little-endian int16, and per-doc sample statistics come out.
+
+Full-frame codecs (PIL/pyav) are out of scope; the container parsing is
+genuine. ``frame_sample`` is the strided-window explode a video pipeline
+uses, JVM-side.
 
 Reference analog: CCA treats source files as opaque blobs identified by
 content digest and parses them inside per-language plugins
@@ -26,129 +27,38 @@ column + pluggable decoder is the same shape.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import math
+import struct
+import zlib
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-FEATURE_SCHEMA = (
-    "doc_id long, byte_len int, header_hex string, width int, height int, n_frames int"
-)
-
-
-def binary_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents → (doc_id, content binary, meta struct): the multimodal
-    table shape. ``content`` stands in for an encoded image/audio blob."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return docs.select(
-        "doc_id",
-        F.encode(F.col("text"), "UTF-8").alias("content"),
-        F.struct(
-            F.col("lang").alias("mime_hint"),
-            F.col("n_chars").cast("int").alias("declared_size"),
-            F.col("source").alias("origin"),
-        ).alias("meta"),
-    )
-
-
-def _fake_decode_features(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Deterministic stand-in for a codec: features derived from raw bytes.
-
-    Replace the body with PIL/av decode in a real deployment; signature,
-    batching and schema stay identical.
-    """
-    blobs = pdf["content"]
-    byte_len = blobs.map(len)
-    return pd.DataFrame(
-        {
-            "doc_id": pdf["doc_id"].astype("int64"),
-            "byte_len": byte_len.astype("int32"),
-            "header_hex": blobs.map(lambda b: b[:4].hex().upper()),
-            "width": (byte_len % 640).astype("int32"),
-            "height": (byte_len * 7 % 480).astype("int32"),
-            "n_frames": (byte_len % 30 + 1).astype("int32"),
-        }
-    )
-
-
-def extract_features(binary_df: DataFrame, real_decode: bool = False) -> DataFrame:
-    """mapInPandas feature extraction over binary content (Arrow batches).
-
-    ``real_decode=True`` parses actual PNG/WAV container layouts
-    (schema ``REAL_FEATURE_SCHEMA``); False derives fake features from raw
-    bytes (schema ``FEATURE_SCHEMA``)."""
-    if real_decode:
-        def run_real(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                yield _real_decode_features(pdf)
-
-        return binary_df.mapInPandas(run_real, schema=REAL_FEATURE_SCHEMA)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _fake_decode_features(pdf)
-
-    return binary_df.mapInPandas(run, schema=FEATURE_SCHEMA)
-
-
-# ------------------------------------------------------ real codec (r3)
-
-REAL_FEATURE_SCHEMA = (
-    "doc_id long, fmt string, width int, height int, "
-    "bit_depth int, n_channels int, sample_rate int"
-)
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 # PNG color type -> sample channels (PNG spec, table 11.1)
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 
 
-def _encode_png(doc_id: int) -> bytes:
-    """A real (header-complete) PNG: signature + IHDR + IEND with correct
-    lengths and CRC32s; dimensions derived from doc_id."""
-    import struct
-    import zlib
-
-    w = doc_id % 640 + 1
-    h = (doc_id * 7) % 480 + 1
-    color_type = (0, 2, 6)[doc_id % 3]
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
-
-    def chunk(tag: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + tag
-            + data
-            + struct.pack(">I", zlib.crc32(tag + data))
-        )
-
-    return _PNG_SIG + chunk(b"IHDR", ihdr) + chunk(b"IEND", b"")
+# ------------------------------------------------------ container codec
 
 
-def _encode_wav(doc_id: int) -> bytes:
-    """A real RIFF/WAVE file with a decoy LIST chunk BEFORE ``fmt `` so
-    decoders must walk chunks rather than assume fixed offsets."""
-    import struct
+def _png_chunk(tag: bytes, data: bytes) -> bytes:
+    """One PNG chunk: length, tag, data, CRC32 over tag + data."""
+    return struct.pack(">I", len(data)) + tag + data + struct.pack(">I", zlib.crc32(tag + data))
 
-    ch = doc_id % 3 + 1
-    sr = 8000 * (doc_id % 6 + 1)
-    bits = ((doc_id // 2) % 3 + 1) * 8
-    block = ch * bits // 8
-    fmt = struct.pack("<HHIIHH", 1, ch, sr, sr * block, block, bits)
-    body = (
-        b"LIST" + struct.pack("<I", 4) + b"INFO"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", 4) + b"\x00" * 4
+
+def _png_file(w: int, h: int, color_type: int, *chunks: tuple[bytes, bytes]) -> bytes:
+    """An 8-bit PNG: signature, IHDR, ``chunks`` in order, IEND."""
+    ihdr = (b"IHDR", struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0))
+    return _PNG_SIG + b"".join(
+        _png_chunk(tag, data) for tag, data in (ihdr, *chunks, (b"IEND", b""))
     )
-    return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WAVE" + body
 
 
-def _decode_png(b: bytes) -> tuple[int, int, int, int]:
-    """Walk PNG chunks to IHDR, verifying every CRC32 on the way."""
-    import struct
-    import zlib
-
+def _png_chunks(b: bytes) -> Iterator[tuple[bytes, bytes]]:
+    """Walk PNG chunks as (tag, data), verifying every CRC32 on the way."""
     off = len(_PNG_SIG)
     while off + 12 <= len(b):
         (ln,) = struct.unpack_from(">I", b, off)
@@ -157,25 +67,99 @@ def _decode_png(b: bytes) -> tuple[int, int, int, int]:
         (crc,) = struct.unpack_from(">I", b, off + 8 + ln)
         if crc != zlib.crc32(tag + data):
             raise ValueError(f"PNG {tag!r} chunk CRC mismatch")
+        yield tag, data
+        off += 12 + ln
+
+
+def _wav_file(fmt: bytes, data: bytes) -> bytes:
+    """A RIFF/WAVE file with a decoy LIST chunk BEFORE ``fmt `` so
+    decoders must walk chunks rather than assume fixed offsets."""
+    body = (
+        b"LIST" + struct.pack("<I", 4) + b"INFO"
+        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+        + b"data" + struct.pack("<I", len(data)) + data
+    )
+    return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WAVE" + body
+
+
+def _riff_chunks(b: bytes) -> Iterator[tuple[bytes, int, int]]:
+    """Walk RIFF chunks (word-aligned) as (tag, data offset, data length)."""
+    off = 12  # past RIFF<size>WAVE
+    while off + 8 <= len(b):
+        (ln,) = struct.unpack_from("<I", b, off + 4)
+        yield b[off : off + 4], off + 8, ln
+        off += 8 + ln + (ln & 1)
+
+
+def _container(b: bytes) -> str:
+    if b[: len(_PNG_SIG)] == _PNG_SIG:
+        return "png"
+    if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
+        return "wav"
+    return "unknown"
+
+
+def _media_corpus(
+    spark: SparkSession,
+    sf_dir: str,
+    encode_png: Callable[[int], bytes],
+    encode_wav: Callable[[int], bytes],
+) -> DataFrame:
+    """(doc_id, content binary): even doc_id -> ``encode_png(doc_id)``,
+    odd -> ``encode_wav(doc_id)``. A separate Arrow pass from the decoder,
+    so real binary bytes cross an executor boundary."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+
+    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids = pdf["doc_id"].astype("int64")
+            yield pd.DataFrame(
+                {
+                    "doc_id": ids,
+                    "content": [encode_png(i) if i % 2 == 0 else encode_wav(i) for i in ids],
+                }
+            )
+
+    return docs.mapInPandas(enc, schema="doc_id long, content binary")
+
+
+# ------------------------------------------------------- header decode
+
+REAL_FEATURE_SCHEMA = (
+    "doc_id long, fmt string, width int, height int, "
+    "bit_depth int, n_channels int, sample_rate int"
+)
+
+
+def _encode_png(doc_id: int) -> bytes:
+    """A header-complete PNG (IHDR + IEND); dimensions derived from doc_id."""
+    return _png_file(doc_id % 640 + 1, (doc_id * 7) % 480 + 1, (0, 2, 6)[doc_id % 3])
+
+
+def _encode_wav(doc_id: int) -> bytes:
+    """A WAV header with a 4-byte silent data chunk."""
+    ch = doc_id % 3 + 1
+    sr = 8000 * (doc_id % 6 + 1)
+    bits = ((doc_id // 2) % 3 + 1) * 8
+    block = ch * bits // 8
+    return _wav_file(struct.pack("<HHIIHH", 1, ch, sr, sr * block, block, bits), b"\x00" * 4)
+
+
+def _decode_png(b: bytes) -> tuple[int, int, int, int]:
+    """(width, height, bit depth, channels) from the IHDR chunk."""
+    for tag, data in _png_chunks(b):
         if tag == b"IHDR":
             w, h, depth, color = struct.unpack_from(">IIBB", data, 0)
             return w, h, depth, _PNG_CHANNELS[color]
-        off += 12 + ln
     raise ValueError("PNG: no IHDR chunk")
 
 
 def _decode_wav(b: bytes) -> tuple[int, int, int]:
-    """Walk RIFF chunks (word-aligned) to ``fmt ``."""
-    import struct
-
-    off = 12  # past RIFF<size>WAVE
-    while off + 8 <= len(b):
-        tag = b[off : off + 4]
-        (ln,) = struct.unpack_from("<I", b, off + 4)
+    """(bits per sample, channels, sample rate) from the ``fmt `` chunk."""
+    for tag, off, _ln in _riff_chunks(b):
         if tag == b"fmt ":
-            _codec, ch, sr, _br, _ba, bits = struct.unpack_from("<HHIIHH", b, off + 8)
+            _codec, ch, sr, _br, _ba, bits = struct.unpack_from("<HHIIHH", b, off)
             return bits, ch, sr
-        off += 8 + ln + (ln & 1)
     raise ValueError("WAV: no fmt chunk")
 
 
@@ -183,14 +167,15 @@ def _real_decode_features(pdf: pd.DataFrame) -> pd.DataFrame:
     rows = []
     for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
         b = bytes(blob)
-        if b[: len(_PNG_SIG)] == _PNG_SIG:
+        fmt = _container(b)
+        if fmt == "png":
             w, h, depth, ch = _decode_png(b)
-            rows.append((int(doc_id), "png", w, h, depth, ch, None))
-        elif b[:4] == b"RIFF" and b[8:12] == b"WAVE":
+            rows.append((int(doc_id), fmt, w, h, depth, ch, None))
+        elif fmt == "wav":
             bits, ch, sr = _decode_wav(b)
-            rows.append((int(doc_id), "wav", None, None, bits, ch, sr))
+            rows.append((int(doc_id), fmt, None, None, bits, ch, sr))
         else:
-            rows.append((int(doc_id), "unknown", None, None, None, None, None))
+            rows.append((int(doc_id), fmt, None, None, None, None, None))
     out = pd.DataFrame(
         rows,
         columns=[
@@ -203,16 +188,22 @@ def _real_decode_features(pdf: pd.DataFrame) -> pd.DataFrame:
     return out
 
 
-# ------------------------------------------------ payload decode (r4)
+def multimodal_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The header-codec query: encode -> shuffle-free Arrow decode -> typed
+    features; the oracle recomputes the expected features arithmetically."""
+    return _media_corpus(spark, sf_dir, _encode_png, _encode_wav).mapInPandas(
+        lambda batches: map(_real_decode_features, batches), schema=REAL_FEATURE_SCHEMA
+    )
+
+
+# ------------------------------------------------------ payload decode
 #
-# Round 3 parsed container HEADERS (CRC-verified chunk walks); round 4
-# decodes PAYLOADS: PNG IDAT is genuinely zlib-inflated and per-scanline
-# unfiltered (filters 0=None, 1=Sub, 2=Up per the PNG spec §9), WAV PCM
-# frames are genuinely read as little-endian int16. The synthetic corpus
-# derives every sample value from doc_id with closed-form arithmetic, so
-# the DuckDB oracle can STATE the expected sums while Spark must EARN
-# them by inflating/unfiltering real bytes. Payload dims are kept small
-# (≤24×16 px) so the oracle's generate_series stays ~100k rows at sf0.01.
+# The payload codec derives every sample value from doc_id with
+# closed-form arithmetic, so the DuckDB oracle can STATE the expected sums
+# while Spark must EARN them by inflating/unfiltering real bytes (PNG
+# filters 0=None, 1=Sub, 2=Up per the PNG spec §9). Payload dims are kept
+# small (≤24×16 px) so the oracle's generate_series stays ~100k rows at
+# sf0.01.
 
 PAYLOAD_SCHEMA = (
     "doc_id long, fmt string, n_samples long, sample_sum long, "
@@ -238,20 +229,7 @@ def _encode_png_payload(doc_id: int) -> bytes:
     sample bytes follow raw[y][i] = (doc_id + y + i) % 256 (i indexes the
     w*channels bytes of scanline y), filtered per-row with filter
     y % 3 ∈ {None, Sub, Up} so decoders must implement real unfiltering."""
-    import struct
-    import zlib
-
     w, h, color_type, ch = _png_payload_params(doc_id)
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
-
-    def chunk(tag: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + tag
-            + data
-            + struct.pack(">I", zlib.crc32(tag + data))
-        )
-
     stride = w * ch
     raw_prev = [0] * stride
     out = bytearray()
@@ -269,52 +247,32 @@ def _encode_png_payload(doc_id: int) -> bytes:
         else:  # Up: filt[i] = raw[i] - prior[i]
             out.extend((raw[i] - raw_prev[i]) % 256 for i in range(stride))
         raw_prev = raw
-    idat = zlib.compress(bytes(out))
-    return _PNG_SIG + chunk(b"IHDR", ihdr) + chunk(b"IDAT", idat) + chunk(b"IEND", b"")
+    return _png_file(w, h, color_type, (b"IDAT", zlib.compress(bytes(out))))
 
 
 def _encode_wav_payload(doc_id: int) -> bytes:
-    """A complete real mono 16-bit PCM WAV (decoy LIST chunk retained)
-    whose samples follow v(i) = ((doc_id*131 + i*17) % 4096) - 2048."""
-    import struct
-
+    """A complete real mono 16-bit PCM WAV whose samples follow
+    v(i) = ((doc_id*131 + i*17) % 4096) - 2048."""
     n = doc_id % _WAV_N_MOD + _WAV_N_BASE
     sr = 8000
-    fmt = struct.pack("<HHIIHH", 1, 1, sr, sr * 2, 2, 16)
     pcm = b"".join(
         struct.pack("<h", ((doc_id * 131 + i * 17) % 4096) - 2048) for i in range(n)
     )
-    body = (
-        b"LIST" + struct.pack("<I", 4) + b"INFO"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(pcm)) + pcm
-    )
-    return b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WAVE" + body
+    return _wav_file(struct.pack("<HHIIHH", 1, 1, sr, sr * 2, 2, 16), pcm)
 
 
 def _decode_png_payload(b: bytes) -> tuple[int, int, int]:
     """(n_samples, sum, sumsq) of the raw image samples: CRC-verified
     chunk walk -> concatenated IDAT -> zlib inflate -> per-scanline
     unfilter (None/Sub/Up)."""
-    import struct
-    import zlib
-
-    off = len(_PNG_SIG)
     w = h = ch = None
     idat = bytearray()
-    while off + 12 <= len(b):
-        (ln,) = struct.unpack_from(">I", b, off)
-        tag = b[off + 4 : off + 8]
-        data = b[off + 8 : off + 8 + ln]
-        (crc,) = struct.unpack_from(">I", b, off + 8 + ln)
-        if crc != zlib.crc32(tag + data):
-            raise ValueError(f"PNG {tag!r} chunk CRC mismatch")
+    for tag, data in _png_chunks(b):
         if tag == b"IHDR":
             w, h, _depth, color = struct.unpack_from(">IIBB", data, 0)
             ch = _PNG_CHANNELS[color]
         elif tag == b"IDAT":
             idat.extend(data)
-        off += 12 + ln
     if w is None or not idat:
         raise ValueError("PNG: missing IHDR or IDAT")
     flat = zlib.decompress(bytes(idat))
@@ -347,52 +305,23 @@ def _decode_png_payload(b: bytes) -> tuple[int, int, int]:
 
 def _decode_wav_payload(b: bytes) -> tuple[int, int, int]:
     """(n_samples, sum, sumsq) of int16 PCM frames from the data chunk."""
-    import struct
-
-    off = 12
-    while off + 8 <= len(b):
-        tag = b[off : off + 4]
-        (ln,) = struct.unpack_from("<I", b, off + 4)
+    for tag, off, ln in _riff_chunks(b):
         if tag == b"data":
             n = ln // 2
-            samples = struct.unpack_from(f"<{n}h", b, off + 8)
+            samples = struct.unpack_from(f"<{n}h", b, off)
             return n, sum(samples), sum(v * v for v in samples)
-        off += 8 + ln + (ln & 1)
     raise ValueError("WAV: no data chunk")
 
 
-def payload_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, content binary): even doc_id -> full-payload PNG, odd ->
-    full-payload WAV; separate Arrow pass from the decoder so real bytes
-    cross an executor boundary (same shape as ``media_corpus``)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "content": [
-                        _encode_png_payload(i) if i % 2 == 0 else _encode_wav_payload(i)
-                        for i in ids
-                    ],
-                }
-            )
-
-    return docs.mapInPandas(enc, schema="doc_id long, content binary")
-
-
 def _payload_decode_features(pdf: pd.DataFrame) -> pd.DataFrame:
-    import math
-
     rows = []
     for doc_id, blob in zip(pdf["doc_id"], pdf["content"]):
         b = bytes(blob)
-        if b[: len(_PNG_SIG)] == _PNG_SIG:
-            fmt, (n, s, sq) = "png", _decode_png_payload(b)
-        elif b[:4] == b"RIFF" and b[8:12] == b"WAVE":
-            fmt, (n, s, sq) = "wav", _decode_wav_payload(b)
+        fmt = _container(b)
+        if fmt == "png":
+            n, s, sq = _decode_png_payload(b)
+        elif fmt == "wav":
+            n, s, sq = _decode_wav_payload(b)
         else:
             raise ValueError("unknown container")
         rows.append(
@@ -424,43 +353,9 @@ def multimodal_payload_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The payload-level query: encode real containers -> Arrow decode
     (zlib inflate + unfilter / PCM read) -> per-doc sample statistics the
     oracle states arithmetically from the sample formulas."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _payload_decode_features(pdf)
-
-    return payload_corpus(spark, sf_dir).mapInPandas(run, schema=PAYLOAD_SCHEMA)
-
-
-def media_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, content binary): even doc_id -> PNG, odd -> WAV, parameters
-    derived from doc_id (see the encoders). A separate Arrow pass from the
-    decoder, so real binary bytes cross an executor boundary."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "content": [
-                        _encode_png(i) if i % 2 == 0 else _encode_wav(i) for i in ids
-                    ],
-                }
-            )
-
-    return docs.mapInPandas(enc, schema="doc_id long, content binary")
-
-
-def multimodal_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The real-codec query: encode -> shuffle-free Arrow decode -> typed
-    features; the oracle recomputes the expected features arithmetically."""
-    return extract_features(media_corpus(spark, sf_dir), real_decode=True)
-
-
-def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return extract_features(binary_corpus(spark, sf_dir))
+    return _media_corpus(spark, sf_dir, _encode_png_payload, _encode_wav_payload).mapInPandas(
+        lambda batches: map(_payload_decode_features, batches), schema=PAYLOAD_SCHEMA
+    )
 
 
 def frame_sample(spark: SparkSession, sf_dir: str, stride: int = 64) -> DataFrame:

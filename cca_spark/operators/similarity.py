@@ -214,22 +214,6 @@ def embedding_cosine_near_dup(
     )
 
 
-def lsh_bucket_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scale evidence for the LSH design: per-table bucket-size histogram
-    (bucket_size -> n_buckets). The max bucket / corpus ratio is the
-    quantity that must stay bounded for the in-bucket join to survive
-    100x (VERDICT r01 flagged the old 4-bit table: every bucket ~n/16)."""
-    emb = _emb(spark, sf_dir)
-    sizes = _banded(emb, "vec_id").groupBy("t", "bucket").agg(
-        F.count("*").alias("bucket_size")
-    )
-    return (
-        sizes.groupBy("t", "bucket_size")
-        .agg(F.count("*").alias("n_buckets"))
-        .select(F.col("t").alias("table_idx"), "bucket_size", "n_buckets")
-    )
-
-
 def clustered_embeddings(spark: SparkSession, sf_dir: str, noise: float = 0.4) -> DataFrame:
     """Deterministic CLUSTERED corpus derived from the embeddings table:
     ``v' = mu(label) + noise * v`` with ``mu(label)`` a fixed indicator
@@ -285,26 +269,6 @@ def _centroid_ranks(emb: DataFrame, cents: DataFrame | None = None) -> DataFrame
     )
     w = Window.partitionBy("vec_id").orderBy(F.desc("cent_cos"), F.asc("centroid_id"))
     return scored.withColumn("r", F.row_number().over(w))
-
-
-def ivf_assign(emb: DataFrame) -> DataFrame:
-    """Assign every vector to its nearest centroid — the classic IVF build
-    pass. At 10^12 scale: one broadcast join, no shuffle until the
-    per-vector argmin window (partitioned by vec_id, so state is K rows)."""
-    return (
-        _centroid_ranks(emb)
-        .filter(F.col("r") == 1)
-        .select("vec_id", "embedding", F.col("centroid_id").alias("cell"))
-    )
-
-
-def ivf_ann(spark: SparkSession, sf_dir: str, k: int = 3, n_queries: int = 20) -> DataFrame:
-    """IVF ANN (nprobe=1): queries search only their own centroid cell;
-    exact cosine rerank within the cell. The scale path: a 10^12-vector
-    corpus is bucketed by cell (Iceberg partition / bucket column), so a
-    query touches 1/K of the data. Recall < 1 by design; determinism
-    exact (6dp rounding + vec_id tie-breaks)."""
-    return ivf_ann_nprobe(spark, sf_dir, k=k, n_queries=n_queries, nprobe=1)
 
 
 def ivf_train_centroids(

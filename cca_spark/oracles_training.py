@@ -24,7 +24,7 @@ PASSES_QUALITY_SQL = (
     "(length(text) >= 100"
     "\n   AND len(regexp_extract_all(text, '[^\\w\\s]')) / cast(length(text) AS double) < 0.1"
     f"\n   AND len(regexp_extract_all(text, '{STOPWORD_RE}'))"
-    "\n       / cast(len(string_split_regex(trim(text), '\\s+')) AS double) > 0.05)"
+    "\n       / cast(len(string_split_regex(trim(text), '[ \\t\\n\\x0b\\f\\r]+')) AS double) > 0.05)"
 )
 
 CORPUS_CTE = f"""corpus AS (
@@ -50,7 +50,7 @@ SHINGLES_CTE = f"""shingles AS (
   SELECT doc_id, unnest(list_transform(
     generate_series(1, greatest(len(toks) - {SHINGLE_K - 1}, 1)),
     i -> array_to_string(toks[i : i + {SHINGLE_K - 1}], ' '))) AS shingle
-  FROM (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks FROM corpus)
+  FROM (SELECT doc_id, string_split_regex(trim(text), '[ \\t\\n\\x0b\\f\\r]+') AS toks FROM corpus)
 )"""
 
 SHINGLES_NONEMPTY = "shn AS (SELECT doc_id, shingle FROM shingles WHERE shingle <> '')"
@@ -60,11 +60,11 @@ def lang_id_sql() -> str:
     return f"""
 SELECT doc_id, lang,
   cast(len(regexp_extract_all(text, '{STOPWORD_RE}')) AS int) AS n_stopwords,
-  cast(len(string_split_regex(trim(text), '\\s+')) AS int) AS n_tokens,
+  cast(len(string_split_regex(trim(text), '[ \\t\\n\\x0b\\f\\r]+')) AS int) AS n_tokens,
   round(len(regexp_extract_all(text, '{STOPWORD_RE}'))
-        / cast(len(string_split_regex(trim(text), '\\s+')) AS double), 6) AS stopword_density,
+        / cast(len(string_split_regex(trim(text), '[ \\t\\n\\x0b\\f\\r]+')) AS double), 6) AS stopword_density,
   CASE WHEN len(regexp_extract_all(text, '{STOPWORD_RE}'))
-            / cast(len(string_split_regex(trim(text), '\\s+')) AS double) >= 0.08
+            / cast(len(string_split_regex(trim(text), '[ \\t\\n\\x0b\\f\\r]+')) AS double) >= 0.08
        THEN 'en' ELSE 'other' END AS lang_guess
 FROM documents
 """
@@ -74,11 +74,11 @@ def quality_score_sql() -> str:
     return f"""
 SELECT doc_id,
   cast(length(text) AS int) AS n_chars,
-  cast(len(string_split_regex(trim(text), '\\s+')) AS int) AS n_words,
+  cast(len(string_split_regex(trim(text), '[ \\t\\n\\x0b\\f\\r]+')) AS int) AS n_words,
   round(len(regexp_extract_all(text, '[^\\w\\s]')) / cast(length(text) AS double), 6) AS punct_ratio,
   round(len(regexp_extract_all(text, '{STOPWORD_RE}'))
-        / cast(len(string_split_regex(trim(text), '\\s+')) AS double), 6) AS stopword_ratio,
-  round(length(text) / cast(len(string_split_regex(trim(text), '\\s+')) AS double), 6) AS mean_word_len,
+        / cast(len(string_split_regex(trim(text), '[ \\t\\n\\x0b\\f\\r]+')) AS double), 6) AS stopword_ratio,
+  round(length(text) / cast(len(string_split_regex(trim(text), '[ \\t\\n\\x0b\\f\\r]+')) AS double), 6) AS mean_word_len,
   {PASSES_QUALITY_SQL} AS passes_quality
 FROM documents
 """
@@ -87,7 +87,7 @@ FROM documents
 def token_count_sql() -> str:
     return f"""
 SELECT doc_id,
-  cast(len(string_split_regex(trim(text), '\\s+')) AS int) AS ws_tokens,
+  cast(len(string_split_regex(trim(text), '[ \\t\\n\\x0b\\f\\r]+')) AS int) AS ws_tokens,
   cast(len(regexp_extract_all(text, '{TOKEN_RE}')) AS int) AS bpe_ish_tokens
 FROM documents
 """
@@ -199,31 +199,6 @@ WHERE round(i.n_inter / cast(na.n_sh + nb.n_sh - i.n_inter AS double), 6) >= 0.3
 """
 
 
-def simhash_dup_groups_sql(n_bits: int = 16) -> str:
-    votes = ",\n    ".join(
-        (
-            f"sum(CASE WHEN substr(h, {j + 1}, 1) IN "
-            f"('8','9','a','b','c','d','e','f') THEN 1 ELSE -1 END) AS v{j}"
-        )
-        for j in range(n_bits)
-    )
-    bits = " || ".join(f"(CASE WHEN v{j} > 0 THEN '1' ELSE '0' END)" for j in range(n_bits))
-    return f"""
-WITH {CORPUS_CTE},
-toks AS (
-  SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS tok FROM corpus
-),
-hashed AS (SELECT doc_id, md5(tok) AS h FROM toks WHERE tok <> ''),
-votes AS (
-  SELECT doc_id, {votes}
-  FROM hashed GROUP BY doc_id
-),
-sigs AS (SELECT doc_id, {bits} AS simhash FROM votes)
-SELECT simhash, count(*) AS n_docs, min(doc_id) AS keeper_doc_id
-FROM sigs GROUP BY simhash HAVING count(*) >= 2
-"""
-
-
 _DOT = (
     "list_sum(list_transform(generate_series(1, len({a})), "
     "i -> cast({a}[i] AS double) * cast({b}[i] AS double)))"
@@ -306,29 +281,6 @@ FROM cands cd
 JOIN embeddings ea ON ea.vec_id = cd.doc_a
 JOIN embeddings eb ON eb.vec_id = cd.doc_b
 WHERE {_cosine('ea.embedding', 'eb.embedding')} >= {threshold}
-"""
-
-
-def lsh_bucket_histogram_sql() -> str:
-    return f"""
-WITH {_banded_cte('banded')},
-sizes AS (
-  SELECT t, bucket, count(*) AS bucket_size FROM banded GROUP BY t, bucket
-)
-SELECT t AS table_idx, bucket_size, count(*) AS n_buckets
-FROM sizes GROUP BY t, bucket_size
-"""
-
-
-def multimodal_features_sql() -> str:
-    return """
-SELECT doc_id,
-  cast(octet_length(encode(text)) AS int) AS byte_len,
-  upper(substr(hex(encode(text)), 1, 8)) AS header_hex,
-  cast(octet_length(encode(text)) % 640 AS int) AS width,
-  cast(octet_length(encode(text)) * 7 % 480 AS int) AS height,
-  cast(octet_length(encode(text)) % 30 + 1 AS int) AS n_frames
-FROM documents
 """
 
 
@@ -576,19 +528,6 @@ SELECT q_id, c_id, cosine, cast(rank AS int) AS rank FROM (
 """
 
 
-def dedup_keep_list_sql() -> str:
-    pairs = minhash_lsh_pairs_sql().strip()
-    return f"""
-WITH pairs AS ({pairs}),
-keep AS (SELECT doc_b AS doc_id, min(doc_a) AS keeper FROM pairs GROUP BY doc_b),
-{CORPUS_CTE}
-SELECT c.doc_id,
-  coalesce(k.keeper, c.doc_id) AS keeper_doc_id,
-  (k.keeper IS NOT NULL) AS is_duplicate
-FROM corpus c LEFT JOIN keep k ON c.doc_id = k.doc_id
-"""
-
-
 def simhash64_near_dup_pairs_sql() -> str:
     from cca_spark.operators.dedup import (
         _HEX_BIT_DIGITS,
@@ -619,7 +558,7 @@ def simhash64_near_dup_pairs_sql() -> str:
     return f"""
 WITH {CORPUS_CTE},
 toks AS (
-  SELECT doc_id, unnest(string_split_regex(trim(text), '\\s+')) AS tok FROM corpus
+  SELECT doc_id, unnest(string_split_regex(trim(text), '[ \\t\\n\\x0b\\f\\r]+')) AS tok FROM corpus
 ),
 hashed AS (SELECT doc_id, md5(tok) AS h FROM toks WHERE tok <> ''),
 votes AS (
@@ -842,7 +781,7 @@ FROM cum
 def length_histogram_sql(bucket_width: int = 20) -> str:
     return f"""
 WITH toks AS (
-  SELECT len(string_split_regex(trim(text), '\\s+')) AS n_tokens FROM documents),
+  SELECT len(string_split_regex(trim(text), '[ \\t\\n\\x0b\\f\\r]+')) AS n_tokens FROM documents),
 b AS (SELECT cast(floor(n_tokens / {bucket_width}.0) AS int) AS bucket FROM toks)
 SELECT bucket,
   cast(bucket * {bucket_width} AS bigint) AS bucket_lo,
@@ -969,13 +908,13 @@ q AS (
     round(len(regexp_extract_all(c.text, '[^\\w\\s]'))
           / cast(length(c.text) AS double), 6) AS punct_ratio,
     round(len(regexp_extract_all(c.text, '{STOPWORD_RE}'))
-          / cast(len(string_split_regex(trim(c.text), '\\s+')) AS double), 6)
+          / cast(len(string_split_regex(trim(c.text), '[ \\t\\n\\x0b\\f\\r]+')) AS double), 6)
       AS stopword_ratio,
     (length(c.text) >= 100
      AND len(regexp_extract_all(c.text, '[^\\w\\s]'))
          / cast(length(c.text) AS double) < 0.1
      AND len(regexp_extract_all(c.text, '{STOPWORD_RE}'))
-         / cast(len(string_split_regex(trim(c.text), '\\s+')) AS double) > 0.05)
+         / cast(len(string_split_regex(trim(c.text), '[ \\t\\n\\x0b\\f\\r]+')) AS double) > 0.05)
       AS passes_quality
   FROM corpus c LEFT JOIN labels l ON c.doc_id = l.doc_id
 ),

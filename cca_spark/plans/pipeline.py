@@ -14,16 +14,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from cca_spark.operators.enrich import enrich_facts
 from cca_spark.operators.parse import parse_facts
-from cca_spark.operators.route import route_facts, salted_repartition
+from cca_spark.operators.route import route_facts
 from cca_spark.transcripts import load_transcripts
 
 
 def routed_facts(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    parse_strategy: str = "pandas",
-    salt: bool = False,
-    n_salts: int = 16,
+    spark: SparkSession, transcripts: DataFrame, parse_strategy: str = "pandas"
 ) -> DataFrame:
     """parse → enrich → route: one row per fact with all of
     parse.FACT_COLUMNS plus the ontology and routing columns.
@@ -31,15 +27,10 @@ def routed_facts(
     This is the stream for consumers of individual facts (sink writes,
     span joins, deltas); it pays for every fact column at the kernel's
     Arrow boundary. Aggregate-only consumers use ``fused_pipeline_agg``,
-    which counts inside the kernel. ``salt=True`` repartitions on
-    (conv_id, hash(entity_id) mod n_salts) so a hot conversation spreads
-    over up to ``n_salts`` partitions."""
+    which counts inside the kernel. To spread a hot conversation over
+    several partitions, pass the result to ``route.salted_repartition``."""
     facts = parse_facts(transcripts, strategy=parse_strategy)
-    enriched = enrich_facts(spark, facts)
-    routed = route_facts(enriched)
-    if salt:
-        routed = salted_repartition(routed, n_salts=n_salts)
-    return routed
+    return route_facts(enrich_facts(spark, facts))
 
 
 def pipeline_agg(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -692,20 +692,3 @@ SINKS = [
 DEAD_LETTER_SINK = "dead_letter"
 
 
-def rules_df(spark):
-    return spark.createDataFrame(
-        [
-            (r.rule_id, r.sink, r.pattern, r.significance, r.tool_scope)
-            for r in RULES
-        ],
-        "rule_id string, sink string, pattern string, significance int, tool_scope string",
-    )
-
-
-def rules_values_sql() -> str:
-    """Inline VALUES relation (rule metadata only; patterns are applied
-    engine-side, not stored as SQL strings, to avoid double-escaping)."""
-    rows = ", ".join(
-        f"('{r.rule_id}', '{r.sink}', {r.significance})" for r in RULES
-    )
-    return f"(VALUES {rows}) AS rules(rule_id, sink, significance)"

@@ -7,11 +7,11 @@ the same parse/enrich/route operators applied to a ``readStream`` source —
 the operator code is shared verbatim because they are all
 stream-compatible (mapInPandas, broadcast joins, column expressions).
 
-Aggregation differs: streaming group-bys need watermarks and can't use
-exact countDistinct — ``stream_agg_per_sink`` uses approx_count_distinct
-under a watermark, and ``running_conv_state`` shows
-``applyInPandasWithState`` (custom stateful operator: per-conversation
-running fact counter emitting one update per batch).
+Aggregation differs: streaming group-bys need watermarks —
+``stream_windowed_agg_exact`` counts per (day window, sink, tool) under a
+watermark, and ``running_conv_state`` shows ``applyInPandasWithState``
+(custom stateful operator: per-conversation running fact counter emitting
+one update per batch).
 """
 
 from __future__ import annotations
@@ -21,9 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-TRANSCRIPT_DDL = (
-    "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp_ntz"
-)
+from cca_spark.transcripts import TRANSCRIPT_DDL
 
 
 def stream_transcripts(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -42,23 +40,6 @@ def stream_routed_facts(spark: SparkSession, stream: DataFrame) -> DataFrame:
     from cca_spark.operators.route import route_facts
 
     return route_facts(enrich_facts(spark, parse_facts(stream)))
-
-
-def stream_agg_per_sink(routed: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Watermarked per-(sink, tool, day) streaming aggregate."""
-    return (
-        routed.withColumn("ts_tz", F.col("ts").cast("timestamp"))
-        .withWatermark("ts_tz", watermark)
-        .groupBy(
-            F.window("ts_tz", "1 day").alias("day_window"),
-            F.col("sink"),
-            F.col("tool"),
-        )
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.approx_count_distinct("conv_id").alias("approx_convs"),
-        )
-    )
 
 
 _STATE_SCHEMA = "n_facts long"
@@ -300,9 +281,8 @@ def run_stream_to_memory(
 
 
 def stream_windowed_agg_exact(routed: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Watermarked tumbling-window aggregate with EXACT counts (the
-    oracle-checkable sibling of ``stream_agg_per_sink``, which uses
-    approx_count_distinct)."""
+    """Watermarked tumbling-window aggregate with exact counts, so the
+    result is oracle-checkable against the batch aggregate."""
     return (
         routed.withColumn("ts_tz", F.col("ts").cast("timestamp"))
         .withWatermark("ts_tz", watermark)

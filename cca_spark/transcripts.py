@@ -30,6 +30,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+# Schema of stored transcripts: batch and streaming readers declare it
+# instead of inferring it from file footers.
+TRANSCRIPT_DDL = (
+    "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp_ntz"
+)
+
 # Dialect-shared subset: || concat, CASE, cast(.. as string), lpad, %,
 # chr(10) newlines (DuckDB treats '\n' literally, Spark escapes it — chr()
 # behaves identically in both), row_number() OVER.

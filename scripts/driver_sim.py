@@ -1,12 +1,15 @@
 """Simulates the grading driver: imports __spark_entry__, smoke-runs entry(),
 then runs each queries() entry vs its oracle_sql() via DuckDB, like
 CORRECTNESS_r{N}.json generation."""
-import sys, json
-sys.path.insert(0, "/root/repo")
+import os, sys, json
+# the checkout this script lives in, whatever the cwd
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 from pyspark.sql import SparkSession
 
 import __spark_entry__ as E
+
+print("ENTRY:", E.__file__)
 
 spark = (SparkSession.builder.master("local[8]").appName("driver_sim")
          .config("spark.sql.shuffle.partitions","8")

@@ -41,6 +41,7 @@ def test_routed_row_set_equality(spark, sf_dir):
     """North rule: the per-sink *set* of entity_ids is independent of
     parallelism/salting — run the pipeline salted and unsalted and at
     different partitionings, compare full sets."""
+    from cca_spark.operators.route import salted_repartition
     from cca_spark.plans.pipeline import routed_facts
     from cca_spark.transcripts import load_transcripts
 
@@ -51,7 +52,7 @@ def test_routed_row_set_equality(spark, sf_dir):
     }
     salted = {
         (r["sink"], r["entity_id"])
-        for r in routed_facts(spark, t.repartition(13), salt=True, n_salts=7)
+        for r in salted_repartition(routed_facts(spark, t.repartition(13)), n_salts=7)
         .select("sink", "entity_id")
         .collect()
     }

@@ -146,6 +146,7 @@ def test_salted_parse_agg_equivalence(spark, sf_dir):
     entity_id hash) moves rows between partitions but must not change any
     aggregate over them."""
     from cca_spark.operators.aggregate import agg_per_sink
+    from cca_spark.operators.route import salted_repartition
     from cca_spark.plans.pipeline import routed_facts
     from cca_spark.transcripts import load_transcripts
     from tests.util import normalize
@@ -153,7 +154,7 @@ def test_salted_parse_agg_equivalence(spark, sf_dir):
     t = load_transcripts(spark, sf_dir)
     full = normalize(agg_per_sink(routed_facts(spark, t)).toPandas())
     salted = normalize(
-        agg_per_sink(routed_facts(spark, t, salt=True, n_salts=5)).toPandas()
+        agg_per_sink(salted_repartition(routed_facts(spark, t), n_salts=5)).toPandas()
     )
     assert len(full) > 0
     assert full.equals(salted)

@@ -97,67 +97,17 @@ def test_tfidf_no_forced_vocabulary_broadcast(spark, sf_dir):
     assert "StorageLevel(disk" in fmt, "tf must persist DISK_ONLY, not checkpoint"
 
 
-# ---- oracle coverage for the queries() entries trimmed in round 4
-# (VERDICT r03 #5): each trimmed operator keeps a full DuckDB-oracle
-# pytest here; turn_text_identity stays pinned by
-# test_pipeline_oracle.test_per_turn_text_equality.
-
-
-def test_trimmed_ann_ivf_matches_oracle(spark, sf_dir):
-    """ann_ivf == ann_ivf_nprobe at nprobe=1 — trimmed as redundant with
-    the nprobe variant but still oracle-exact."""
-    from cca_spark.operators.similarity import ivf_ann
+def test_ann_ivf_nprobe1_matches_oracle(spark, sf_dir):
+    """IVF ANN at nprobe=1 (each query searches only its own cell) is
+    oracle-exact; the battery's ``ann_ivf_nprobe`` covers nprobe > 1."""
+    from cca_spark.operators.similarity import ivf_ann_nprobe
     from cca_spark.oracles_training import ivf_ann_sql
     from tests.util import assert_matches_oracle
 
-    assert_matches_oracle(ivf_ann(spark, sf_dir), ivf_ann_sql(), min_rows=10, sf_dir=sf_dir)
-
-
-def test_trimmed_dedup_keep_list_matches_oracle(spark, sf_dir):
-    from cca_spark.operators.dedup import dedup_keep_list
-    from cca_spark.oracles_training import dedup_keep_list_sql
-    from tests.util import assert_matches_oracle
-
     assert_matches_oracle(
-        dedup_keep_list(spark, sf_dir), dedup_keep_list_sql(), min_rows=100, sf_dir=sf_dir
-    )
-
-
-def test_trimmed_multimodal_features_matches_oracle(spark, sf_dir):
-    from cca_spark.operators.multimodal import multimodal_features
-    from cca_spark.oracles_training import multimodal_features_sql
-    from tests.util import assert_matches_oracle
-
-    assert_matches_oracle(
-        multimodal_features(spark, sf_dir),
-        multimodal_features_sql(),
-        min_rows=100,
-        sf_dir=sf_dir,
-    )
-
-
-def test_trimmed_lsh_bucket_histogram_matches_oracle(spark, sf_dir):
-    from cca_spark.operators.similarity import lsh_bucket_histogram
-    from cca_spark.oracles_training import lsh_bucket_histogram_sql
-    from tests.util import assert_matches_oracle
-
-    assert_matches_oracle(
-        lsh_bucket_histogram(spark, sf_dir),
-        lsh_bucket_histogram_sql(),
-        min_rows=2,
-        sf_dir=sf_dir,
-    )
-
-
-def test_trimmed_simhash_coarse_matches_oracle(spark, sf_dir):
-    from cca_spark.operators.dedup import simhash_dup_groups
-    from cca_spark.oracles_training import simhash_dup_groups_sql
-    from tests.util import assert_matches_oracle
-
-    assert_matches_oracle(
-        simhash_dup_groups(spark, sf_dir),
-        simhash_dup_groups_sql(),
-        min_rows=2,
+        ivf_ann_nprobe(spark, sf_dir, nprobe=1),
+        ivf_ann_sql(nprobe=1),
+        min_rows=10,
         sf_dir=sf_dir,
     )
 
