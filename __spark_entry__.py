@@ -129,7 +129,7 @@ def q_coverage_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_top_k_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cca_spark.operators.aggregate import top_k_patterns
 
-    return top_k_patterns(_routed(spark, sf_dir), k=10).withColumn(
+    return top_k_patterns(_routed(spark, sf_dir)).withColumn(
         "rank", F.col("rank").cast("int")
     )
 
@@ -137,7 +137,7 @@ def q_top_k_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_sample_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cca_spark.operators.aggregate import sample_per_group
 
-    return sample_per_group(_routed(spark, sf_dir), limit=5).select(
+    return sample_per_group(_routed(spark, sf_dir)).select(
         "entity_id", "sink", "date_bucket", "rule_id"
     )
 
@@ -180,11 +180,16 @@ def _staged_stream_input(spark: SparkSession, sf_dir: str) -> str:
     return input_dir
 
 
-def _staged_stream_input_ts_ordered(spark: SparkSession, sf_dir: str, n_chunks: int = 10) -> str:
-    """EVENT-TIME-ORDERED stream staging for the TTL dedup: chunk k holds
-    the k-th slice of distinct event days and chunks are written
-    SEQUENTIALLY (strictly increasing mtime and lexicographic names), so
-    the file source delivers them oldest-first. With day-aligned chunks,
+# chunks of the event-time-ordered stream source (part of its cache tag)
+STREAM_TS_CHUNKS = 10
+
+
+def _staged_stream_input_ts_ordered(spark: SparkSession, sf_dir: str) -> str:
+    """EVENT-TIME-ORDERED stream staging for the TTL dedup: chunk k of
+    ``STREAM_TS_CHUNKS`` holds the k-th slice of distinct event days and
+    chunks are written SEQUENTIALLY (strictly increasing mtime and
+    lexicographic names), so the file source delivers them oldest-first.
+    With day-aligned chunks,
     every row's event time is ahead of the watermark computed from earlier
     files — no late-data drop is possible, which is what makes the plain
     batch GROUP BY a valid oracle for the watermark-evicting query (see
@@ -199,7 +204,7 @@ def _staged_stream_input_ts_ordered(spark: SparkSession, sf_dir: str, n_chunks: 
     events_path = os.path.join(sf_dir, "events.parquet")
 
     tag = hashlib.md5(
-        f"tsord|{sf_dir}|{_content_sig(events_path)}|{TRANSCRIPTS_SQL}|{n_chunks}".encode()
+        f"tsord|{sf_dir}|{_content_sig(events_path)}|{TRANSCRIPTS_SQL}|{STREAM_TS_CHUNKS}".encode()
     ).hexdigest()[:12]
     input_dir = f"/tmp/cca_stream_src_ts_{tag}"
     done = os.path.join(input_dir, "_STAGED_OK")
@@ -211,7 +216,7 @@ def _staged_stream_input_ts_ordered(spark: SparkSession, sf_dir: str, n_chunks: 
     days = sorted(
         r["d"] for r in t.select(F.to_date("ts").alias("d")).distinct().collect()
     )
-    per = max(1, (len(days) + n_chunks - 1) // n_chunks)
+    per = max(1, (len(days) + STREAM_TS_CHUNKS - 1) // STREAM_TS_CHUNKS)
     for i in range(0, len(days), per):
         group = days[i : i + per]
         tmp_out = f"{input_dir}.tmp_{i}"
@@ -492,6 +497,8 @@ def oracle_sql() -> dict[str, str]:
     from cca_spark import oracles
     from cca_spark import oracles_relational as OR
     from cca_spark import oracles_training as OT
+    from cca_spark.operators.aggregate import SAMPLE_PER_GROUP, TOP_K_PATTERNS
+    from cca_spark.operators.enrich import GUARD_MIN_INSTANCES, GUARD_MIN_SIGNIFICANCE
 
     sf = "/root/testdata/sf0.01"
     fact_cols = ", ".join(FACT_OUT_COLS)
@@ -546,7 +553,8 @@ def oracle_sql() -> dict[str, str]:
             "SELECT f.entity_id, g.guard_id, f.conv_id, f.rule_id, f.sink, g.n_instances "
             "FROM routed f JOIN guards g "
             "  ON f.conv_id = g.conv_id AND f.rule_id = g.rule_id "
-            "WHERE g.n_instances >= 4 AND g.max_sig >= 2",
+            f"WHERE g.n_instances >= {GUARD_MIN_INSTANCES} "
+            f"AND g.max_sig >= {GUARD_MIN_SIGNIFICANCE}",
         ),
         # reversible delta: apply∘reverse = identity, so the oracle is the
         # UNTOUCHED original table (it never saw the changelog)
@@ -589,7 +597,7 @@ def oracle_sql() -> dict[str, str]:
         "multimodal_real_decode": OT.multimodal_real_decode_sql(),
         "ann_brute_force_topk": OT.brute_force_topk_sql(),
         "ann_lsh_bucketed": OT.lsh_bucketed_ann_sql(),
-        "dedup_embedding_cosine": OT.embedding_near_dup_sql(0.35),
+        "dedup_embedding_cosine": OT.embedding_near_dup_sql(),
         "multimodal_frame_sample": OT.frame_sample_sql(),
     }
     rel = {
@@ -679,7 +687,7 @@ def oracle_sql() -> dict[str, str]:
             "  SELECT rule_id, sink, count(*) AS n, row_number() OVER ("
             "    ORDER BY count(*) DESC, rule_id ASC) AS rank "
             "  FROM routed GROUP BY rule_id, sink"
-            ") WHERE rank <= 10",
+            f") WHERE rank <= {TOP_K_PATTERNS}",
         ),
         "sample_per_group": oracles.with_routed(
             sf,
@@ -687,7 +695,7 @@ def oracle_sql() -> dict[str, str]:
             "  SELECT entity_id, sink, date_bucket, rule_id, row_number() OVER ("
             "    PARTITION BY sink, date_bucket ORDER BY md5(entity_id), entity_id"
             "  ) AS rn FROM routed"
-            ") WHERE rn <= 5",
+            f") WHERE rn <= {SAMPLE_PER_GROUP}",
         ),
         "ontology_closure_fixpoint": oracles.closure_recursive_sql(),
     }

@@ -21,14 +21,17 @@ from cca_spark.transcripts import TRANSCRIPT_DDL, load_transcripts
 BENCH_CORPUS_BASE = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".bench_corpus")
 
 
-def ensure_bench_corpus(
-    spark: SparkSession, sf_dir: str, replicas: int, n_files: int = 128
-) -> str:
+# files of the stored bench corpus: fixed, so every parallelism level
+# scans identical splits; more files mean smaller splits and more tasks
+BENCH_CORPUS_FILES = 128
+
+
+def ensure_bench_corpus(spark: SparkSession, sf_dir: str, replicas: int) -> str:
     """Materialize the replicated corpus to parquet once (idempotent).
 
     The north-rule input is a *stored* Iceberg table — timing the synthetic
-    derivation would measure the generator, not the pipeline. A fixed file
-    count (128) gives both parallelism levels identical scan splits.
+    derivation would measure the generator, not the pipeline. The file
+    count is ``BENCH_CORPUS_FILES``.
     """
     import hashlib
 
@@ -43,7 +46,7 @@ def ensure_bench_corpus(
     if not os.path.exists(marker):
         (
             replicated_transcripts(spark, sf_dir, replicas)
-            .repartition(n_files, "conv_id")
+            .repartition(BENCH_CORPUS_FILES, "conv_id")
             # declared sort order, exactly as the production Iceberg table
             # would have (SORTED BY conv_id, turn_idx): conversations are
             # CONTIGUOUS in every file, so (a) per-conv windows read runs,

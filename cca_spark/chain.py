@@ -73,10 +73,11 @@ def quality_lang_filtered(kept: DataFrame) -> DataFrame:
     )
 
 
-def build_tfidf_index(filtered: DataFrame, k: int = 3) -> DataFrame:
+def build_tfidf_index(filtered: DataFrame) -> DataFrame:
+    """Top-``TFIDF_TOP_K`` TF-IDF terms per filtered doc."""
     from cca_spark.operators.textstats import tfidf_top_terms_over
 
-    return tfidf_top_terms_over(filtered, k=k)
+    return tfidf_top_terms_over(filtered)
 
 
 def repetition_scrubbed(filtered: DataFrame) -> DataFrame:

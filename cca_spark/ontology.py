@@ -89,12 +89,17 @@ def category_edges_df(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(CATEGORY_PARENTS, "child string, parent string")
 
 
-def ontology_closure_df(spark: SparkSession, max_iters: int = 10) -> DataFrame:
+# hop bound of the closure fixpoint: one round per hierarchy level, so
+# this caps the category depth the closure can reach
+ONTOLOGY_CLOSURE_MAX_ITERS = 10
+
+
+def ontology_closure_df(spark: SparkSession) -> DataFrame:
     """Transitive closure (category -> ancestor, reflexive) via semi-naive
     driver-side fixpoint over DataFrame joins.
 
     The frontier is joined to the edge table until no new pairs appear —
-    bounded iterations like the reference's 3x INSERT battery
+    at most ``ONTOLOGY_CLOSURE_MAX_ITERS`` rounds, like the reference's 3x INSERT battery
     (materialize_supplementary_fact.py:116). The tables involved are tiny
     (ontology-scale), so each iteration is a broadcast join; the final
     closure is itself broadcast downstream.
@@ -110,7 +115,7 @@ def ontology_closure_df(spark: SparkSession, max_iters: int = 10) -> DataFrame:
     # reflexive base
     closure = cats.select("category", F.col("category").alias("ancestor"))
     frontier = edges.select(F.col("child").alias("category"), F.col("parent").alias("ancestor"))
-    for _ in range(max_iters):
+    for _ in range(ONTOLOGY_CLOSURE_MAX_ITERS):
         closure = closure.union(frontier).distinct().localCheckpoint(eager=True)
         before = closure.count()
         # extend frontier one hop: (c -> a) + (a -> p) => (c -> p)

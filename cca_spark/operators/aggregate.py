@@ -43,8 +43,15 @@ def coverage_rollup(routed: DataFrame) -> DataFrame:
     )
 
 
-def top_k_patterns(routed: DataFrame, k: int = 10) -> DataFrame:
-    """Patterns ranked by instance count (find_change_patterns.py:965-966).
+# report sizes: patterns in the top-k report, facts sampled per
+# (sink, date_bucket) group
+TOP_K_PATTERNS = 10
+SAMPLE_PER_GROUP = 5
+
+
+def top_k_patterns(routed: DataFrame) -> DataFrame:
+    """The ``TOP_K_PATTERNS`` patterns ranked by instance count
+    (find_change_patterns.py:965-966).
 
     Deterministic tie-break on rule_id so the result set is stable across
     partitionings.
@@ -53,12 +60,12 @@ def top_k_patterns(routed: DataFrame, k: int = 10) -> DataFrame:
     w = Window.orderBy(F.desc("n"), F.asc("rule_id"))
     return (
         counts.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K_PATTERNS)
     )
 
 
-def sample_per_group(routed: DataFrame, limit: int = 5) -> DataFrame:
-    """Per-(sink, date_bucket) capped sample.
+def sample_per_group(routed: DataFrame) -> DataFrame:
+    """Per-(sink, date_bucket) sample of at most ``SAMPLE_PER_GROUP`` facts.
 
     The reference uses seeded random.sample per version pair
     (find_change_patterns.py:1340-1362, seed at :63). A seeded rand() is
@@ -69,7 +76,7 @@ def sample_per_group(routed: DataFrame, limit: int = 5) -> DataFrame:
     w = Window.partitionBy("sink", "date_bucket").orderBy(F.md5("entity_id"), F.asc("entity_id"))
     return (
         routed.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= limit)
+        .filter(F.col("rn") <= SAMPLE_PER_GROUP)
         .drop("rn")
     )
 

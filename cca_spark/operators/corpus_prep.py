@@ -298,9 +298,7 @@ PER_SOURCE_CAP = 20
 VOCAB_TOP = 64
 
 
-def corpus_shard_shuffle_over(
-    docs: DataFrame, shards: int = SHUFFLE_SHARDS, seed: str = SHUFFLE_SEED
-) -> DataFrame:
+def corpus_shard_shuffle_over(docs: DataFrame, seed: str = SHUFFLE_SEED) -> DataFrame:
     """Deterministic global training shuffle: every doc gets a stable
     pseudo-random 60-bit key, a shard, and an ordinal position within its
     shard — the "shuffle the corpus before each epoch" step every trainer
@@ -309,8 +307,9 @@ def corpus_shard_shuffle_over(
     Key = first 15 hex chars of ``md5(doc_id ':' seed)`` parsed as a
     bigint: 60 bits, so never negative and never bigint overflow, and
     byte-identical in Spark (``conv(_,16,10)``) and DuckDB
-    (``'0x…'::bigint``). Shard = key mod shards; position = rank of
-    (key, doc_id) within the shard. The ranking window is PARTITIONED BY
+    (``'0x…'::bigint``). Shard = key mod ``SHUFFLE_SHARDS`` (64: more
+    shards mean smaller per-shard sorts but more output files); position
+    = rank of (key, doc_id) within the shard. The ranking window is PARTITIONED BY
     SHARD — each of the O(worker-count) shards sorts independently (the
     bm25/packing unpartitioned-window discipline), and the md5 key makes
     shard sizes uniform regardless of doc_id distribution, so there is no
@@ -321,7 +320,7 @@ def corpus_shard_shuffle_over(
     keyed = docs.select("doc_id", key).select(
         "doc_id",
         "shuffle_key",
-        F.pmod(F.col("shuffle_key"), F.lit(shards)).cast("int").alias("shard"),
+        F.pmod(F.col("shuffle_key"), F.lit(SHUFFLE_SHARDS)).cast("int").alias("shard"),
     )
     w = Window.partitionBy("shard").orderBy("shuffle_key", "doc_id")
     return keyed.select(
@@ -436,12 +435,13 @@ SPLIT_SEED = "split0"
 def hash_split_over(
     docs: DataFrame,
     fractions: tuple[tuple[str, float], ...] = SPLIT_FRACTIONS,
-    seed: str = SPLIT_SEED,
 ) -> DataFrame:
     """Deterministic train/val/test assignment by md5-prefix ranges —
     the eval-holdout counterpart of ngram_decontaminate (decontam removes
     eval text from train; this creates the held-out eval in the first
-    place, stably across reruns and corpus growth).
+    place, stably across reruns and corpus growth). The key is salted
+    with the fixed ``SPLIT_SEED``: a new seed would reassign every doc,
+    which is exactly the leak a stable split exists to prevent.
 
     The doc's 8-hex key lands in cumulative-fraction buckets (the
     mixture_weighted_sample thresholding idiom — hex-string comparison is
@@ -450,7 +450,7 @@ def hash_split_over(
     UDF, whole-stage codegen."""
     cum = 0.0
     key = F.substring(
-        F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":" + seed))), 1, 8
+        F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":" + SPLIT_SEED))), 1, 8
     )
     # seed the chain with a never-true arm so a single-entry fractions
     # tuple (no holdout) degrades to "everything in the ELSE split"

@@ -47,6 +47,12 @@ NGRAM_N = 8  # the Llama/GPT-3-style contamination window
 EVAL_MOD = 10
 EVAL_RESIDUE = 7
 
+# Gopher-style repetition gates: a doc passes when at most these shares
+# of its tokens / bigrams are repeats. Lower values drop more
+# boilerplate and more legitimately repetitive text (lists, code).
+MAX_DUP_TOKEN_RATIO = 0.4
+MAX_DUP_BIGRAM_RATIO = 0.25
+
 
 def _toks() -> Column:
     # the ONE retrieval tokenization (textstats.retrieval_tokens_col) —
@@ -67,10 +73,8 @@ def _ngram_array(n: int) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def ngram_decontaminate_over(
-    train: DataFrame, eval_docs: DataFrame, n: int = NGRAM_N
-) -> DataFrame:
-    """Flag train docs sharing any n-gram with the eval corpus.
+def ngram_decontaminate_over(train: DataFrame, eval_docs: DataFrame) -> DataFrame:
+    """Flag train docs sharing any ``NGRAM_N``-gram with the eval corpus.
 
     Output: one row per train doc — (doc_id, n_shared_ngrams,
     contaminated). The eval side is collapsed to DISTINCT grams and
@@ -78,7 +82,7 @@ def ngram_decontaminate_over(
     any shuffle — the per-doc dedup of repeated grams (distinct) and the
     count aggregation run on the post-probe hit stream only, so at corpus
     scale the full gram stream never exchanges (the probe is the filter)."""
-    grams = F.explode(_ngram_array(n)).alias("g")
+    grams = F.explode(_ngram_array(NGRAM_N)).alias("g")
     train_grams = train.select("doc_id", grams)
     eval_grams = eval_docs.select(grams).distinct()
     hits = (
@@ -103,12 +107,9 @@ def ngram_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_decontaminate_over(docs, eval_docs)
 
 
-def repetition_filter_over(
-    docs: DataFrame,
-    max_dup_token_ratio: float = 0.4,
-    max_dup_bigram_ratio: float = 0.25,
-) -> DataFrame:
-    """Gopher-style repetition signals, per doc, zero shuffle."""
+def repetition_filter_over(docs: DataFrame) -> DataFrame:
+    """Gopher-style repetition signals, per doc, zero shuffle; passes at
+    ``MAX_DUP_TOKEN_RATIO`` / ``MAX_DUP_BIGRAM_RATIO``."""
     toks = _toks()
     bigrams = _ngram_array(2)
     n_tok = F.size(toks)
@@ -131,7 +132,7 @@ def repetition_filter_over(
         dup_tok.alias("dup_token_ratio"),
         dup_big.alias("dup_bigram_ratio"),
         (
-            (dup_tok <= max_dup_token_ratio) & (dup_big <= max_dup_bigram_ratio)
+            (dup_tok <= MAX_DUP_TOKEN_RATIO) & (dup_big <= MAX_DUP_BIGRAM_RATIO)
         ).alias("passes_repetition"),
     )
 

@@ -65,16 +65,16 @@ def chain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return base.unionByName(second)
 
 
-def corpus_shingles(corpus: DataFrame, k: int = SHINGLE_K) -> DataFrame:
-    """k-token shingles via sequence+slice (no UDF)."""
+def corpus_shingles(corpus: DataFrame) -> DataFrame:
+    """``SHINGLE_K``-token shingles via sequence+slice (no UDF)."""
     toks = corpus.select("doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("toks"))
     return (
         toks.select(
             "doc_id",
             F.explode(
                 F.transform(
-                    F.sequence(F.lit(0), F.greatest(F.size("toks") - k, F.lit(0))),
-                    lambda i: F.concat_ws(" ", F.slice(F.col("toks"), i + 1, k)),
+                    F.sequence(F.lit(0), F.greatest(F.size("toks") - SHINGLE_K, F.lit(0))),
+                    lambda i: F.concat_ws(" ", F.slice(F.col("toks"), i + 1, SHINGLE_K)),
                 )
             ).alias("shingle"),
         )
@@ -295,9 +295,9 @@ def ngram_jaccard(corpus: DataFrame, pairs: DataFrame) -> DataFrame:
     return _pair_shingle_jaccard(corpus_shingles(corpus).distinct(), pairs)
 
 
-def repeated_span_fraction_over(corpus: DataFrame, k: int = SHINGLE_K) -> DataFrame:
+def repeated_span_fraction_over(corpus: DataFrame) -> DataFrame:
     """Cross-document boilerplate signal: per doc, the fraction of its
-    distinct k-token spans that also appear in at least one OTHER doc —
+    distinct ``SHINGLE_K``-token spans that also appear in at least one OTHER doc —
     the corpus-level complement of decontam.repetition_filter (which
     scores repetition WITHIN a doc). Headers, footers, navigation chrome,
     and licence blocks show up as high repeated_frac long before full-doc
@@ -311,7 +311,7 @@ def repeated_span_fraction_over(corpus: DataFrame, k: int = SHINGLE_K) -> DataFr
     broadcast (AQE decides — the tfidf lesson); the shuffle carries
     (shingle, df), never text. df counts DOCS (shd is distinct per doc),
     so df >= 2 means "appears in another doc", not "appears twice"."""
-    shd = corpus_shingles(corpus, k).distinct()
+    shd = corpus_shingles(corpus).distinct()
     dfreq = shd.groupBy("shingle").agg(F.count("*").alias("df"))
     rep = F.sum(F.when(F.col("df") >= 2, 1).otherwise(0)).cast("bigint")
     return (
@@ -466,13 +466,14 @@ def simhash64_signatures(corpus: DataFrame) -> DataFrame:
     return votes.select("doc_id", bits.alias("simhash64"))
 
 
-def hamming_expr_sql(a: str, b: str, n_bits: int = SIMHASH64_BITS) -> str:
-    """Per-position bit-string Hamming distance as portable SQL text
-    (identical in Spark SQL and DuckDB; generated, never hand-kept)."""
+def hamming_expr_sql(a: str, b: str) -> str:
+    """Per-position Hamming distance of two ``SIMHASH64_BITS``-char bit
+    strings as portable SQL text (identical in Spark SQL and DuckDB;
+    generated, never hand-kept)."""
     terms = " + ".join(
         f"(CASE WHEN substr({a}, {i + 1}, 1) <> substr({b}, {i + 1}, 1) "
         "THEN 1 ELSE 0 END)"
-        for i in range(n_bits)
+        for i in range(SIMHASH64_BITS)
     )
     return f"({terms})"
 

@@ -175,10 +175,14 @@ def lcs_pair_alignment(spark: SparkSession, sf_dir: str, n_pairs: int = 50) -> D
     return pairs.mapInPandas(align, schema=LCS_SCHEMA)
 
 
-def group_count_having(spark: SparkSession, sf_dir: str, min_extra: int = 5) -> DataFrame:
+# A2's HAVING floor: conversations with fewer routed facts are dropped
+MIN_FACTS_PER_CONV = 5
+
+
+def group_count_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2: group-count with HAVING — keep conversations with at least
-    ``min_extra`` routed facts (reference: extra-variable counting with
-    min_extra, find_change_patterns.py:2224-2336)."""
+    ``MIN_FACTS_PER_CONV`` routed facts (reference: extra-variable
+    counting with min_extra, find_change_patterns.py:2224-2336)."""
     from cca_spark.plans.pipeline import routed_facts
     from cca_spark.transcripts import load_transcripts
 
@@ -186,7 +190,7 @@ def group_count_having(spark: SparkSession, sf_dir: str, min_extra: int = 5) -> 
     return (
         facts.groupBy("conv_id")
         .agg(F.count("*").alias("n_facts"))
-        .filter(F.col("n_facts") >= min_extra)
+        .filter(F.col("n_facts") >= MIN_FACTS_PER_CONV)
     )
 
 

@@ -19,18 +19,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cca_spark.ontology import (
-    ontology_closure_df,
-    role_ontology_df,
-    tool_ontology_df,
-)
+from cca_spark.ontology import role_ontology_df, tool_ontology_df
 
 
-def enrich_facts(
-    spark: SparkSession,
-    facts: DataFrame,
-    with_closure: bool = False,
-) -> DataFrame:
+def enrich_facts(spark: SparkSession, facts: DataFrame) -> DataFrame:
     """Attach tool ontology (category/family/risk_level), role actor_kind,
     and the date bucket used by the aggregate stage.
 
@@ -41,19 +33,11 @@ def enrich_facts(
     tools = F.broadcast(tool_ontology_df(spark))
     roles = F.broadcast(role_ontology_df(spark))
 
-    out = (
+    return (
         facts.join(tools, "tool", "left")
         .join(roles, "role", "left")
         .withColumn("date_bucket", F.col("ts").cast("date"))
     )
-    if with_closure:
-        closure = F.broadcast(
-            ontology_closure_df(spark)
-            .groupBy("category")
-            .agg(F.sort_array(F.collect_list("ancestor")).alias("category_ancestors"))
-        )
-        out = out.join(closure, "category", "left")
-    return out
 
 
 def guard_table(routed: DataFrame) -> DataFrame:
@@ -81,20 +65,25 @@ def guard_table(routed: DataFrame) -> DataFrame:
     )
 
 
-def guard_fact_lookup(
-    routed: DataFrame, min_instances: int = 4, min_significance: int = 2
-) -> DataFrame:
+# a guard admits a (conv, rule) pattern that fired at least this often,
+# with at least this peak significance; lower floors admit more facts
+GUARD_MIN_INSTANCES = 4
+GUARD_MIN_SIGNIFICANCE = 2
+
+
+def guard_fact_lookup(routed: DataFrame) -> DataFrame:
     """Facts admitted by their guard: join the fact stream to the guard
     side table on the reified key and keep facts whose guard says the
-    pattern is frequent AND significant in that conversation — the
+    pattern is frequent (``GUARD_MIN_INSTANCES``) AND significant
+    (``GUARD_MIN_SIGNIFICANCE``) in that conversation — the
     reference's guard-statement lookup (fact.py:55-63) as a semi-join
     that also attaches the guard id to each admitted fact.
 
     The guard side aggregates to (conv, rule) granularity before the
     join, so at 10^12 scale the join build side is conversations-sized."""
     guards = guard_table(routed).filter(
-        (F.col("n_instances") >= min_instances)
-        & (F.col("max_significance") >= min_significance)
+        (F.col("n_instances") >= GUARD_MIN_INSTANCES)
+        & (F.col("max_significance") >= GUARD_MIN_SIGNIFICANCE)
     )
     return routed.join(guards, ["conv_id", "rule_id"]).select(
         "entity_id", "guard_id", "conv_id", "rule_id", "sink", "n_instances"

@@ -358,10 +358,16 @@ def multimodal_payload_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def frame_sample(spark: SparkSession, sf_dir: str, stride: int = 64) -> DataFrame:
-    """Frame-sampling plumbing: one row per strided 'frame' window with a
-    window digest — the explode shape a video pipeline uses (sample every
-    Nth frame, fingerprint it). JVM-side explode + substring, no UDF."""
+# frame window in chars: a smaller stride samples more frames per doc
+# (more rows, finer fingerprints)
+FRAME_STRIDE = 64
+
+
+def frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Frame-sampling plumbing: one row per ``FRAME_STRIDE``-char 'frame'
+    window with a window digest — the explode shape a video pipeline uses
+    (sample every Nth frame, fingerprint it). JVM-side explode +
+    substring, no UDF."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     # blen > 0 filter: for empty text, Spark's sequence(0, -1) yields a
     # DESCENDING [0, -1] (two rows) while the oracle's generate_series(0, -1)
@@ -374,11 +380,13 @@ def frame_sample(spark: SparkSession, sf_dir: str, stride: int = 64) -> DataFram
         "doc_id",
         "text",
         F.explode(
-            F.sequence(F.lit(0), F.floor((F.col("blen") - 1) / stride).cast("int"))
+            F.sequence(F.lit(0), F.floor((F.col("blen") - 1) / FRAME_STRIDE).cast("int"))
         ).alias("frame_idx"),
     )
     return frames.select(
         "doc_id",
         F.col("frame_idx").cast("int").alias("frame_idx"),
-        F.md5(F.expr(f"substring(text, frame_idx * {stride} + 1, {stride})")).alias("frame_md5"),
+        F.md5(
+            F.expr(f"substring(text, frame_idx * {FRAME_STRIDE} + 1, {FRAME_STRIDE})")
+        ).alias("frame_md5"),
     )

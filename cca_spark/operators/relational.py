@@ -268,10 +268,16 @@ def running_window_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sessionize_events(spark: SparkSession, sf_dir: str, gap_minutes: int = 30) -> DataFrame:
-    """Sessionization: gap > threshold starts a new session (lag + cumsum).
-    The reference's task-pool batches by version pair; this is the stream
-    analog used for per-conversation windows at scale."""
+# idle gap that closes a session: shorter gaps split activity into more,
+# smaller sessions
+SESSION_GAP_MINUTES = 30
+
+
+def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sessionization: a gap over ``SESSION_GAP_MINUTES`` starts a new
+    session (lag + cumsum). The reference's task-pool batches by version
+    pair; this is the stream analog used for per-conversation windows at
+    scale."""
     ev = _read(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.unix_micros(F.col("ts").cast("timestamp")) - F.unix_micros(
@@ -279,7 +285,7 @@ def sessionize_events(spark: SparkSession, sf_dir: str, gap_minutes: int = 30) -
     )
     with_flag = ev.withColumn(
         "new_session",
-        F.when(gap.isNull() | (gap > gap_minutes * 60 * 1_000_000), 1).otherwise(0),
+        F.when(gap.isNull() | (gap > SESSION_GAP_MINUTES * 60 * 1_000_000), 1).otherwise(0),
     )
     with_sid = with_flag.withColumn(
         "session_seq",
@@ -316,30 +322,38 @@ def scalar_function_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def similar_turn_pairs(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.5, len_gate: float | None = None
-) -> DataFrame:
+# Levenshtein similarity a turn pair must reach, and the relative-length
+# gate in front of it. |len_a - len_b| / max(len) is a lower bound on the
+# normalized edit distance, so a gate of 1 - threshold is lossless: every
+# pair it drops has similarity below the threshold. A tighter gate would
+# be cheaper but would drop true pairs.
+SIMILAR_TURN_THRESHOLD = 0.5
+SIMILAR_TURN_LEN_GATE = 1.0 - SIMILAR_TURN_THRESHOLD
+
+
+def similar_turn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``similar_turn_pairs_over`` the transcripts of ``sf_dir``."""
+    from cca_spark.transcripts import load_transcripts
+
+    return similar_turn_pairs_over(load_transcripts(spark, sf_dir))
+
+
+def similar_turn_pairs_over(transcripts: DataFrame) -> DataFrame:
     """Similarity-threshold prefilter operator: cheap gate before the
     expensive verify, composed exactly like the reference
-    (``ccautil/sim.py:28-66`` gates tree diff on similarity >= 0.7;
+    (``ccautil/sim.py:28-66`` gates tree diff on a fixed similarity;
     ``verdiff.py:62-63``).
 
     Candidate pairs = adjacent turns of the same role within a
-    conversation (one window, no join). CHEAP gate: relative length
-    difference <= ``len_gate`` — |len_a - len_b| / max(len) is a lower
-    bound on normalized edit distance, so with the default
-    ``len_gate = 1 - threshold`` the gate is provably lossless: any pair
-    it drops has Levenshtein similarity < threshold. (ADVICE r02: the old
-    fixed 0.3 gate silently dropped pairs in the (0.3, 0.5] band.)
-    EXPENSIVE verify: Levenshtein similarity >= ``threshold``, computed
-    only on gate survivors (Catalyst evaluates the conjunction
-    left-to-right inside one codegen'd filter — the levenshtein never
-    runs on gated-out rows)."""
-    if len_gate is None:
-        len_gate = 1.0 - threshold
-    from cca_spark.transcripts import load_transcripts
-
-    t = load_transcripts(spark, sf_dir).select("conv_id", "turn_idx", "role", "text")
+    conversation of ``(conv_id, turn_idx, role, text)`` rows (one window,
+    no join). CHEAP gate: relative length difference <=
+    ``SIMILAR_TURN_LEN_GATE`` (lossless, see the constant). EXPENSIVE
+    verify: Levenshtein similarity >= ``SIMILAR_TURN_THRESHOLD``, evaluated
+    after the gate inside one codegen'd filter. Both ratios divide by the
+    longer length with ``try_divide``: two empty turns give NULL and drop
+    out, as in the DuckDB oracle, instead of raising DIVIDE_BY_ZERO under
+    ANSI mode."""
+    t = transcripts.select("conv_id", "turn_idx", "role", "text")
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
     pairs = t.select(
         "conv_id",
@@ -353,15 +367,17 @@ def similar_turn_pairs(
     la, lb = F.length("text"), F.length("next_text")
     maxlen = F.greatest(la, lb)
     gated = pairs.filter(
-        (F.abs(la - lb).cast("double") / maxlen.cast("double")) <= len_gate
+        F.try_divide(F.abs(la - lb).cast("double"), maxlen.cast("double"))
+        <= SIMILAR_TURN_LEN_GATE
     )
     sim = F.round(
-        F.lit(1.0) - F.levenshtein("text", "next_text").cast("double") / maxlen.cast("double"),
+        F.lit(1.0)
+        - F.try_divide(F.levenshtein("text", "next_text").cast("double"), maxlen.cast("double")),
         6,
     )
     return (
         gated.select("conv_id", "turn_idx", "next_turn_idx", "role", sim.alias("sim"))
-        .filter(F.col("sim") >= threshold)
+        .filter(F.col("sim") >= SIMILAR_TURN_THRESHOLD)
     )
 
 

@@ -35,9 +35,7 @@ def route_facts(enriched: DataFrame) -> DataFrame:
     )
 
 
-def salted_repartition(
-    df: DataFrame, n_salts: int = 16, num_partitions: int | None = None
-) -> DataFrame:
+def salted_repartition(df: DataFrame, n_salts: int = 16) -> DataFrame:
     """Deterministic salt from the entity key (NOT rand() — set equality
     across cluster sizes requires every row to land deterministically).
 
@@ -50,12 +48,7 @@ def salted_repartition(
     else:  # raw transcripts: the stable natural key is (conv_id, turn_idx)
         salt_src = F.xxhash64("conv_id", "turn_idx")
     salted = df.withColumn("_salt", F.pmod(salt_src, F.lit(n_salts)))
-    parts = (  # explicit width pins the layout against AQE re-coalescing
-        salted.repartition(num_partitions, F.col("conv_id"), F.col("_salt"))
-        if num_partitions
-        else salted.repartition(F.col("conv_id"), F.col("_salt"))
-    )
-    return parts.drop("_salt")
+    return salted.repartition(F.col("conv_id"), F.col("_salt")).drop("_salt")
 
 
 # Fan-out write layout. Two salts per (sink, date_bucket) leaf keep the
@@ -109,14 +102,17 @@ def write_sinks(routed: DataFrame, out_dir: str) -> None:
     )
 
 
-def skew_salt_plan(
-    transcripts: DataFrame, target_rows_per_task: int = 500
-) -> DataFrame:
+# rows one salted task should hold: smaller splits hot conversations into
+# more, shorter tasks at the price of more shuffle partitions
+SALT_TARGET_ROWS_PER_TASK = 500
+
+
+def skew_salt_plan(transcripts: DataFrame) -> DataFrame:
     """The salting *policy*: per-conversation salt counts derived from
     row counts (SURVEY §7.2 M3 — the reference special-cases "huge nodes"
     the same way, diffast.ml:294-305).
 
-    ``n_salts = ceil(n_turns / target_rows_per_task)`` — normal
+    ``n_salts = ceil(n_turns / SALT_TARGET_ROWS_PER_TASK)`` — normal
     conversations get 1 (stay co-located, no shuffle blow-up); hot ones
     are split into bounded tasks. One groupBy over the fact stream; the
     plan itself is conversations-sized and broadcastable back into
@@ -127,7 +123,7 @@ def skew_salt_plan(
         "n_turns",
         F.greatest(
             F.lit(1),
-            (F.floor((F.col("n_turns") - 1) / F.lit(target_rows_per_task)) + 1),
+            (F.floor((F.col("n_turns") - 1) / F.lit(SALT_TARGET_ROWS_PER_TASK)) + 1),
         )
         .cast("int")
         .alias("n_salts"),

@@ -36,6 +36,14 @@ LSH_TABLE_DIMS = [
 ]
 
 
+# Every ANN query returns the ANN_K nearest neighbours (6dp cosine, c_id
+# tie-break) of the first ANN_N_QUERIES vectors (vec_id < ANN_N_QUERIES).
+# A larger k or query set widens the per-query rank window and the
+# broadcast query side; these are the values the oracles check.
+ANN_K = 3
+ANN_N_QUERIES = 20
+
+
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
@@ -54,26 +62,28 @@ def _norm(a):
     )
 
 
+def _top_k(scored: DataFrame) -> DataFrame:
+    """The ``ANN_K`` best ``(q_id, c_id, cosine)`` rows per query, ranked
+    by cosine desc then c_id."""
+    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("int"))
+        .filter(F.col("rank") <= ANN_K)
+    )
+
+
 def brute_force_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 3,
-    n_queries: int = 20,
-    emb: DataFrame | None = None,
+    spark: SparkSession, sf_dir: str, emb: DataFrame | None = None
 ) -> DataFrame:
-    """Exact cosine top-k: first ``n_queries`` vectors against the corpus.
+    """Exact cosine top-``ANN_K``: the first ``ANN_N_QUERIES`` vectors
+    against the corpus (``emb``, default the embeddings table).
 
     Query side is broadcast (tiny); corpus side never shuffles until the
-    final per-query top-k (row_number over a k-sized window).
-
-    Norms are hoisted BELOW the cross join (r6): the former plan evaluated
-    the interpreted higher-order ``_norm`` aggregate per (query, corpus)
-    PAIR — N_corpus x N_queries norm computations where N_corpus +
-    N_queries suffice. Same IEEE expression on the same values, so the
-    rounded cosine (and the oracle hash) is bit-identical."""
+    final per-query top-k. Norms are computed once per vector below the
+    cross join, not once per (query, corpus) pair."""
     emb = _emb(spark, sf_dir) if emb is None else emb
     queries = F.broadcast(
-        emb.filter(F.col("vec_id") < n_queries).select(
+        emb.filter(F.col("vec_id") < ANN_N_QUERIES).select(
             F.col("vec_id").alias("q_id"),
             F.col("embedding").alias("q_emb"),
             _norm(F.col("embedding")).alias("q_norm"),
@@ -97,11 +107,7 @@ def brute_force_topk(
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(scored)
 
 
 def _table_bucket(emb_col, dims: list[int]):
@@ -150,17 +156,16 @@ def lsh_candidate_pairs(emb: DataFrame) -> DataFrame:
     )
 
 
-def lsh_bucketed_ann(
-    spark: SparkSession, sf_dir: str, k: int = 3, n_queries: int = 20
-) -> DataFrame:
-    """ANN: candidates share any LSH table's bucket with the query; exact
-    cosine rerank over candidates. Recall < 1 by design; determinism exact.
+def lsh_bucketed_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ANN top-``ANN_K`` for the first ``ANN_N_QUERIES`` vectors:
+    candidates share any LSH table's bucket with the query; exact cosine
+    rerank over candidates. Recall < 1 by design; determinism exact.
 
     Candidate generation works on (id, table, bucket) rows only; the
     64-float embeddings are joined back by id for the rerank, so the
     banded shuffle never carries vectors."""
     emb = _emb(spark, sf_dir)
-    qb = F.broadcast(_banded(emb.filter(F.col("vec_id") < n_queries), "q_id"))
+    qb = F.broadcast(_banded(emb.filter(F.col("vec_id") < ANN_N_QUERIES), "q_id"))
     cb = _banded(emb, "c_id")
     cands = (
         qb.join(cb, ["t", "bucket"])
@@ -169,7 +174,7 @@ def lsh_bucketed_ann(
         .distinct()
     )
     qe = F.broadcast(
-        emb.filter(F.col("vec_id") < n_queries).select(
+        emb.filter(F.col("vec_id") < ANN_N_QUERIES).select(
             F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
         )
     )
@@ -183,19 +188,18 @@ def lsh_bucketed_ann(
             6,
         ).alias("cosine"),
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(scored)
 
 
-def embedding_cosine_near_dup(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.35
-) -> DataFrame:
+# cosine floor for an embedding near-dup: lower admits more pairs (and
+# more false positives) from the same LSH candidate set
+EMBEDDING_DUP_THRESHOLD = 0.35
+
+
+def embedding_cosine_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup pairs: LSH candidates (any-table bucket match)
-    AND cosine >= threshold — the embedding member of the dedup family
-    (dedup.py)."""
+    AND cosine >= ``EMBEDDING_DUP_THRESHOLD`` — the embedding member of
+    the dedup family (dedup.py)."""
     emb = _emb(spark, sf_dir)
     cands = lsh_candidate_pairs(emb)
     ea = emb.select(F.col("vec_id").alias("doc_a"), F.col("embedding").alias("ea"))
@@ -210,21 +214,24 @@ def embedding_cosine_near_dup(
                 _dot(F.col("ea"), F.col("eb")) / (_norm(F.col("ea")) * _norm(F.col("eb"))), 6
             ).alias("cosine"),
         )
-        .filter(F.col("cosine") >= threshold)
+        .filter(F.col("cosine") >= EMBEDDING_DUP_THRESHOLD)
     )
 
 
-def clustered_embeddings(spark: SparkSession, sf_dir: str, noise: float = 0.4) -> DataFrame:
+# weight of the raw vector in clustered_embeddings: lower makes tighter,
+# easier clusters; 0.4 keeps neighbours mostly in-label without making
+# every cell trivially separable
+CLUSTER_NOISE = 0.4
+
+
+def clustered_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic CLUSTERED corpus derived from the embeddings table:
-    ``v' = mu(label) + noise * v`` with ``mu(label)`` a fixed indicator
-    direction (dims where d % 10 == label). The driver's raw embeddings
-    are isotropic random vectors — measured: top-3 neighbors share a label
-    at chance (0.088), within-label mean cosine ~0 — on which NO sublinear
-    ANN can reach high recall (curse of dimensionality, not an
-    implementation defect). Real embedding corpora are clustered; this
-    derivation plants that structure deterministically (both engines could
-    derive it from the same parquet) so recall floors are meaningful.
-    All JVM-side higher-order functions, no UDF."""
+    ``v' = mu(label) + CLUSTER_NOISE * v`` with ``mu(label)`` a fixed
+    indicator direction (dims where d % 10 == label). The raw embeddings
+    are isotropic random vectors (top-3 neighbours share a label at
+    chance, 0.088), on which no sublinear ANN can reach high recall; this
+    derivation plants cluster structure deterministically so recall
+    floors are meaningful. All JVM-side higher-order functions, no UDF."""
     emb = _emb(spark, sf_dir)
     dim_idx = F.sequence(F.lit(0), F.size("embedding") - 1)
     mu = F.transform(
@@ -232,13 +239,21 @@ def clustered_embeddings(spark: SparkSession, sf_dir: str, noise: float = 0.4) -
         lambda d: F.when(d % 10 == F.col("label"), F.lit(1.0)).otherwise(F.lit(0.0)),
     )
     mixed = F.zip_with(
-        mu, F.col("embedding"), lambda m, x: (m + F.lit(noise) * x.cast("double")).cast("float")
+        mu,
+        F.col("embedding"),
+        lambda m, x: (m + F.lit(CLUSTER_NOISE) * x.cast("double")).cast("float"),
     )
     return emb.select("vec_id", mixed.alias("embedding"), "label")
 
 
 N_IVF_CENTROIDS = 16
 IVF_CENTROID_STRIDE = 8  # centroid vec_ids: 0, 8, ..., 120 (< n at every SF)
+# cells each query searches: more cells raise recall toward exact at
+# nprobe / N_IVF_CENTROIDS of the corpus scanned
+IVF_NPROBE = 2
+# Lloyd rounds of ivf_train_centroids: each is one broadcast assignment
+# plus one (cell, pos) aggregation
+IVF_LLOYD_ITERS = 2
 
 
 def _ivf_centroids(emb: DataFrame) -> DataFrame:
@@ -271,9 +286,7 @@ def _centroid_ranks(emb: DataFrame, cents: DataFrame | None = None) -> DataFrame
     return scored.withColumn("r", F.row_number().over(w))
 
 
-def ivf_train_centroids(
-    emb: DataFrame, iters: int = 2
-) -> DataFrame:
+def ivf_train_centroids(emb: DataFrame, iters: int = IVF_LLOYD_ITERS) -> DataFrame:
     """Trained coarse quantizer: Lloyd iterations expressed relationally —
     assign (broadcast score + argmin window) then recompute each cell's
     element-wise mean via posexplode/groupBy (no UDF, no driver-side
@@ -322,103 +335,62 @@ def ivf_train_centroids(
     return cents
 
 
+def _ivf_search(ranks: DataFrame, nprobe: int) -> DataFrame:
+    """Cell-local exact search over ``_centroid_ranks`` output: corpus
+    vectors sit in their nearest cell only; each of the first
+    ``ANN_N_QUERIES`` vectors probes its ``nprobe`` nearest cells and keeps
+    its top-``ANN_K`` by cosine."""
+    assigned = ranks.filter(F.col("r") == 1).select(
+        "vec_id", "embedding", F.col("centroid_id").alias("cell")
+    )
+    queries = F.broadcast(
+        ranks.filter((F.col("vec_id") < ANN_N_QUERIES) & (F.col("r") <= nprobe)).select(
+            F.col("vec_id").alias("q_id"),
+            F.col("embedding").alias("q_emb"),
+            F.col("centroid_id").alias("cell"),
+        )
+    )
+    corpus = assigned.select(
+        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb"), "cell"
+    )
+    scored = (
+        queries.join(corpus, "cell")
+        .filter(F.col("q_id") != F.col("c_id"))
+        .select(
+            "q_id",
+            "c_id",
+            F.round(
+                _dot(F.col("q_emb"), F.col("c_emb"))
+                / (_norm(F.col("q_emb")) * _norm(F.col("c_emb"))),
+                6,
+            ).alias("cosine"),
+        )
+    )
+    return _top_k(scored)
+
+
 def ivf_ann_trained(
     spark: SparkSession,
     sf_dir: str,
-    k: int = 3,
-    n_queries: int = 20,
-    nprobe: int = 2,
-    iters: int = 2,
+    nprobe: int = IVF_NPROBE,
+    iters: int = IVF_LLOYD_ITERS,
     emb: DataFrame | None = None,
 ) -> DataFrame:
-    """IVF ANN over TRAINED centroids (Lloyd-iterated) with multi-cell
-    probing — the production IVF configuration. FULLY hash-oracled as of
-    r5: Lloyd means are 6dp fixed-point (see ivf_train_centroids), so the
-    driver checks this against the unrolled-SQL Lloyd oracle
-    (oracles_training.ivf_ann_trained_sql) bit-for-bit. Additionally a
-    recall floor (>= 0.9 at nprobe<=4 on the
-    clustered corpus) is asserted in pytest — on the driver's ISOTROPIC
-    random embeddings no sublinear ANN can reach that (see
-    clustered_embeddings), so the floor is pinned where it is meaningful
-    and the isotropic curve is reported in BENCH.md."""
+    """IVF ANN over TRAINED centroids (``iters`` Lloyd rounds, see
+    ``ivf_train_centroids``) with ``nprobe``-cell probing — the production
+    IVF configuration. Lloyd means are 6dp fixed point, so the result is
+    checked bit-for-bit against the unrolled-SQL oracle
+    (``oracles_training.ivf_ann_trained_sql``). A recall floor on the
+    clustered corpus is asserted in pytest; on the isotropic raw
+    embeddings no sublinear ANN reaches it (see ``clustered_embeddings``)."""
     emb = _emb(spark, sf_dir) if emb is None else emb
     cents = ivf_train_centroids(emb, iters=iters)
-    ranks = _centroid_ranks(emb, cents)
-    assigned = ranks.filter(F.col("r") == 1).select(
-        "vec_id", "embedding", F.col("centroid_id").alias("cell")
-    )
-    queries = F.broadcast(
-        ranks.filter((F.col("vec_id") < n_queries) & (F.col("r") <= nprobe)).select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("centroid_id").alias("cell"),
-        )
-    )
-    corpus = assigned.select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb"), "cell"
-    )
-    scored = (
-        queries.join(corpus, "cell")
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select(
-            "q_id",
-            "c_id",
-            F.round(
-                _dot(F.col("q_emb"), F.col("c_emb"))
-                / (_norm(F.col("q_emb")) * _norm(F.col("c_emb"))),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-    )
+    return _ivf_search(_centroid_ranks(emb, cents), nprobe)
 
 
-def ivf_ann_nprobe(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = 3,
-    n_queries: int = 20,
-    nprobe: int = 2,
-) -> DataFrame:
-    """IVF ANN with multi-cell probing: each query searches its ``nprobe``
-    nearest cells (corpus vectors stay in exactly one cell). Recall rises
-    toward exact as nprobe -> K while cost stays nprobe/K of the corpus —
-    the standard IVF recall/cost dial; pytest asserts recall(nprobe=2) >=
-    recall(nprobe=1) against the brute-force baseline."""
-    emb = _emb(spark, sf_dir)
-    ranks = _centroid_ranks(emb)
-    assigned = ranks.filter(F.col("r") == 1).select(
-        "vec_id", "embedding", F.col("centroid_id").alias("cell")
-    )
-    queries = F.broadcast(
-        ranks.filter((F.col("vec_id") < n_queries) & (F.col("r") <= nprobe)).select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("q_emb"),
-            F.col("centroid_id").alias("cell"),
-        )
-    )
-    corpus = assigned.select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb"), "cell"
-    )
-    scored = (
-        queries.join(corpus, "cell")
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select(
-            "q_id",
-            "c_id",
-            F.round(
-                _dot(F.col("q_emb"), F.col("c_emb"))
-                / (_norm(F.col("q_emb")) * _norm(F.col("c_emb"))),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-    )
+def ivf_ann_nprobe(spark: SparkSession, sf_dir: str, nprobe: int = IVF_NPROBE) -> DataFrame:
+    """IVF ANN over the stride centroids with multi-cell probing: each
+    query searches its ``nprobe`` nearest cells. Recall rises toward exact
+    as nprobe -> K while cost stays nprobe/K of the corpus; pytest asserts
+    recall(nprobe=2) >= recall(nprobe=1) against the brute-force baseline."""
+    return _ivf_search(_centroid_ranks(_emb(spark, sf_dir)), nprobe)

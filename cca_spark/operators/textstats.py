@@ -71,7 +71,11 @@ def passes_quality_col():
 
 
 def quality_score_over(docs: DataFrame) -> DataFrame:
-    """DataFrame-level quality heuristics over any (doc_id, text) table."""
+    """DataFrame-level quality heuristics over any (doc_id, text) table.
+    ``punct_ratio`` of an empty text is NULL (``try_divide``), as in the
+    DuckDB oracle; a plain division raises DIVIDE_BY_ZERO under ANSI mode.
+    The word count is at least 1 for any non-NULL text, so the other
+    ratios cannot divide by zero."""
     n_chars = F.length("text")
     n_punct = F.size(F.regexp_extract_all(F.col("text"), F.lit(r"[^\w\s]"), 0))
     n_words = F.size(F.split(F.trim(F.col("text")), r"\s+"))
@@ -80,7 +84,9 @@ def quality_score_over(docs: DataFrame) -> DataFrame:
         "doc_id",
         n_chars.cast("int").alias("n_chars"),
         n_words.cast("int").alias("n_words"),
-        F.round(n_punct.cast("double") / n_chars.cast("double"), 6).alias("punct_ratio"),
+        F.round(F.try_divide(n_punct.cast("double"), n_chars.cast("double")), 6).alias(
+            "punct_ratio"
+        ),
         F.round(n_stop.cast("double") / n_words.cast("double"), 6).alias("stopword_ratio"),
         F.round(n_chars.cast("double") / n_words.cast("double"), 6).alias("mean_word_len"),
         passes_quality_col().alias("passes_quality"),
@@ -105,35 +111,35 @@ def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def doc_fingerprint(spark: SparkSession, sf_dir: str, shingle_k: int = 3) -> DataFrame:
-    """Winnowing-style fingerprint: min MD5 over k-token shingles.
+def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Winnowing-style fingerprint: min MD5 over the dedup family's
+    ``SHINGLE_K``-token shingles (``dedup.corpus_shingles``), so a
+    fingerprint and a near-dup signature read the same spans.
 
     The rolling-hash analog of the reference's subtree digests
     (fast_match_trees, /root/reference/src/ast/analyzing/engine/
     treediff.ml:369-460): identical fingerprints => near-certain overlap.
     Built from explode + groupBy min — fully distributed, no UDF.
     """
-    docs = _read_docs(spark, sf_dir).select("doc_id", "text")
-    toks = docs.select("doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("toks"))
-    shingles = toks.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.greatest(F.size("toks") - shingle_k, F.lit(0))),
-                lambda i: F.concat_ws(" ", F.slice(F.col("toks"), i + 1, shingle_k)),
-            )
-        ).alias("shingle"),
-    ).filter(F.col("shingle") != "")
+    from cca_spark.operators.dedup import corpus_shingles
+
+    shingles = corpus_shingles(_read_docs(spark, sf_dir))
     return shingles.groupBy("doc_id").agg(
         F.min(F.md5("shingle")).alias("fingerprint"),
         F.countDistinct("shingle").alias("n_shingles"),
     )
 
 
-def length_histogram(spark: SparkSession, sf_dir: str, bucket_width: int = 20) -> DataFrame:
+# token-count histogram bucket width: narrower buckets resolve the
+# distribution better but emit more rows
+LENGTH_BUCKET_WIDTH = 20
+
+
+def length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Histogram binning: token-count distribution over documents in
-    fixed-width buckets — the corpus-profiling aggregate a training-data
-    pipeline runs before filtering (pairs with quality_score thresholds).
+    ``LENGTH_BUCKET_WIDTH``-token buckets — the corpus-profiling aggregate
+    a training-data pipeline runs before filtering (pairs with
+    quality_score thresholds).
 
     One scan, one narrow groupBy; bucket key is integer arithmetic
     (floor(n_tokens / width)), so the shuffle key is dense and tiny."""
@@ -142,13 +148,13 @@ def length_histogram(spark: SparkSession, sf_dir: str, bucket_width: int = 20) -
         F.size(F.split(F.trim(F.col("text")), r"\s+")).alias("n_tokens")
     )
     return (
-        toks.select((F.floor(F.col("n_tokens") / bucket_width)).cast("int").alias("bucket"))
+        toks.select((F.floor(F.col("n_tokens") / LENGTH_BUCKET_WIDTH)).cast("int").alias("bucket"))
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n_docs"))
         .select(
             "bucket",
-            (F.col("bucket") * bucket_width).alias("bucket_lo"),
-            ((F.col("bucket") + 1) * bucket_width - 1).alias("bucket_hi"),
+            (F.col("bucket") * LENGTH_BUCKET_WIDTH).alias("bucket_lo"),
+            ((F.col("bucket") + 1) * LENGTH_BUCKET_WIDTH - 1).alias("bucket_hi"),
             "n_docs",
         )
     )
@@ -159,6 +165,10 @@ def length_histogram(spark: SparkSession, sf_dir: str, bucket_width: int = 20) -
 BM25_QUERY_TERMS = ("join", "hash", "scan", "window", "stream")
 BM25_K1 = 1.2
 BM25_B = 0.75
+# docs returned by bm25_retrieval / terms kept per doc by tfidf: both are
+# report sizes, and the rank windows that follow are bounded by them
+BM25_TOP_K = 20
+TFIDF_TOP_K = 3
 
 
 # THE retrieval tokenization: single-space split, empty tokens dropped.
@@ -168,12 +178,12 @@ BM25_B = 0.75
 RETRIEVAL_DELIM = " "
 
 
-def retrieval_tokens_col(col: str = "text"):
-    """The tokenization contract as a single array-column expression.
-    Every operator that counts, slices, or explodes retrieval tokens must
-    build from THIS (not a re-typed copy) — editing one inline copy used
-    to fork the contract for only some operators."""
-    return F.filter(F.split(F.col(col), RETRIEVAL_DELIM), lambda t: t != "")
+def retrieval_tokens_col():
+    """The tokenization contract over the ``text`` column as a single
+    array-column expression. Every operator that counts, slices, or
+    explodes retrieval tokens must build from THIS (not a re-typed copy),
+    so the contract cannot fork between operators."""
+    return F.filter(F.split(F.col("text"), RETRIEVAL_DELIM), lambda t: t != "")
 
 
 def _doc_tokens_over(docs: DataFrame) -> DataFrame:
@@ -186,9 +196,10 @@ def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _doc_tokens_over(_read_docs(spark, sf_dir))
 
 
-def tfidf_top_terms_over(docs: DataFrame, k: int = 3) -> DataFrame:
-    """DataFrame-level TF-IDF top-k over any (doc_id, text) table — the
-    composable form (see ``tfidf_top_terms`` for the plan rationale)."""
+def tfidf_top_terms_over(docs: DataFrame) -> DataFrame:
+    """DataFrame-level TF-IDF top-``TFIDF_TOP_K`` over any (doc_id, text)
+    table — the composable form (see ``tfidf_top_terms`` for the plan
+    rationale)."""
     from pyspark.sql import Window
 
     from pyspark import StorageLevel
@@ -228,13 +239,13 @@ def tfidf_top_terms_over(docs: DataFrame, k: int = 3) -> DataFrame:
     w = Window.partitionBy("doc_id").orderBy(F.desc("tfidf"), F.asc("token"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TFIDF_TOP_K)
         .select("doc_id", "token", "tf", "tfidf", "rank")
     )
 
 
-def tfidf_top_terms(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
-    """TF-IDF top-k terms per document — the standard corpus-indexing /
+def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TF-IDF top-``TFIDF_TOP_K`` terms per document — the standard corpus-indexing /
     keyword-extraction operator of a training-data pipeline.
 
     Relational shape for 10^12 docs: explode -> (doc, term) counts (one
@@ -250,12 +261,12 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFrame:
     ranking. N arrives via a broadcast scalar — the corpus-sized stream
     shuffles exactly once. Scores round to 6dp BEFORE ranking (repo float
     discipline) with (score desc, token asc) deterministic ties."""
-    return tfidf_top_terms_over(_read_docs(spark, sf_dir), k)
+    return tfidf_top_terms_over(_read_docs(spark, sf_dir))
 
 
-def bm25_retrieval(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
-    """BM25 document retrieval for a fixed term query — the ranking
-    operator behind corpus search / hard-negative mining.
+def bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BM25 top-``BM25_TOP_K`` document retrieval for a fixed term query —
+    the ranking operator behind corpus search / hard-negative mining.
 
     score(d) = sum_t idf(t) * tf * (k1+1) / (tf + k1 * (1 - b + b*dl/avgdl))
     with idf(t) = ln(1 + (N - df + 0.5)/(df + 0.5)). Query-term stats are
@@ -340,6 +351,6 @@ def bm25_retrieval(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
     # that window is bounded by k by construction, never corpus-sized.
     # Determinism: scores are 6dp-rounded and ties break on doc_id, so the
     # limit boundary is stable across partitionings.
-    topk = scored.orderBy(F.desc("bm25"), F.asc("doc_id")).limit(k)
+    topk = scored.orderBy(F.desc("bm25"), F.asc("doc_id")).limit(BM25_TOP_K)
     w = Window.orderBy(F.desc("bm25"), F.asc("doc_id"))
     return topk.withColumn("rank", F.row_number().over(w).cast("int"))

@@ -146,8 +146,10 @@ WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
 """
 
 
-def sessionize_events_sql(gap_minutes: int = 30) -> str:
-    gap_us = gap_minutes * 60 * 1_000_000
+def sessionize_events_sql() -> str:
+    from cca_spark.operators.relational import SESSION_GAP_MINUTES
+
+    gap_us = SESSION_GAP_MINUTES * 60 * 1_000_000
     return f"""
 SELECT user_id, session_seq, count(*) AS n_events,
   count(DISTINCT event_type) AS n_event_types
@@ -236,12 +238,14 @@ SELECT c_custkey, c_name, round(c_acctbal, 2) AS c_acctbal FROM merged
 """
 
 
-def group_count_having_sql(sf: str, min_extra: int = 5) -> str:
+def group_count_having_sql(sf: str) -> str:
+    from cca_spark.operators.delta import MIN_FACTS_PER_CONV
+
     return oracles.with_routed(
         sf,
         f"""
 SELECT conv_id, count(*) AS n_facts FROM routed
-GROUP BY conv_id HAVING count(*) >= {min_extra}
+GROUP BY conv_id HAVING count(*) >= {MIN_FACTS_PER_CONV}
 """,
     )
 
@@ -321,14 +325,14 @@ FROM routed GROUP BY conv_id, rule_id
     )
 
 
-def similar_turn_pairs_sql(
-    sf: str, threshold: float = 0.5, len_gate: float | None = None
-) -> str:
-    if len_gate is None:  # lossless default, mirrors the operator
-        len_gate = 1.0 - threshold
-    return oracles.with_transcripts(
-        sf,
-        f"""
+def similar_turn_pairs_select() -> str:
+    """The similar_turn_pairs oracle over a transcripts relation ``t``."""
+    from cca_spark.operators.relational import (
+        SIMILAR_TURN_LEN_GATE,
+        SIMILAR_TURN_THRESHOLD,
+    )
+
+    return f"""
 SELECT conv_id, turn_idx, next_turn_idx, role,
   round(1.0 - levenshtein(text, next_text)
         / cast(greatest(length(text), length(next_text)) AS double), 6) AS sim
@@ -341,11 +345,14 @@ FROM (
 )
 WHERE next_turn_idx IS NOT NULL AND role = next_role
   AND abs(length(text) - length(next_text))
-      / cast(greatest(length(text), length(next_text)) AS double) <= {len_gate}
+      / cast(greatest(length(text), length(next_text)) AS double) <= {SIMILAR_TURN_LEN_GATE}
   AND round(1.0 - levenshtein(text, next_text)
-        / cast(greatest(length(text), length(next_text)) AS double), 6) >= {threshold}
-""",
-    )
+        / cast(greatest(length(text), length(next_text)) AS double), 6) >= {SIMILAR_TURN_THRESHOLD}
+"""
+
+
+def similar_turn_pairs_sql(sf: str) -> str:
+    return oracles.with_transcripts(sf, similar_turn_pairs_select())
 
 
 def snapshot_mapping_sql() -> str:
@@ -453,12 +460,14 @@ SELECT doc_id, path, arg AS value FROM delta WHERE op = 'insert'
 """
 
 
-def skew_salt_plan_sql(sf: str, target: int = 500) -> str:
+def skew_salt_plan_sql(sf: str) -> str:
+    from cca_spark.operators.route import SALT_TARGET_ROWS_PER_TASK
+
     return oracles.with_transcripts(
         sf,
         f"""
 SELECT conv_id, count(*) AS n_turns,
-  cast(greatest(1, floor((count(*) - 1) / {target}.0) + 1) AS int) AS n_salts
+  cast(greatest(1, floor((count(*) - 1) / {SALT_TARGET_ROWS_PER_TASK}.0) + 1) AS int) AS n_salts
 FROM t GROUP BY conv_id
 """,
     )

@@ -6,14 +6,30 @@ from __future__ import annotations
 
 from cca_spark.operators.dedup import (
     LSH_BUCKET_CAP,
+    LSH_JACCARD_THRESHOLD,
     N_BANDS,
     N_MINHASHES,
     SHINGLE_K,
+    SKETCH_BUCKET_CAP,
     TWIN_SUFFIX,
     TWIN_SUFFIX2,
 )
-from cca_spark.operators.similarity import LSH_TABLE_DIMS
-from cca_spark.operators.textstats import EN_STOPWORDS, TOKEN_RE
+from cca_spark.operators.similarity import (
+    ANN_K,
+    ANN_N_QUERIES,
+    EMBEDDING_DUP_THRESHOLD,
+    IVF_CENTROID_STRIDE,
+    IVF_LLOYD_ITERS,
+    IVF_NPROBE,
+    LSH_TABLE_DIMS,
+    N_IVF_CENTROIDS,
+)
+from cca_spark.operators.textstats import (
+    EN_STOPWORDS,
+    LENGTH_BUCKET_WIDTH,
+    TFIDF_TOP_K,
+    TOKEN_RE,
+)
 
 STOPWORD_RE = r"\b(" + "|".join(EN_STOPWORDS) + r")\b"
 
@@ -153,9 +169,7 @@ JOIN sizes nb ON nb.doc_id = i.doc_b
 
 
 def minhash_lsh_pairs_sql(
-    corpus_cte: str = CORPUS_CTE,
-    threshold: float = 0.5,
-    bucket_cap: int = LSH_BUCKET_CAP,
+    corpus_cte: str = CORPUS_CTE, bucket_cap: int = LSH_BUCKET_CAP
 ) -> str:
     # bucket_stats + the (bucket_n <= cap OR a = hub) predicate mirror the
     # Spark-side dense-bucket bound (dedup.lsh_verified_pairs): oversized
@@ -180,7 +194,7 @@ cands AS (
   WHERE s.bucket_n <= {bucket_cap} OR a.doc_id = s.bucket_hub
 ),
 {JACCARD_TAIL.strip().rstrip()}
-WHERE round(i.n_inter / cast(na.n_sh + nb.n_sh - i.n_inter AS double), 6) >= {threshold}
+WHERE round(i.n_inter / cast(na.n_sh + nb.n_sh - i.n_inter AS double), 6) >= {LSH_JACCARD_THRESHOLD}
 """
 
 
@@ -213,19 +227,23 @@ def _cosine(a: str, b: str) -> str:
     return f"round({dot} / ({na} * {nb}), 6)"
 
 
-def brute_force_topk_sql(k: int = 3, n_queries: int = 20) -> str:
+# the ANN_K best rows per query of a scored(q_id, c_id, cosine) CTE
+_ANN_TOP_K_SELECT = f"""
+SELECT q_id, c_id, cosine, cast(rank AS int) AS rank FROM (
+  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id ASC) AS rank
+  FROM scored
+) WHERE rank <= {ANN_K}
+"""
+
+
+def brute_force_topk_sql() -> str:
     return f"""
 WITH scored AS (
   SELECT q.vec_id AS q_id, c.vec_id AS c_id,
     {_cosine('q.embedding', 'c.embedding')} AS cosine
   FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-  WHERE q.vec_id < {n_queries}
-)
-SELECT q_id, c_id, cosine, cast(rank AS int) AS rank FROM (
-  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id ASC) AS rank
-  FROM scored
-) WHERE rank <= {k}
-"""
+  WHERE q.vec_id < {ANN_N_QUERIES}
+)""" + _ANN_TOP_K_SELECT
 
 
 def _table_bucket_sql(col: str, dims: list[int]) -> str:
@@ -235,21 +253,21 @@ def _table_bucket_sql(col: str, dims: list[int]) -> str:
     )
 
 
-def _banded_cte(name: str, src: str = "embeddings", where: str = "") -> str:
-    """(vec_id, t, bucket) long form, one SELECT per LSH table."""
+def _banded_cte(name: str) -> str:
+    """(vec_id, t, bucket) long form of the embeddings, one SELECT per LSH table."""
     parts = [
         f"SELECT vec_id, {t} AS t, {_table_bucket_sql('embedding', dims)} AS bucket "
-        f"FROM {src}{where}"
+        "FROM embeddings"
         for t, dims in enumerate(LSH_TABLE_DIMS)
     ]
     body = "\n  UNION ALL\n  ".join(parts)
     return f"{name} AS (\n  {body}\n)"
 
 
-def lsh_bucketed_ann_sql(k: int = 3, n_queries: int = 20) -> str:
+def lsh_bucketed_ann_sql() -> str:
     return f"""
 WITH {_banded_cte('cb')},
-qb AS (SELECT * FROM cb WHERE vec_id < {n_queries}),
+qb AS (SELECT * FROM cb WHERE vec_id < {ANN_N_QUERIES}),
 cands AS (
   SELECT DISTINCT q.vec_id AS q_id, c.vec_id AS c_id
   FROM qb q JOIN cb c ON q.t = c.t AND q.bucket = c.bucket AND q.vec_id <> c.vec_id
@@ -259,15 +277,10 @@ scored AS (
   FROM cands cd
   JOIN embeddings qe ON qe.vec_id = cd.q_id
   JOIN embeddings ce ON ce.vec_id = cd.c_id
-)
-SELECT q_id, c_id, cosine, cast(rank AS int) AS rank FROM (
-  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id ASC) AS rank
-  FROM scored
-) WHERE rank <= {k}
-"""
+)""" + _ANN_TOP_K_SELECT
 
 
-def embedding_near_dup_sql(threshold: float) -> str:
+def embedding_near_dup_sql() -> str:
     return f"""
 WITH {_banded_cte('banded')},
 cands AS (
@@ -280,13 +293,14 @@ SELECT cd.doc_a, cd.doc_b,
 FROM cands cd
 JOIN embeddings ea ON ea.vec_id = cd.doc_a
 JOIN embeddings eb ON eb.vec_id = cd.doc_b
-WHERE {_cosine('ea.embedding', 'eb.embedding')} >= {threshold}
+WHERE {_cosine('ea.embedding', 'eb.embedding')} >= {EMBEDDING_DUP_THRESHOLD}
 """
 
 
-def tfidf_top_terms_sql(k: int = 3) -> str:
+def tfidf_top_terms_sql() -> str:
     """Mirror of textstats.tfidf_top_terms: same tokenization, same 6dp
-    round BEFORE ranking, same (score desc, token asc) tie-break."""
+    round BEFORE ranking, same (score desc, token asc) tie-break, same
+    ``TFIDF_TOP_K``."""
     return f"""
 WITH toks AS (
   SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
@@ -306,12 +320,12 @@ SELECT doc_id, token, tf, tfidf, cast(rank AS int) AS rank FROM (
   SELECT *, row_number() OVER (
     PARTITION BY doc_id ORDER BY tfidf DESC, token ASC) AS rank
   FROM scored
-) WHERE rank <= {k}
+) WHERE rank <= {TFIDF_TOP_K}
 """
 
 
-def bm25_retrieval_sql(k: int = 20) -> str:
-    from cca_spark.operators.textstats import BM25_B, BM25_K1, BM25_QUERY_TERMS
+def bm25_retrieval_sql() -> str:
+    from cca_spark.operators.textstats import BM25_B, BM25_K1, BM25_QUERY_TERMS, BM25_TOP_K
 
     terms = ", ".join(f"('{t}')" for t in BM25_QUERY_TERMS)
     return f"""
@@ -344,7 +358,7 @@ scored AS (
 )
 SELECT doc_id, bm25, n_matched_terms, cast(rank AS int) AS rank FROM (
   SELECT *, row_number() OVER (ORDER BY bm25 DESC, doc_id ASC) AS rank FROM scored
-) WHERE rank <= {k}
+) WHERE rank <= {BM25_TOP_K}
 """
 
 
@@ -420,66 +434,61 @@ FROM wav_stats
 """
 
 
-def frame_sample_sql(stride: int = 64) -> str:
+def frame_sample_sql() -> str:
+    from cca_spark.operators.multimodal import FRAME_STRIDE
+
     return f"""
 SELECT doc_id, cast(frame_idx AS int) AS frame_idx,
-  md5(substring(text, frame_idx * {stride} + 1, {stride})) AS frame_md5
+  md5(substring(text, frame_idx * {FRAME_STRIDE} + 1, {FRAME_STRIDE})) AS frame_md5
 FROM (
   SELECT doc_id, text,
-    unnest(generate_series(0, cast(floor((length(text) - 1) / {stride}) AS int))) AS frame_idx
+    unnest(generate_series(0, cast(floor((length(text) - 1) / {FRAME_STRIDE}) AS int))) AS frame_idx
   FROM documents
 )
 """
 
 
-def ivf_ann_sql(k: int = 3, n_queries: int = 20, nprobe: int = 1) -> str:
-    from cca_spark.operators.similarity import IVF_CENTROID_STRIDE, N_IVF_CENTROIDS
-
-    top = N_IVF_CENTROIDS * IVF_CENTROID_STRIDE
-    return f"""
-WITH cents AS (
+# the stride-seeded centroid table (similarity._ivf_centroids)
+_STRIDE_CENTS = f"""
   SELECT vec_id AS centroid_id, embedding AS cent_emb FROM embeddings
-  WHERE vec_id % {IVF_CENTROID_STRIDE} = 0 AND vec_id < {top}),
-ranks AS (
+  WHERE vec_id % {IVF_CENTROID_STRIDE} = 0 AND vec_id < {N_IVF_CENTROIDS * IVF_CENTROID_STRIDE})"""
+
+
+def _ivf_probe_sql(cents: str, nprobe: int) -> str:
+    """Cell assignment against centroid table ``cents``, ``nprobe``-cell
+    query probes and the cell-local top-``ANN_K`` rerank."""
+    return f"""ranks AS (
   SELECT e.vec_id, e.embedding, c.centroid_id,
     row_number() OVER (
       PARTITION BY e.vec_id
       ORDER BY {_cosine('e.embedding', 'c.cent_emb')} DESC, c.centroid_id ASC
     ) AS r
-  FROM embeddings e CROSS JOIN cents c),
+  FROM embeddings e CROSS JOIN {cents} c),
 assigned AS (
   SELECT vec_id, embedding, centroid_id AS cell FROM ranks WHERE r = 1),
 qprobe AS (
   SELECT vec_id, embedding, centroid_id AS cell FROM ranks
-  WHERE r <= {nprobe} AND vec_id < {n_queries}),
+  WHERE r <= {nprobe} AND vec_id < {ANN_N_QUERIES}),
 scored AS (
   SELECT q.vec_id AS q_id, c.vec_id AS c_id,
     {_cosine('q.embedding', 'c.embedding')} AS cosine
   FROM qprobe q JOIN assigned c ON q.cell = c.cell AND q.vec_id <> c.vec_id
-)
-SELECT q_id, c_id, cosine, cast(rank AS int) AS rank FROM (
-  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id ASC) AS rank
-  FROM scored
-) WHERE rank <= {k}
-"""
+)""" + _ANN_TOP_K_SELECT
 
 
-def ivf_ann_trained_sql(
-    k: int = 3, n_queries: int = 20, nprobe: int = 2, iters: int = 2
-) -> str:
-    """Unrolled-Lloyd oracle for similarity.ivf_ann_trained: ``iters``
+def ivf_ann_sql(nprobe: int = 1) -> str:
+    return f"""
+WITH cents AS ({_STRIDE_CENTS},
+{_ivf_probe_sql('cents', nprobe)}"""
+
+
+def ivf_ann_trained_sql() -> str:
+    """Unrolled-Lloyd oracle for similarity.ivf_ann_trained: ``IVF_LLOYD_ITERS``
     assign/mean rounds from the stride seed, each mean rounded to 6dp
     fixed point (mirroring the Spark loop bit-for-bit), then the standard
-    nprobe probe + cell-local exact rerank."""
-    from cca_spark.operators.similarity import IVF_CENTROID_STRIDE, N_IVF_CENTROIDS
-
-    top = N_IVF_CENTROIDS * IVF_CENTROID_STRIDE
-    ctes = [
-        f"""cents0 AS (
-  SELECT vec_id AS centroid_id, embedding AS cent_emb FROM embeddings
-  WHERE vec_id % {IVF_CENTROID_STRIDE} = 0 AND vec_id < {top})"""
-    ]
-    for i in range(iters):
+    ``IVF_NPROBE`` probe + cell-local exact rerank."""
+    ctes = [f"cents0 AS ({_STRIDE_CENTS}"]
+    for i in range(IVF_LLOYD_ITERS):
         ctes.append(
             f"""assigned{i} AS (
   SELECT vec_id, embedding, centroid_id AS cell FROM (
@@ -501,31 +510,8 @@ cents{i + 1} AS (
   SELECT cell AS centroid_id, list(m ORDER BY pos) AS cent_emb
   FROM means{i} GROUP BY cell)"""
         )
-    final = f"""ranks AS (
-  SELECT e.vec_id, e.embedding, c.centroid_id,
-    row_number() OVER (
-      PARTITION BY e.vec_id
-      ORDER BY {_cosine('e.embedding', 'c.cent_emb')} DESC, c.centroid_id ASC
-    ) AS r
-  FROM embeddings e CROSS JOIN cents{iters} c),
-assigned AS (
-  SELECT vec_id, embedding, centroid_id AS cell FROM ranks WHERE r = 1),
-qprobe AS (
-  SELECT vec_id, embedding, centroid_id AS cell FROM ranks
-  WHERE r <= {nprobe} AND vec_id < {n_queries}),
-scored AS (
-  SELECT q.vec_id AS q_id, c.vec_id AS c_id,
-    {_cosine('q.embedding', 'c.embedding')} AS cosine
-  FROM qprobe q JOIN assigned c ON q.cell = c.cell AND q.vec_id <> c.vec_id
-)"""
-    body = ",\n".join(ctes + [final])
-    return f"""
-WITH {body}
-SELECT q_id, c_id, cosine, cast(rank AS int) AS rank FROM (
-  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id ASC) AS rank
-  FROM scored
-) WHERE rank <= {k}
-"""
+    ctes.append(_ivf_probe_sql(f"cents{IVF_LLOYD_ITERS}", IVF_NPROBE))
+    return "\nWITH " + ",\n".join(ctes)
 
 
 def simhash64_near_dup_pairs_sql() -> str:
@@ -678,12 +664,12 @@ FROM documents d LEFT JOIN hits h USING (doc_id)
 """
 
 
-def repetition_filter_sql(
-    max_dup_token_ratio: float = 0.4, max_dup_bigram_ratio: float = 0.25
-) -> str:
+def repetition_filter_sql() -> str:
     """Oracle for decontam.repetition_filter (bigram window == slice
     width 2, so the bigram list is t[i:i+1] over range(1, len(t)));
     retrieval tokenization, same as the decontaminate oracle."""
+    from cca_spark.operators.decontam import MAX_DUP_BIGRAM_RATIO, MAX_DUP_TOKEN_RATIO
+
     return f"""
 WITH toks AS (
   SELECT doc_id, text, list_filter(string_split(text, ' '), tk -> tk <> '') AS t
@@ -710,8 +696,8 @@ base AS (
   FROM toks k LEFT JOIN bigs b ON k.doc_id = b.doc_id
 )
 SELECT doc_id, n_tokens, dup_token_ratio, dup_bigram_ratio,
-  (dup_token_ratio <= {max_dup_token_ratio}
-   AND dup_bigram_ratio <= {max_dup_bigram_ratio}) AS passes_repetition
+  (dup_token_ratio <= {MAX_DUP_TOKEN_RATIO}
+   AND dup_bigram_ratio <= {MAX_DUP_BIGRAM_RATIO}) AS passes_repetition
 FROM base
 """
 
@@ -747,17 +733,15 @@ FROM per_doc
 """
 
 
-def pack_token_budget_sql(budget: int | None = None, shards: int | None = None) -> str:
+def pack_token_budget_sql() -> str:
     """Oracle for corpus_prep.pack_token_budget: shard-local cumulative
     token counts, integer-exact bin arithmetic (// and %)."""
     from cca_spark.operators.corpus_prep import PACK_BUDGET, PACK_SHARDS
 
-    budget = PACK_BUDGET if budget is None else budget
-    shards = PACK_SHARDS if shards is None else shards
     return f"""
 WITH sized AS (
   SELECT doc_id,
-    cast(((doc_id % {shards}) + {shards}) % {shards} AS int) AS shard,
+    cast(((doc_id % {PACK_SHARDS}) + {PACK_SHARDS}) % {PACK_SHARDS} AS int) AS shard,
     cast(len(list_filter(string_split(text, ' '), t -> t <> '')) AS bigint)
       AS n_tokens
   FROM documents
@@ -771,40 +755,35 @@ cum AS (
   FROM sized
 )
 SELECT doc_id, shard, n_tokens,
-  cast(cum_before // {budget} AS int) AS bin_id,
-  cast(cum_before % {budget} AS bigint) AS offset_in_bin,
-  (n_tokens > {budget}) AS oversize
+  cast(cum_before // {PACK_BUDGET} AS int) AS bin_id,
+  cast(cum_before % {PACK_BUDGET} AS bigint) AS offset_in_bin,
+  (n_tokens > {PACK_BUDGET}) AS oversize
 FROM cum
 """
 
 
-def length_histogram_sql(bucket_width: int = 20) -> str:
+def length_histogram_sql() -> str:
     return f"""
 WITH toks AS (
   SELECT len(string_split_regex(trim(text), '[ \\t\\n\\x0b\\f\\r]+')) AS n_tokens FROM documents),
-b AS (SELECT cast(floor(n_tokens / {bucket_width}.0) AS int) AS bucket FROM toks)
+b AS (SELECT cast(floor(n_tokens / {LENGTH_BUCKET_WIDTH}.0) AS int) AS bucket FROM toks)
 SELECT bucket,
-  cast(bucket * {bucket_width} AS bigint) AS bucket_lo,
-  cast((bucket + 1) * {bucket_width} - 1 AS bigint) AS bucket_hi,
+  cast(bucket * {LENGTH_BUCKET_WIDTH} AS bigint) AS bucket_lo,
+  cast((bucket + 1) * {LENGTH_BUCKET_WIDTH} - 1 AS bigint) AS bucket_hi,
   count(*) AS n_docs
 FROM b GROUP BY bucket
 """
 
 def ngram_containment_sql(
-    corpus_cte: str = CORPUS_CTE, bucket_cap: int | None = None
+    corpus_cte: str = CORPUS_CTE, bucket_cap: int = SKETCH_BUCKET_CAP
 ) -> str:
     """Oracle for dedup.ngram_containment_pairs: identical twin corpus,
     identical bottom-k sketch blocking (row_number over md5(shingle) per
     doc — md5 hex strings are a shared total order, so both engines pick
     the same k sketch hashes), identical hub-star bucket cap, exact
     intersection verify."""
-    from cca_spark.operators.dedup import (
-        BOTTOM_K_SKETCH,
-        CONTAINMENT_THRESHOLD,
-        SKETCH_BUCKET_CAP,
-    )
+    from cca_spark.operators.dedup import BOTTOM_K_SKETCH, CONTAINMENT_THRESHOLD
 
-    cap = SKETCH_BUCKET_CAP if bucket_cap is None else bucket_cap
     return f"""
 WITH {corpus_cte},
 {SHINGLES_CTE},
@@ -822,7 +801,7 @@ stats AS (
 ),
 lhs AS (
   SELECT bk.doc_id, bk.h FROM bk JOIN stats USING (h)
-  WHERE stats.bucket_n <= {cap} OR bk.doc_id = stats.bucket_hub
+  WHERE stats.bucket_n <= {bucket_cap} OR bk.doc_id = stats.bucket_hub
 ),
 cands AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -933,40 +912,37 @@ FROM q JOIN canon can ON q.cluster_id = can.cluster_id
 """
 
 
-def corpus_shard_shuffle_sql(shards: int | None = None, seed: str | None = None) -> str:
+def corpus_shard_shuffle_sql() -> str:
     """Oracle for corpus_prep.corpus_shard_shuffle: the same md5-prefix
     60-bit key (DuckDB parses '0x…' string casts; Spark uses conv — both
     yield the identical bigint), the same mod-shard and per-shard rank.
     The key is 60-bit hence non-negative, so plain % equals pmod."""
     from cca_spark.operators.corpus_prep import SHUFFLE_SEED, SHUFFLE_SHARDS
 
-    shards = SHUFFLE_SHARDS if shards is None else shards
-    seed = SHUFFLE_SEED if seed is None else seed
     return f"""
 WITH keyed AS (
   SELECT doc_id,
-    cast(concat('0x', substr(md5(cast(doc_id AS varchar) || ':{seed}'), 1, 15))
+    cast(concat('0x', substr(md5(cast(doc_id AS varchar) || ':{SHUFFLE_SEED}'), 1, 15))
          AS bigint) AS shuffle_key
   FROM documents
 )
 SELECT doc_id,
-  cast(shuffle_key % {shards} AS int) AS shard,
+  cast(shuffle_key % {SHUFFLE_SHARDS} AS int) AS shard,
   shuffle_key,
   cast(row_number() OVER (
-    PARTITION BY shuffle_key % {shards} ORDER BY shuffle_key, doc_id
+    PARTITION BY shuffle_key % {SHUFFLE_SHARDS} ORDER BY shuffle_key, doc_id
   ) - 1 AS bigint) AS pos
 FROM keyed
 """
 
 
-def per_source_cap_sql(cap: int | None = None) -> str:
+def per_source_cap_sql() -> str:
     """Oracle for corpus_prep.per_source_cap: the shared quality gate
     (PASSES_QUALITY_SQL — the SQL twin of textstats.passes_quality_col),
     ranked (passes DESC, n_chars DESC, doc_id) per source. Booleans sort
     false<true in both engines, so DESC means passing-first in both."""
     from cca_spark.operators.corpus_prep import PER_SOURCE_CAP
 
-    cap = PER_SOURCE_CAP if cap is None else cap
     return f"""
 WITH ranked AS (
   SELECT doc_id, source,
@@ -979,17 +955,16 @@ WITH ranked AS (
   FROM documents
 )
 SELECT doc_id, source, n_chars, passes_quality, src_rank
-FROM ranked WHERE src_rank <= {cap}
+FROM ranked WHERE src_rank <= {PER_SOURCE_CAP}
 """
 
 
-def vocab_coverage_sql(top: int | None = None) -> str:
+def vocab_coverage_sql() -> str:
     """Oracle for corpus_prep.vocab_coverage: same tokenization
     (space-split, empties dropped), same (cnt DESC, token) total order,
     same one-division-then-round coverage arithmetic over bigint cumsums."""
     from cca_spark.operators.corpus_prep import VOCAB_TOP
 
-    top = VOCAB_TOP if top is None else top
     return f"""
 WITH toks AS (
   SELECT unnest(string_split(text, ' ')) AS token FROM documents
@@ -997,7 +972,7 @@ WITH toks AS (
 tok AS (SELECT token FROM toks WHERE token <> ''),
 freq AS (SELECT token, count(*) AS cnt FROM tok GROUP BY token),
 tot AS (SELECT sum(cnt) AS total FROM freq),
-topv AS (SELECT token, cnt FROM freq ORDER BY cnt DESC, token LIMIT {top})
+topv AS (SELECT token, cnt FROM freq ORDER BY cnt DESC, token LIMIT {VOCAB_TOP})
 SELECT token, cast(cnt AS bigint) AS cnt,
   cast(row_number() OVER (ORDER BY cnt DESC, token) AS int) AS vocab_rank,
   round(cast(sum(cnt) OVER (
@@ -1054,19 +1029,17 @@ GROUP BY s.doc_id
 """
 
 
-def pack_assemble_sql(budget: int | None = None, shards: int | None = None) -> str:
+def pack_assemble_sql() -> str:
     """Oracle for corpus_prep.pack_assemble: the packing CTE is the
     pack_token_budget oracle's arithmetic; assembly is string_agg in
     (offset_in_bin, doc_id) order — the same total order array_sort uses
     on the (offset, doc_id, text) structs Spark-side."""
     from cca_spark.operators.corpus_prep import PACK_BUDGET, PACK_SHARDS
 
-    budget = PACK_BUDGET if budget is None else budget
-    shards = PACK_SHARDS if shards is None else shards
     return f"""
 WITH sized AS (
   SELECT doc_id, text,
-    cast(((doc_id % {shards}) + {shards}) % {shards} AS int) AS shard,
+    cast(((doc_id % {PACK_SHARDS}) + {PACK_SHARDS}) % {PACK_SHARDS} AS int) AS shard,
     cast(len(list_filter(string_split(text, ' '), t -> t <> '')) AS bigint)
       AS n_tokens
   FROM documents
@@ -1081,8 +1054,8 @@ cum AS (
 ),
 assigned AS (
   SELECT doc_id, text, shard, n_tokens,
-    cast(cum_before // {budget} AS int) AS bin_id,
-    cast(cum_before % {budget} AS bigint) AS offset_in_bin
+    cast(cum_before // {PACK_BUDGET} AS int) AS bin_id,
+    cast(cum_before % {PACK_BUDGET} AS bigint) AS offset_in_bin
   FROM cum
 )
 SELECT shard, bin_id,

@@ -19,6 +19,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from cca_spark.transcripts import TRANSCRIPT_DDL
@@ -31,6 +32,21 @@ def stream_transcripts(spark: SparkSession, input_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "4")
         .parquet(input_dir)
     )
+
+
+def _drain_to_memory(df: DataFrame, query_name: str, output_mode: str) -> StreamingQuery:
+    """Run ``df`` over the currently available input (availableNow) into
+    the in-memory table ``query_name`` and wait for it to finish; the
+    finished query is returned for its progress reports."""
+    q = (
+        df.writeStream.format("memory")
+        .queryName(query_name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return q
 
 
 def stream_routed_facts(spark: SparkSession, stream: DataFrame) -> DataFrame:
@@ -168,7 +184,15 @@ def _update_dedup_ttl_state(key, pdfs, state: GroupState):
     )
 
 
-def streaming_dedup_ttl(stream: DataFrame, watermark_delay: str = "1 hour") -> DataFrame:
+# Event-time lateness the watermarked streams tolerate: a longer delay
+# keeps window state alive longer, a shorter one risks dropping late rows.
+# The battery's results do not depend on it: the TTL dedup's input is
+# staged in event-time order and the windowed aggregate runs in complete
+# mode.
+WATERMARK_DELAY = "1 hour"
+
+
+def streaming_dedup_ttl(stream: DataFrame) -> DataFrame:
     """Streaming exact dedup with BOUNDED state: generations are tumbling
     event-time day windows — state key (text_md5, day) — and
     ``EventTimeTimeout`` frees each window's state once the watermark
@@ -196,7 +220,7 @@ def streaming_dedup_ttl(stream: DataFrame, watermark_delay: str = "1 hour") -> D
         F.concat_ws(
             ":", F.col("conv_id"), F.col("turn_idx").cast("string")
         ).alias("doc_key"),
-    ).withWatermark("ts_tz", watermark_delay)
+    ).withWatermark("ts_tz", WATERMARK_DELAY)
     return keyed.groupBy("text_md5", "day").applyInPandasWithState(
         _update_dedup_ttl_state,
         outputStructType=_TTL_OUT_SCHEMA,
@@ -207,7 +231,7 @@ def streaming_dedup_ttl(stream: DataFrame, watermark_delay: str = "1 hour") -> D
 
 
 def run_dedup_ttl_to_memory(
-    spark: SparkSession, input_dir: str, query_name: str = "dedup_ttl_stream"
+    spark: SparkSession, input_dir: str, query_name: str
 ) -> tuple[DataFrame, dict]:
     """Drive the TTL dedup to completion (one file per trigger so the
     watermark advances along event time and evictions actually fire).
@@ -218,15 +242,7 @@ def run_dedup_ttl_to_memory(
         .option("maxFilesPerTrigger", "1")
         .parquet(input_dir)
     )
-    dedup = streaming_dedup_ttl(stream)
-    q = (
-        dedup.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q = _drain_to_memory(streaming_dedup_ttl(stream), query_name, "update")
     removed = 0
     state_rows_final = None
     for p in q.recentProgress:
@@ -241,58 +257,41 @@ def run_dedup_ttl_to_memory(
 
 
 def run_first_seen_dedup_to_memory(
-    spark: SparkSession, input_dir: str, query_name: str = "dedup_stream"
+    spark: SparkSession, input_dir: str, query_name: str
 ) -> DataFrame:
     """Drive the stateful dedup to completion; the memory sink holds one
     update row per (text_md5, microbatch) — min(keeper)/max(n_copies)
     recover each key's final state (both monotone)."""
     stream = stream_transcripts(spark, input_dir)
-    dedup = streaming_first_seen_dedup(stream)
-    q = (
-        dedup.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_to_memory(streaming_first_seen_dedup(stream), query_name, "update")
     return spark.sql(
         f"SELECT text_md5, min(keeper_doc) AS keeper_doc, "
         f"max(n_copies) AS n_copies FROM {query_name} GROUP BY text_md5"
     )
 
 
-def run_stream_to_memory(
-    spark: SparkSession, input_dir: str, query_name: str = "routed_stream"
-) -> DataFrame:
+def run_stream_to_memory(spark: SparkSession, input_dir: str, query_name: str) -> DataFrame:
     """Drive the stream to completion over the currently-available files
     (availableNow) into an in-memory table; returns the result DataFrame."""
     stream = stream_transcripts(spark, input_dir)
-    routed = stream_routed_facts(spark, stream)
-    q = (
-        routed.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_to_memory(stream_routed_facts(spark, stream), query_name, "append")
     return spark.sql(f"SELECT * FROM {query_name}")
 
 
-def stream_windowed_agg_exact(routed: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Watermarked tumbling-window aggregate with exact counts, so the
-    result is oracle-checkable against the batch aggregate."""
+def stream_windowed_agg_exact(routed: DataFrame) -> DataFrame:
+    """Watermarked (``WATERMARK_DELAY``) tumbling-window aggregate with
+    exact counts, so the result is oracle-checkable against the batch
+    aggregate."""
     return (
         routed.withColumn("ts_tz", F.col("ts").cast("timestamp"))
-        .withWatermark("ts_tz", watermark)
+        .withWatermark("ts_tz", WATERMARK_DELAY)
         .groupBy(F.window("ts_tz", "1 day").alias("day_window"), "sink", "tool")
         .agg(F.count("*").alias("n_rows"))
     )
 
 
 def run_windowed_agg_to_memory(
-    spark: SparkSession, input_dir: str, query_name: str = "windowed_stream"
+    spark: SparkSession, input_dir: str, query_name: str
 ) -> DataFrame:
     """Watermarked windowed agg driven to completion. ``complete`` output
     mode: availableNow ends the stream before the watermark would close
@@ -301,15 +300,7 @@ def run_windowed_agg_to_memory(
     claim."""
     stream = stream_transcripts(spark, input_dir)
     routed = stream_routed_facts(spark, stream)
-    agg = stream_windowed_agg_exact(routed)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_to_memory(stream_windowed_agg_exact(routed), query_name, "complete")
     return spark.sql(
         f"SELECT cast(day_window.start AS date) AS day, sink, tool, n_rows "
         f"FROM {query_name}"
@@ -317,22 +308,14 @@ def run_windowed_agg_to_memory(
 
 
 def run_stateful_totals_to_memory(
-    spark: SparkSession, input_dir: str, query_name: str = "stateful_stream"
+    spark: SparkSession, input_dir: str, query_name: str
 ) -> DataFrame:
     """Drive the applyInPandasWithState running counter to completion; the
     memory sink holds one update row per (conv, microbatch) — the final
     per-conversation total is the max (running counts are monotone)."""
     stream = stream_transcripts(spark, input_dir)
     routed = stream_routed_facts(spark, stream)
-    totals = running_conv_state(routed)
-    q = (
-        totals.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_to_memory(running_conv_state(routed), query_name, "update")
     return spark.sql(
         f"SELECT conv_id, max(n_facts_total) AS n_facts "
         f"FROM {query_name} GROUP BY conv_id"

@@ -163,7 +163,7 @@ def production_day_stages(spark, sf: str):
     filtered = chain.quality_lang_filtered(kept_ck)
     stages.append(("quality_lang_filter", filtered))
     filt_ck = filtered.localCheckpoint(eager=True)
-    stages.append(("tfidf_index", chain.build_tfidf_index(filt_ck, k=3)))
+    stages.append(("tfidf_index", chain.build_tfidf_index(filt_ck)))
     scrubbed = chain.repetition_scrubbed(filt_ck)
     stages.append(("repetition_gate_pii_scrub", scrubbed))
     scrub_ck = scrubbed.localCheckpoint(eager=True)

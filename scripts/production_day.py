@@ -226,7 +226,7 @@ def main() -> None:
 
         # ---- stage 5: TF-IDF top-3 index over the filtered corpus
         t0 = time.time()
-        idx = chain.build_tfidf_index(filtered, k=3).localCheckpoint(eager=True)
+        idx = chain.build_tfidf_index(filtered).localCheckpoint(eager=True)
         n_index_rows = idx.count()
         w = time.time() - t0
         n_indexed_docs = idx.select("doc_id").distinct().count()
