@@ -374,7 +374,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return guard_fact_lookup(_routed(spark, sf_dir))
 
     def q_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return SIM.ivf_ann_nprobe(spark, sf_dir, nprobe=2)
+        return SIM.ivf_ann_nprobe(spark, sf_dir, nprobe=SIM.IVF_NPROBE)
 
     from cca_spark.operators import corpus_prep as CP
     from cca_spark.operators import decontam as DC
@@ -499,6 +499,7 @@ def oracle_sql() -> dict[str, str]:
     from cca_spark import oracles_training as OT
     from cca_spark.operators.aggregate import SAMPLE_PER_GROUP, TOP_K_PATTERNS
     from cca_spark.operators.enrich import GUARD_MIN_INSTANCES, GUARD_MIN_SIGNIFICANCE
+    from cca_spark.operators.similarity import IVF_NPROBE
 
     sf = "/root/testdata/sf0.01"
     fact_cols = ", ".join(FACT_OUT_COLS)
@@ -538,7 +539,7 @@ def oracle_sql() -> dict[str, str]:
         # r5: keeper policy as a quality ranking (best member, not min id)
         "dedup_canonical_by_quality": OT.dedup_canonical_by_quality_sql(),
         "dedup_simhash64_banded": OT.simhash64_near_dup_pairs_sql(),
-        "ann_ivf_nprobe": OT.ivf_ann_sql(nprobe=2),
+        "ann_ivf_nprobe": OT.ivf_ann_sql(nprobe=IVF_NPROBE),
         # r5: Lloyd means are 6dp fixed-point inside the training loop, so
         # the trained-IVF ANN is hash-oracle-able (was rows-only in r3/r4)
         "ann_ivf_trained": OT.ivf_ann_trained_sql(),

@@ -151,9 +151,7 @@ def lm_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lm_unigram_logprob_over(_read_docs(spark, sf_dir))
 
 
-def pack_token_budget_over(
-    docs: DataFrame, budget: int = PACK_BUDGET, shards: int = PACK_SHARDS
-) -> DataFrame:
+def pack_token_budget_over(docs: DataFrame, budget: int = PACK_BUDGET) -> DataFrame:
     """Shard-local greedy sequence packing by cumulative token count.
 
     Each doc lands in bin (shard, cum_before div budget) where cum_before
@@ -165,14 +163,16 @@ def pack_token_budget_over(
     budget; ``offset_in_bin`` is the doc's start position within its
     chunk. Docs longer than the budget are flagged oversize (prod
     splits them; flagging keeps the op relational and the contract
-    obvious). The demo shard key is ``pmod(doc_id, shards)`` —
+    obvious). The demo shard key is ``pmod(doc_id, PACK_SHARDS)`` —
     deterministic, dialect-shared, and NON-NEGATIVE even for signed hash
     ids (Spark's ``%`` keeps the dividend's sign, which would silently
-    double the shard count to 2×shards−1 on xxhash64-derived doc_ids, as
-    the production-day chain feeds in); prod would hash."""
+    double the shard count to 2×PACK_SHARDS−1 on xxhash64-derived
+    doc_ids, as the production-day chain feeds in); prod would hash. One
+    fixed shard count keeps the oracle's shard key the same literal; more
+    shards mean smaller per-shard windows but more, emptier bins."""
     sized = docs.select(
         "doc_id",
-        F.pmod(F.col("doc_id"), F.lit(shards)).cast("int").alias("shard"),
+        F.pmod(F.col("doc_id"), F.lit(PACK_SHARDS)).cast("int").alias("shard"),
         F.size(retrieval_tokens_col()).cast("bigint").alias("n_tokens"),
     )
     w = (
@@ -195,9 +195,7 @@ def pack_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pack_token_budget_over(_read_docs(spark, sf_dir))
 
 
-def pack_assemble_over(
-    docs: DataFrame, budget: int = PACK_BUDGET, shards: int = PACK_SHARDS
-) -> DataFrame:
+def pack_assemble_over(docs: DataFrame, budget: int = PACK_BUDGET) -> DataFrame:
     """Materialize the packed TRAINING SEQUENCES from the packing
     assignments — the last step of corpus → batches: per (shard, bin),
     member docs concatenated in stream order. The output carries the
@@ -213,7 +211,7 @@ def pack_assemble_over(
     doc table on doc_id, then ONE groupBy(shard, bin) whose groups are
     budget-bounded; array_sort runs per group over its own members only
     (no window, no global sort)."""
-    packed = pack_token_budget_over(docs, budget=budget, shards=shards)
+    packed = pack_token_budget_over(docs, budget=budget)
     joined = packed.join(docs.select("doc_id", "text"), "doc_id")
     parts = F.array_sort(
         F.collect_list(F.struct("offset_in_bin", "doc_id", "text"))

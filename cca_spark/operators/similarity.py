@@ -286,12 +286,13 @@ def _centroid_ranks(emb: DataFrame, cents: DataFrame | None = None) -> DataFrame
     return scored.withColumn("r", F.row_number().over(w))
 
 
-def ivf_train_centroids(emb: DataFrame, iters: int = IVF_LLOYD_ITERS) -> DataFrame:
+def ivf_train_centroids(emb: DataFrame) -> DataFrame:
     """Trained coarse quantizer: Lloyd iterations expressed relationally —
     assign (broadcast score + argmin window) then recompute each cell's
     element-wise mean via posexplode/groupBy (no UDF, no driver-side
-    vectors). Seeded from the deterministic stride centroids; ``iters``
-    bounded like every other fixpoint in this repo. At 10^12 vectors each
+    vectors). Seeded from the deterministic stride centroids and run for a
+    fixed ``IVF_LLOYD_ITERS`` rounds, bounded like every other fixpoint in
+    this repo. At 10^12 vectors each
     iteration is one broadcast join + one (cell, pos)-keyed aggregation —
     the standard distributed k-means step.
 
@@ -307,7 +308,7 @@ def ivf_train_centroids(emb: DataFrame, iters: int = IVF_LLOYD_ITERS) -> DataFra
     Recall quality additionally pinned in pytest (trained cells beat the
     stride quantizer at equal nprobe)."""
     cents = _ivf_centroids(emb)
-    for _ in range(iters):
+    for _ in range(IVF_LLOYD_ITERS):
         assigned = (
             _centroid_ranks(emb, cents)
             .filter(F.col("r") == 1)
@@ -370,25 +371,21 @@ def _ivf_search(ranks: DataFrame, nprobe: int) -> DataFrame:
 
 
 def ivf_ann_trained(
-    spark: SparkSession,
-    sf_dir: str,
-    nprobe: int = IVF_NPROBE,
-    iters: int = IVF_LLOYD_ITERS,
-    emb: DataFrame | None = None,
+    spark: SparkSession, sf_dir: str, emb: DataFrame | None = None
 ) -> DataFrame:
-    """IVF ANN over TRAINED centroids (``iters`` Lloyd rounds, see
-    ``ivf_train_centroids``) with ``nprobe``-cell probing — the production
-    IVF configuration. Lloyd means are 6dp fixed point, so the result is
+    """IVF ANN over TRAINED centroids (``IVF_LLOYD_ITERS`` Lloyd rounds, see
+    ``ivf_train_centroids``) with ``IVF_NPROBE``-cell probing — the
+    production IVF configuration. Lloyd means are 6dp fixed point, so the result is
     checked bit-for-bit against the unrolled-SQL oracle
     (``oracles_training.ivf_ann_trained_sql``). A recall floor on the
     clustered corpus is asserted in pytest; on the isotropic raw
     embeddings no sublinear ANN reaches it (see ``clustered_embeddings``)."""
     emb = _emb(spark, sf_dir) if emb is None else emb
-    cents = ivf_train_centroids(emb, iters=iters)
-    return _ivf_search(_centroid_ranks(emb, cents), nprobe)
+    cents = ivf_train_centroids(emb)
+    return _ivf_search(_centroid_ranks(emb, cents), IVF_NPROBE)
 
 
-def ivf_ann_nprobe(spark: SparkSession, sf_dir: str, nprobe: int = IVF_NPROBE) -> DataFrame:
+def ivf_ann_nprobe(spark: SparkSession, sf_dir: str, nprobe: int) -> DataFrame:
     """IVF ANN over the stride centroids with multi-cell probing: each
     query searches its ``nprobe`` nearest cells. Recall rises toward exact
     as nprobe -> K while cost stays nprobe/K of the corpus; pytest asserts

@@ -476,7 +476,7 @@ scored AS (
 )""" + _ANN_TOP_K_SELECT
 
 
-def ivf_ann_sql(nprobe: int = 1) -> str:
+def ivf_ann_sql(nprobe: int) -> str:
     return f"""
 WITH cents AS ({_STRIDE_CENTS},
 {_ivf_probe_sql('cents', nprobe)}"""

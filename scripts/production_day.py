@@ -183,7 +183,7 @@ def main() -> None:
 
         # ---- stage 3: transitive near-dup keep-list on the survivors
         t0 = time.time()
-        labels = chain.near_dup_labels(survivors, max_iters=30)
+        labels = chain.near_dup_labels(survivors)
         kept = chain.apply_keep_list(survivors, labels).localCheckpoint(eager=True)
         n_kept = kept.count()
         w = time.time() - t0

@@ -146,10 +146,11 @@ def main() -> None:
     }
     print(json.dumps(report))
 
-    # durable cross-invocation history (review r4): BENCH.md is REGENERATED
-    # by this script, so evidence that lives only as hand-edits dies on the
-    # next run — the history file is the source of truth and this run
-    # appends itself before rendering.
+    # durable cross-invocation history (review r4): this script regenerates
+    # its own marked section of BENCH.md, so evidence that lives only as
+    # hand-edits inside that section dies on the next run — the history
+    # file is the source of truth and this run appends itself before
+    # rendering.
     hist_path = os.path.join(REPO, "BENCH_scaling_history.json")
     try:
         hist = json.load(open(hist_path))
@@ -175,9 +176,10 @@ def main() -> None:
 
     lo = {**lo, "value": rep["pipeline_sec_n"], "routed_turns_per_sec": thr_lo}
     hi = {**hi, "value": rep["pipeline_sec_4n"], "routed_turns_per_sec": thr_hi}
-    _render_bench_md(args, lo, hi, report, rounds, hist)
+    # saved before rendering, so a BENCH.md without the markers loses no run
     with open(os.path.join(REPO, "BENCH_scaling.json"), "w") as f:
         json.dump({"low": lo, "high": hi, "report": report}, f, indent=2)
+    _render_bench_md(args, lo, hi, report, rounds, hist)
 
 
 # BENCH.md holds hand-maintained evidence after this script's section;

@@ -65,6 +65,7 @@ def test_ivf_trained_centroids_recall(spark, sf_dir):
     meaningful 'trained wins, recall >= 0.9' claim is pinned on the
     clustered corpus in test_round3_ops.test_ivf_trained_recall_floor."""
     from cca_spark.operators.similarity import (
+        IVF_NPROBE,
         brute_force_topk,
         ivf_ann_nprobe,
         ivf_ann_trained,
@@ -76,8 +77,8 @@ def test_ivf_trained_centroids_recall(spark, sf_dir):
         got = {(r["q_id"], r["c_id"]) for r in df.collect()}
         return len(got & exact) / len(exact)
 
-    r_stride = recall(ivf_ann_nprobe(spark, sf_dir, nprobe=2))
-    r_trained = recall(ivf_ann_trained(spark, sf_dir, nprobe=2))
+    r_stride = recall(ivf_ann_nprobe(spark, sf_dir, nprobe=IVF_NPROBE))
+    r_trained = recall(ivf_ann_trained(spark, sf_dir))
     assert r_trained >= r_stride - 0.1
     # principled isotropic-data sanity bound: probing nprobe of K cells
     # must at least beat the blind probed-fraction baseline

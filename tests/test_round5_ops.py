@@ -771,14 +771,14 @@ def test_pack_assemble_matches_oracle_and_reassembles(spark, sf_dir):
     assignments = pack_token_budget(spark, sf_dir).toPandas()
     assert got["n_docs"].sum() == len(assignments)
     assert got["bin_tokens"].sum() == assignments["n_tokens"].sum()
-    # hand oracle: 3 docs, one shard, tiny budget -> docs 0,32 pack into
-    # shard 0 (pmod 32); budget 5 puts both in bin 0 (2+2 tokens)
+    # hand oracle: 3 docs, tiny budget -> docs 0,32 pack into shard 0
+    # (pmod PACK_SHARDS = 32); budget 5 puts both in bin 0 (2+2 tokens)
     docs = spark.createDataFrame(
         pd.DataFrame(
             [(0, "a b"), (32, "c d"), (1, "e f")], columns=["doc_id", "text"]
         )
     )
-    out = pack_assemble_over(docs, budget=5, shards=32).toPandas()
+    out = pack_assemble_over(docs, budget=5).toPandas()
     row = out[(out.shard == 0) & (out.bin_id == 0)].iloc[0]
     assert row["n_docs"] == 2
     assert row["seq_md5"] == hashlib.md5(b"a b c d").hexdigest()
