@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cca_spark.session import local_frame
+
 # tiny English stopword set used by the n-gram/heuristic language ID
 EN_STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "for", "on", "with"]
 _STOPWORD_RE = r"\b(" + "|".join(EN_STOPWORDS) + r")\b"
@@ -171,6 +173,11 @@ BM25_TOP_K = 20
 TFIDF_TOP_K = 3
 
 
+def bm25_query_terms_df(spark: SparkSession) -> DataFrame:
+    """The BM25 query as a one-column ``token`` local relation."""
+    return local_frame(spark, [(t,) for t in BM25_QUERY_TERMS], "token string")
+
+
 # THE retrieval tokenization: single-space split, empty tokens dropped.
 # Defined once — tfidf, bm25's tf explode, bm25's no-explode dl
 # projection, decontamination grams, LM scoring, and packing must all
@@ -269,8 +276,9 @@ def bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ranking operator behind corpus search / hard-negative mining.
 
     score(d) = sum_t idf(t) * tf * (k1+1) / (tf + k1 * (1 - b + b*dl/avgdl))
-    with idf(t) = ln(1 + (N - df + 0.5)/(df + 0.5)). Query-term stats are
-    tiny (broadcast); the only corpus-sized shuffle is the (doc, term)
+    with idf(t) = ln(1 + (N - df + 0.5)/(df + 0.5)). The query terms are a
+    local relation (no Python task to read) and their stats are tiny, so
+    both broadcast; the only corpus-sized shuffle is the (doc, term)
     count. Per-doc length dl needs no explode at all (VERDICT r03: feeding
     the token explode to both dl and tf made Spark recompute the
     corpus-sized Generate once per consumer): counting non-empty split
@@ -279,9 +287,7 @@ def bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     toks = _doc_tokens(spark, sf_dir)
-    qt = F.broadcast(
-        spark.createDataFrame([(t,) for t in BM25_QUERY_TERMS], "token string")
-    )
+    qt = F.broadcast(bm25_query_terms_df(spark))
     # dl = number of non-empty tokens; docs with zero tokens drop out,
     # matching the former groupBy-over-explode semantics (and the oracle)
     dl = (

@@ -34,8 +34,9 @@ from cca_spark.operators.textstats import (
 STOPWORD_RE = r"\b(" + "|".join(EN_STOPWORDS) + r")\b"
 
 # THE pass/fail quality gate as one SQL fragment — the DuckDB twin of
-# textstats.passes_quality_col, shared by quality_score_sql and
-# per_source_cap_sql so the gate cannot fork between oracles
+# textstats.passes_quality_col, shared by quality_score_sql,
+# per_source_cap_sql and dedup_canonical_by_quality_sql so the gate cannot
+# fork between oracles. It reads an unqualified ``text``.
 PASSES_QUALITY_SQL = (
     "(length(text) >= 100"
     "\n   AND len(regexp_extract_all(text, '[^\\w\\s]')) / cast(length(text) AS double) < 0.1"
@@ -889,12 +890,7 @@ q AS (
     round(len(regexp_extract_all(c.text, '{STOPWORD_RE}'))
           / cast(len(string_split_regex(trim(c.text), '[ \\t\\n\\x0b\\f\\r]+')) AS double), 6)
       AS stopword_ratio,
-    (length(c.text) >= 100
-     AND len(regexp_extract_all(c.text, '[^\\w\\s]'))
-         / cast(length(c.text) AS double) < 0.1
-     AND len(regexp_extract_all(c.text, '{STOPWORD_RE}'))
-         / cast(len(string_split_regex(trim(c.text), '[ \\t\\n\\x0b\\f\\r]+')) AS double) > 0.05)
-      AS passes_quality
+    {PASSES_QUALITY_SQL} AS passes_quality
   FROM corpus c LEFT JOIN labels l ON c.doc_id = l.doc_id
 ),
 canon AS (

@@ -32,6 +32,8 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cca_spark.session import local_frame
+
 MANIFEST_SCHEMA = (
     "date_bucket string, n_turns long, n_facts long, n_dead_letter long, "
     "wall_ms long, run_id string"
@@ -59,7 +61,7 @@ def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
     except AnalysisException as e:
         if e.getCondition() != "PATH_NOT_FOUND":
             raise
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
+        return local_frame(spark, [], MANIFEST_SCHEMA)
 
 
 def processed_partitions(spark: SparkSession, out_dir: str) -> set[str]:

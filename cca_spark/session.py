@@ -1,4 +1,5 @@
-"""SparkSession factory tuned for the transcript log pipeline.
+"""SparkSession factory tuned for the transcript log pipeline, and the one
+way to build a small driver-side table (``local_frame``).
 
 Local-mode knobs follow the public Spark tuning guidance: shuffle
 partitions ~ cores, AQE on (skew-join splitting + partition coalescing),
@@ -13,8 +14,12 @@ from __future__ import annotations
 
 import os
 import re
+from collections.abc import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -93,3 +98,23 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: Iterable[Sequence], ddl: str) -> DataFrame:
+    """A small driver-side table (``rows`` of tuples typed by ``ddl``) that
+    plans as a JVM ``LocalRelation``.
+
+    ``createDataFrame`` over a Python list plans as a ``LogicalRDD`` over a
+    Python RDD: every query that reads it runs ``defaultParallelism``
+    Python-worker tasks, each paying PySpark's fixed per-task cost (about
+    0.3 s at local[4]) to ship a few rows. An Arrow table under
+    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB) is sent to
+    the JVM once and becomes a ``LocalRelation``, whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says, so reading it runs no
+    Python task. The tradeoff is the Arrow build itself, 20-35 ms per call:
+    a table read by many queries is built once and memoized."""
+    schema = StructType.fromDDL(ddl)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)

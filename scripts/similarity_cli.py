@@ -35,6 +35,7 @@ def conv_similarity(spark, sf_dir: str, conv_a: str, conv_b: str) -> dict:
     from pyspark.sql import functions as F
 
     from cca_spark.operators.dedup import ngram_jaccard
+    from cca_spark.session import local_frame
     from cca_spark.transcripts import load_transcripts
 
     t = load_transcripts(spark, sf_dir).filter(F.col("conv_id").isin(conv_a, conv_b))
@@ -57,10 +58,10 @@ def conv_similarity(spark, sf_dir: str, conv_a: str, conv_b: str) -> dict:
     if missing:
         raise SystemExit(f"conv_id(s) not found: {missing}")
     # two-doc corpus through the battery's exact-Jaccard verify kernel
-    corpus = spark.createDataFrame(
-        [(0, rows[conv_a]), (1, rows[conv_b])], ["doc_id", "text"]
+    corpus = local_frame(
+        spark, [(0, rows[conv_a]), (1, rows[conv_b])], "doc_id long, text string"
     )
-    pair = spark.createDataFrame([(0, 1)], ["doc_a", "doc_b"])
+    pair = local_frame(spark, [(0, 1)], "doc_a long, doc_b long")
     jac_rows = ngram_jaccard(corpus, pair).collect()
     jaccard = float(jac_rows[0]["jaccard"]) if jac_rows else 0.0
     toks_a, toks_b = rows[conv_a].split(), rows[conv_b].split()

@@ -457,6 +457,24 @@ def test_canonical_by_quality_matches_oracle_and_diverges_from_min_id(spark, sf_
     assert (multi.canon != multi.min_id).any(), "quality ranking never diverged from min-id"
 
 
+def test_quality_gate_is_the_shared_fragment_in_every_gate_oracle():
+    """The pass/fail gate is written once, as PASSES_QUALITY_SQL (the twin
+    of textstats.passes_quality_col). An oracle that re-typed it would stay
+    on the old gate after a gate edit and then disagree with Spark."""
+    from cca_spark.oracles_training import (
+        PASSES_QUALITY_SQL,
+        dedup_canonical_by_quality_sql,
+        per_source_cap_sql,
+        quality_score_sql,
+    )
+
+    for oracle in (quality_score_sql, per_source_cap_sql, dedup_canonical_by_quality_sql):
+        sql = oracle()
+        assert PASSES_QUALITY_SQL in sql, oracle.__name__
+        # every length floor in the query is the shared fragment's
+        assert sql.count(">= 100") == sql.count(PASSES_QUALITY_SQL), oracle.__name__
+
+
 def test_canonical_by_quality_prefers_higher_quality_member(spark):
     """Synthetic cluster where the HIGHER doc_id is the better copy (more
     stopwords, less punctuation): the canonical pick must be the quality
