@@ -14,7 +14,7 @@ and broadcast too. No inference engine needed at query time.
 
 Every table here is a JVM local relation (``session.local_frame``), so
 reading or broadcasting one runs no Python task; the cost moves to a
-20-35 ms Arrow build on the driver, which ``_memo`` pays once per session.
+15-30 ms Arrow build on the driver, which ``_memo`` pays once per session.
 
 ``risk_level`` mirrors the reference's significance scores Slow..Scrucial
 (1-4, /root/reference/src/ast/analyzing/common/change_base.ml:72-78).
@@ -61,7 +61,7 @@ CATEGORY_PARENTS: list[tuple[str, str]] = [
 
 # Dimension DataFrames are memoized per SparkSession. As local relations
 # they run no Python task when read, so the memo saves only the driver-side
-# Arrow build (20-35 ms per table), which every pipeline composed in one
+# Arrow build (15-30 ms per table), which every pipeline composed in one
 # session would otherwise repeat.
 _dim_cache: dict[tuple[int, str], DataFrame] = {}
 

@@ -111,7 +111,7 @@ def local_frame(spark: SparkSession, rows: Iterable[Sequence], ddl: str) -> Data
     ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB) is sent to
     the JVM once and becomes a ``LocalRelation``, whatever
     ``spark.sql.execution.arrow.pyspark.enabled`` says, so reading it runs no
-    Python task. The tradeoff is the Arrow build itself, 20-35 ms per call:
+    Python task. The tradeoff is the Arrow build itself, 15-30 ms per call:
     a table read by many queries is built once and memoized."""
     schema = StructType.fromDDL(ddl)
     table = pa.Table.from_pylist(
