@@ -52,7 +52,7 @@ def entry(spark: SparkSession) -> DataFrame:
 # ---------------------------------------------------------------- pipeline
 
 
-def _routed(spark: SparkSession, sf_dir: str, strategy: str = "pandas") -> DataFrame:
+def _routed(spark: SparkSession, sf_dir: str, strategy: str = "python") -> DataFrame:
     from cca_spark.plans.pipeline import routed_facts
     from cca_spark.transcripts import load_transcripts
 

@@ -8,7 +8,8 @@ line::
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 The headline metric is the end-to-end pipeline wall time
-(parse→enrich→route→aggregate, pandas-UDF parse strategy); the derived
+(parse→enrich→route→aggregate through the Arrow counting kernel, reported
+under the output-contract key ``pipeline_pandas``); the derived
 ``routed_turns_per_sec`` figure is the BASELINE.json north metric.
 
 Usage:
@@ -93,7 +94,7 @@ def run_bench(sf_dir: str, master: str | None, replicas: int = 1) -> dict:
         # the same neighbor-pollution fanout_bench.py exists to rule out
         spark.catalog.clearCache()
 
-    # headline: full pipeline, pandas-UDF parse. Best-of-N steady-state:
+    # headline: full pipeline, Arrow-kernel parse. Best-of-N steady-state:
     # single-shot walls on this shared sandbox vary ±20% (page-cache state,
     # neighbor VMs); the minimum is the reproducible throughput figure, the
     # same discipline as JMH/criterion steady-state reporting.

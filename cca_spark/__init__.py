@@ -4,7 +4,7 @@ A from-scratch re-expression of the query/data-processing capabilities of
 codinuum/cca (the reference "Code Continuity Analysis" framework) as an
 idiomatic Spark DataFrame pipeline over multi-turn agent transcripts:
 
-- PARSE     compiled regex banks in Arrow-vectorized pandas UDFs
+- PARSE     compiled regex banks in Arrow-batched mapInArrow kernels
             (reference: per-language fact extractors,
             /root/reference/src/ast/analyzing/common/fact_base.ml:447-507)
 - ENRICH    broadcast ontology joins + transitive-closure expansion
@@ -19,7 +19,7 @@ idiomatic Spark DataFrame pipeline over multi-turn agent transcripts:
             /root/reference/python/src/cca/ccautil/find_change_patterns.py:1376-1389)
 
 Everything is DataFrame/SQL-first: Catalyst handles pushdown, pruning, join
-selection and AQE; Python appears only inside Arrow-batched pandas UDFs.
+selection and AQE; Python appears only inside Arrow-batched UDFs.
 """
 
 __version__ = "0.1.0"

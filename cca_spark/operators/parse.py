@@ -11,11 +11,13 @@ scheme (entity.ml:68-92, triple.ml:589-596):
 deterministic key independent of partitioning, which is what makes
 routed-row **set equality** hold across cluster sizes.
 
-One kernel per output contract:
+One kernel per output contract, both behind one ``mapInArrow`` boundary
+and one rule-scope decision (``_scope_masks``):
 
 - **facts** (``parse_facts``): one row per match with all of
-  FACT_COLUMNS. ``strategy="pandas"`` (default) runs ``_extract_batch``
-  through ``mapInPandas`` with the bank compiled once per task;
+  FACT_COLUMNS. ``strategy="python"`` (default) runs ``_extract_facts_arrow``:
+  Arrow literal-anchor masks pick the candidate rows, and only their
+  ``text`` becomes Python strings for the compiled ``re`` bank.
   ``strategy="sql"`` runs the same bank as JVM ``regexp_extract_all`` in
   whole-stage codegen, with no Python boundary, and is the parity check.
   Every column crosses the Arrow boundary because Catalyst cannot prune
@@ -37,9 +39,10 @@ kernel work does not amortise (see ``ONE_WAVE_MAX_BYTES``).
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
-
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -57,55 +60,33 @@ def compile_bank() -> list[BankEntry]:
     # ASCII classes unless UNICODE_CHARACTER_CLASS) and DuckDB (RE2, ASCII
     # classes) — are ASCII-only. Compiling the bank ASCII pins all three
     # paths to identical character-class semantics: a Unicode digit in a
-    # turn must not match (nor escalate derived significance) in the pandas
+    # turn must not match (nor escalate derived significance) in the Python
     # kernel alone. Pinned by test_bank_ascii_class_parity.
     return [(r, re.compile(r.pattern, re.ASCII), sig_fn(r)) for r in RULES]
 
 
-def _candidate_masks(texts_s, tools_s, roles_s, bank: list[BankEntry]) -> list:
-    """Per-rule candidate masks with SHARED anchor/scope scans: several
-    rules reuse an anchor (three rules anchor on \\`\\`\\`, two on
-    'exit code ', ...), so the vectorized contains() runs once per DISTINCT
-    anchor per batch, not once per rule. Role sub-banks (rules.role_scope)
-    restrict each rule to its role's turns BEFORE the anchor scan — the
-    per-language-bank prune: a batch row is anchor-scanned by ~its role's
-    sub-bank only, which is what keeps the Python kernel's regex budget
-    flat as the bank grows."""
-    anchor_masks: dict[tuple[str, str | None], object] = {}
-    role_masks: dict[str, object] = {}
-    scope_masks: dict[str, object] = {}
+def _scope_masks(batch, rules) -> list:
+    """Per rule, the rows of ``batch`` its role/tool sub-bank admits
+    (rules.Rule.role_scope/tool_scope) as a numpy bool mask; None for a
+    rule with no scope. A NULL role or tool is in no scope. Each distinct
+    (column, value) pair is compared once per batch. Both kernels mask
+    through this one helper, so they cannot disagree on scoping."""
+    cache: dict[tuple[str, str], np.ndarray] = {}
+
+    def eq(col: str, value: str) -> np.ndarray:
+        m = cache.get((col, value))
+        if m is None:
+            m = pc.fill_null(pc.equal(batch.column(col), value), False)
+            m = cache[(col, value)] = m.to_numpy(zero_copy_only=False)
+        return m
+
     out = []
-    for rule, _cre, _sfn in bank:
-        rm = None
-        if rule.role_scope is not None:
-            rm = role_masks.get(rule.role_scope)
-            if rm is None:
-                rm = (roles_s == rule.role_scope).to_numpy()
-                role_masks[rule.role_scope] = rm
-        key = (rule.anchor, rule.role_scope)
-        am = anchor_masks.get(key)
-        if am is None:
-            if rm is None:
-                am = texts_s.str.contains(rule.anchor, regex=False)
-            else:
-                # anchor-scan only the role's rows; others stay False
-                import numpy as np
-
-                am_vals = np.zeros(len(texts_s), dtype=bool)
-                sub = texts_s[rm]
-                am_vals[rm] = sub.str.contains(rule.anchor, regex=False).to_numpy()
-                import pandas as pd
-
-                am = pd.Series(am_vals, index=texts_s.index)
-            anchor_masks[key] = am
-        if rule.tool_scope is None:
-            out.append(am)
-        else:
-            sm = scope_masks.get(rule.tool_scope)
-            if sm is None:
-                sm = tools_s == rule.tool_scope
-                scope_masks[rule.tool_scope] = sm
-            out.append(am & sm)
+    for rule in rules:
+        mask = None if rule.role_scope is None else eq("role", rule.role_scope)
+        if rule.tool_scope is not None:
+            tm = eq("tool", rule.tool_scope)
+            mask = tm if mask is None else mask & tm
+        out.append(mask)
     return out
 
 
@@ -125,9 +106,9 @@ FACT_COLUMNS = [
     "value",
 ]
 
-# What the pandas kernel emits through Arrow: FACT_COLUMNS minus the
+# What the full-fact kernel emits through Arrow: FACT_COLUMNS minus the
 # derived entity_id, which parse_facts reattaches as a JVM concat_ws
-# projection — identical bytes, built in codegen instead of pandas.
+# projection, built in codegen instead of per fact in Python.
 KERNEL_FACT_SCHEMA = (
     "conv_id string, turn_idx int, role string, "
     "tool string, ts timestamp_ntz, rule_id string, sink string, "
@@ -135,6 +116,22 @@ KERNEL_FACT_SCHEMA = (
 )
 
 KERNEL_FACT_COLUMNS = [c for c in FACT_COLUMNS if c != "entity_id"]
+
+# The same schema as Arrow types, derived here rather than through
+# pyspark's DDL parser, which needs a live session and executors have none
+# (pinned equal to to_arrow_schema(KERNEL_FACT_SCHEMA) by
+# test_kernel_fact_arrow_schema_matches_ddl).
+_DDL_ARROW_TYPES = {
+    "string": pa.string(),
+    "int": pa.int32(),
+    "timestamp_ntz": pa.timestamp("us"),
+}
+KERNEL_FACT_ARROW_SCHEMA = pa.schema(
+    [
+        (name, _DDL_ARROW_TYPES[ddl_type])
+        for name, ddl_type in map(str.split, KERNEL_FACT_SCHEMA.split(", "))
+    ]
+)
 
 PARTIAL_AGG_SCHEMA = (
     "conv_id string, tool string, date_bucket timestamp_ntz, sink string, n long"
@@ -184,54 +181,26 @@ def _extract_partials_arrow(batch):
     rule bank through RE2 (``regexp_extract_all``) and hash-matches the
     Python-re kernels, so RE2-vs-re count parity on this pattern subset is
     oracle-proven; additionally pinned per-rule by
-    test_arrow_partials_kernel_parity. Scoped rules mask their counts by
-    role/tool equality BEFORE the per-sink accumulation, exactly like the
-    pandas kernel. The grouping tail stays in pandas over the (small)
+    test_arrow_partials_kernel_parity. Scoped rules mask their counts with
+    ``_scope_masks`` BEFORE the per-sink accumulation, like the full-fact
+    kernel. The grouping tail stays in pandas over the (small)
     nonzero key rows — pyarrow's TableGroupBy was measured emitting
     duplicate (unmerged) groups on multi-chunk real-data input, and while
     duplicate PARTIALS would still aggregate correctly downstream, the
     kernel output should stay deterministic.
     """
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    idx = {name: i for i, name in enumerate(batch.schema.names)}
-    texts = batch.column(idx["text"])
-    roles_arr = batch.column(idx["role"])
-    tools_arr = batch.column(idx["tool"])
+    texts = batch.column("text")
     sink_counts: dict[str, np.ndarray] = {}
-    role_masks: dict[str, np.ndarray] = {}
-    tool_masks: dict[str, np.ndarray] = {}
-    for rule in RULES:
+    for rule, scope in zip(RULES, _scope_masks(batch, RULES)):
         cnt = (
             pc.fill_null(pc.count_substring_regex(texts, pattern=rule.pattern), 0)
             .to_numpy(zero_copy_only=False)
             .astype(np.int64)
         )
+        if scope is not None:
+            cnt = np.where(scope, cnt, 0)
         if not cnt.any():
             continue
-        mask = None
-        if rule.role_scope is not None:
-            m = role_masks.get(rule.role_scope)
-            if m is None:
-                m = pc.fill_null(pc.equal(roles_arr, rule.role_scope), False).to_numpy(
-                    zero_copy_only=False
-                )
-                role_masks[rule.role_scope] = m
-            mask = m
-        if rule.tool_scope is not None:
-            m = tool_masks.get(rule.tool_scope)
-            if m is None:
-                m = pc.fill_null(pc.equal(tools_arr, rule.tool_scope), False).to_numpy(
-                    zero_copy_only=False
-                )
-                tool_masks[rule.tool_scope] = m
-            mask = m if mask is None else (mask & m)
-        if mask is not None:
-            cnt = np.where(mask, cnt, 0)
-            if not cnt.any():
-                continue
         acc = sink_counts.get(rule.sink)
         if acc is None:
             sink_counts[rule.sink] = cnt
@@ -239,11 +208,11 @@ def _extract_partials_arrow(batch):
             acc += cnt
     if not sink_counts:
         return None
-    date = pc.floor_temporal(batch.column(idx["ts"]), unit="day")
+    date = pc.floor_temporal(batch.column("ts"), unit="day")
     base = pd.DataFrame(
         {
-            "conv_id": batch.column(idx["conv_id"]).to_pandas(),
-            "tool": tools_arr.to_pandas(),
+            "conv_id": batch.column("conv_id").to_pandas(),
+            "tool": batch.column("tool").to_pandas(),
             "date_bucket": date.to_pandas(),
         }
     )
@@ -305,112 +274,82 @@ def parse_fact_partials(transcripts: DataFrame) -> DataFrame:
     return python_stage_input(transcripts).mapInArrow(run, schema=PARTIAL_AGG_SCHEMA)
 
 
-def _extract_batch(pdf: pd.DataFrame, bank: list[BankEntry]) -> pd.DataFrame:
-    """Apply the compiled bank to one Arrow batch; emit one row per match.
+def _extract_facts_arrow(batch, bank: list[BankEntry]):
+    """One Arrow batch of turns -> one Arrow batch of facts
+    (KERNEL_FACT_ARROW_SCHEMA), one row per rule match.
 
-    Hot-loop discipline (measured, not guessed — see git history):
-    - RULE-MAJOR iteration with a VECTORIZED literal anchor prefilter:
-      ``Series.str.contains(anchor, regex=False)`` computes the per-rule
-      candidate mask in C (plus a vectorized tool-scope equality for
-      sub-bank rules), so the Python loop only visits (rule, candidate)
-      pairs — 1.5x faster at 25 rules than the row-major loop whose
-      2.5M-iteration rule×row bytecode dominated. Every match provably
-      contains the anchor (tests/test_rules_unit.py); same
-      cheap-filter-before-expensive-work discipline as the reference's
-      similarity prefilters (comparison.ml:30-38).
-    - the loop appends ONE small tuple per fact (not 12 per-column
-      appends); row attributes are materialized afterwards by numpy
-      fancy-indexing — 2.5x faster end-to-end than the naive kernel.
+    The literal-anchor test (``pc.match_substring``, once per distinct
+    anchor) and the scope masks run in C over the whole batch; every match
+    contains its rule's anchor (tests/test_rules_unit.py), so a row outside
+    a rule's mask cannot match it. Only the candidate rows' ``text`` becomes
+    Python strings, and the Python loop visits only (rule, candidate row)
+    pairs with the compiled ``re`` bank. The turn columns of the output are
+    ``take`` of the input rows, so they keep the input's Arrow types even
+    for a batch without matches.
     """
-    import numpy as np
-
-    texts_s = pdf["text"].fillna("")
-    tools_s = pdf["tool"]  # per-tool sub-bank dispatch (rules.py)
-    texts = texts_s.tolist()
-    masks = _candidate_masks(texts_s, tools_s, pdf["role"], bank)
+    texts = batch.column("text")
+    rules = [e[0] for e in bank]
+    anchor_masks: dict[str, np.ndarray] = {}
+    cands = []
+    for rule, scope in zip(rules, _scope_masks(batch, rules)):
+        am = anchor_masks.get(rule.anchor)
+        if am is None:
+            am = pc.fill_null(pc.match_substring(texts, rule.anchor), False)
+            am = anchor_masks[rule.anchor] = am.to_numpy(zero_copy_only=False)
+        cands.append(np.flatnonzero(am if scope is None else am & scope))
+    rows = np.unique(np.concatenate(cands))
+    text_of = dict(zip(rows.tolist(), texts.take(rows).to_pylist()))
     # (row, rule, start, end, value, significance)
     hits: list[tuple] = []
-    for j, (rule, cre, sfn) in enumerate(bank):
-        finditer = cre.finditer
-        base = rule.significance
-        for i in np.nonzero(masks[j].to_numpy())[0]:
-            for m in finditer(texts[i]):
-                hits.append(
-                    (
-                        i,
-                        j,
-                        m.start(),
-                        m.end(),
-                        m.group(1) if m.groups() else m.group(0),
-                        base if sfn is None else sfn(m),
-                    )
-                )
-
-    if hits:
-        ix = np.fromiter((h[0] for h in hits), dtype=np.int64, count=len(hits))
-        rj = np.fromiter((h[1] for h in hits), dtype=np.int64, count=len(hits))
-    else:
-        ix = rj = np.empty(0, dtype=np.int64)
-    rule_ids = np.array([r.rule_id for r, _, _ in bank], dtype=object)
-    sinks = np.array([r.sink for r, _, _ in bank], dtype=object)
-
-    res = pd.DataFrame(
-        {
-            "conv_id": pdf["conv_id"].to_numpy()[ix],
-            "turn_idx": pdf["turn_idx"].to_numpy()[ix].astype("int32"),
-            "role": pdf["role"].to_numpy()[ix],
-            "tool": pdf["tool"].to_numpy()[ix],
-            "ts": pdf["ts"].to_numpy()[ix],
-            "rule_id": rule_ids[rj],
-            "sink": sinks[rj],
-            "significance": np.fromiter(
-                (h[5] for h in hits), dtype=np.int32, count=len(hits)
-            ),
-            "span_start": np.fromiter(
-                (h[2] for h in hits), dtype=np.int32, count=len(hits)
-            ),
-            "span_end": np.fromiter(
-                (h[3] for h in hits), dtype=np.int32, count=len(hits)
-            ),
-            "value": np.array([h[4] for h in hits], dtype=object),
-        }
+    for j, ((rule, cre, sfn), cand) in enumerate(zip(bank, cands)):
+        group = 1 if cre.groups else 0
+        for i in cand.tolist():
+            for m in cre.finditer(text_of[i]):
+                sig = rule.significance if sfn is None else sfn(m)
+                hits.append((i, j, m.start(), m.end(), m.group(group), sig))
+    row_idx, rule_idx, starts, ends, values, sigs = zip(*hits) if hits else [()] * 6
+    turns = batch.select(["conv_id", "turn_idx", "role", "tool", "ts"])
+    turns = turns.take(pa.array(row_idx, pa.int64()))
+    rule_idx = pa.array(rule_idx, pa.int64())
+    return pa.RecordBatch.from_arrays(
+        [
+            *turns.columns,
+            pa.array([r.rule_id for r in rules], pa.string()).take(rule_idx),
+            pa.array([r.sink for r in rules], pa.string()).take(rule_idx),
+            pa.array(sigs, pa.int32()),
+            pa.array(starts, pa.int32()),
+            pa.array(ends, pa.int32()),
+            pa.array(values, pa.string()),
+        ],
+        schema=KERNEL_FACT_ARROW_SCHEMA,
     )
-    # entity_id is built JVM-side (parse_facts): concat_ws in codegen beats
-    # five pandas string materializations per batch, and ~35 B/fact of
-    # derived string never crosses the Arrow boundary
-    # explicit dtypes: a zero-match batch must still carry Arrow-castable
-    # columns (an empty object/float64 'ts' breaks the timestamp cast)
-    res["ts"] = pd.to_datetime(res["ts"])
-    for c in ("conv_id", "role", "tool", "rule_id", "sink", "value"):
-        res[c] = res[c].astype(object)
-    return res[KERNEL_FACT_COLUMNS]
 
 
-def parse_facts(transcripts: DataFrame, strategy: str = "pandas") -> DataFrame:
+def parse_facts(transcripts: DataFrame, strategy: str = "python") -> DataFrame:
     """transcripts(conv_id, turn_idx, role, text, tool, ts) -> fact stream.
 
     Contract: one row per rule match with all of FACT_COLUMNS; the row
     multiset is independent of the task layout and identical for both
-    strategies (the pandas kernel is authoritative for overlapping
+    strategies (the Python kernel is authoritative for overlapping
     multi-match spans, see ``_parse_facts_sql``).
 
-    Tradeoff: the pandas kernel is opaque to Catalyst, so every fact
-    crosses the Arrow boundary with all its columns, ``value`` included,
-    even when the consumer projects them away. Consumers that only count
-    facts per key use ``parse_fact_partials`` instead, which combines
-    counts inside the kernel; consumers of individual facts (spans, ids,
-    values) pay for the full row. The pandas strategy's ``mapInPandas``
+    Tradeoff: the ``"python"`` strategy's ``mapInArrow`` kernel is opaque
+    to Catalyst, so every fact crosses the Arrow boundary with all its
+    columns, ``value`` included, even when the consumer projects them away.
+    Consumers that only count facts per key use ``parse_fact_partials``
+    instead, which combines counts inside the kernel; consumers of
+    individual facts (spans, ids, values) pay for the full row. The kernel
     takes its input through ``python_stage_input``."""
-    if strategy == "pandas":
+    if strategy == "python":
 
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def run(batches):
             # compile once per task (reference compiles its rule bank once
             # per language engine instance, java_change.ml:788-793)
             bank = compile_bank()
-            for pdf in batches:
-                yield _extract_batch(pdf, bank)
+            for batch in batches:
+                yield _extract_facts_arrow(batch, bank)
 
-        facts = python_stage_input(transcripts).mapInPandas(
+        facts = python_stage_input(transcripts).mapInArrow(
             run, schema=KERNEL_FACT_SCHEMA
         )
         return facts.select(
@@ -443,7 +382,7 @@ def _parse_facts_sql(transcripts: DataFrame) -> DataFrame:
     still reads it once.
 
     Spans are recovered with ``instr`` (valid because each rule matches at
-    most one distinct substring per generated turn); the pandas strategy is
+    most one distinct substring per generated turn); the Python strategy is
     authoritative for overlapping/multi-match inputs. The group value and
     derived significance are re-extracted from the short match string
     AFTER the generate (plain projections over (rule_id, m0)), so Catalyst
@@ -457,8 +396,8 @@ def _parse_facts_sql(transcripts: DataFrame) -> DataFrame:
         # measured it a pessimization for this strategy (21.2s vs 18.1s at
         # 1.6M turns): java.util.regex already fast-scans for the literal
         # prefix, so the extra CASE+contains only adds work. The anchor
-        # prefilter pays off in the pandas kernel, where it moves the
-        # candidate scan from Python bytecode into C.
+        # prefilter pays off in the Python kernel, where it keeps
+        # non-candidate rows out of the interpreter.
         ms = F.regexp_extract_all(F.col("text"), F.lit(r.pattern), 0)
         cond = None
         if r.role_scope is not None:
@@ -499,7 +438,7 @@ def _parse_facts_sql(transcripts: DataFrame) -> DataFrame:
         )
     # derived significance (rules.SigDerive): re-extract the compared
     # group(s) from the SHORT match string and apply the rule's CASE —
-    # generated from the same spec as the pandas kernel and the oracle
+    # generated from the same spec as the Python kernel and the oracle
     sig = None
     for r in RULES:
         if r.derive is None:

@@ -28,7 +28,6 @@ import os
 import time
 import uuid
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -51,17 +50,20 @@ def _facts_dir(out_dir: str) -> str:
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
     """The manifest rows; empty only when no manifest was ever written.
 
-    A missing ``_manifest`` directory means "nothing processed". Any other
-    read error (a corrupt or unreadable file) propagates: reading it as
-    empty would make ``run_with_resume`` redo every partition and append
-    duplicate manifest rows. The explicit schema makes an empty directory
-    read as zero rows instead of failing schema inference."""
-    try:
-        return spark.read.schema(MANIFEST_SCHEMA).parquet(_manifest_dir(out_dir))
-    except AnalysisException as e:
-        if e.getCondition() != "PATH_NOT_FOUND":
-            raise
+    A missing ``_manifest`` directory means "nothing processed"; it is
+    tested through the Hadoop ``FileSystem`` of the path, because a failed
+    parquet read logs a full ``FileNotFoundException`` trace before it
+    raises. Any read error of an existing manifest (a corrupt or unreadable
+    file) propagates: reading it as empty would make ``run_with_resume``
+    redo every partition and append duplicate manifest rows. The explicit
+    schema makes an empty directory read as zero rows instead of failing
+    schema inference."""
+    path = _manifest_dir(out_dir)
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    if not fs.exists(jpath):
         return local_frame(spark, [], MANIFEST_SCHEMA)
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
 
 
 def processed_partitions(spark: SparkSession, out_dir: str) -> set[str]:

@@ -19,7 +19,7 @@ from cca_spark.transcripts import load_transcripts
 
 
 def routed_facts(
-    spark: SparkSession, transcripts: DataFrame, parse_strategy: str = "pandas"
+    spark: SparkSession, transcripts: DataFrame, parse_strategy: str = "python"
 ) -> DataFrame:
     """parse → enrich → route: one row per fact with all of
     parse.FACT_COLUMNS plus the ontology and routing columns.
@@ -43,26 +43,19 @@ def fused_pipeline_agg(spark: SparkSession, transcripts: DataFrame) -> DataFrame
     the Arrow kernel (map-side combine through the UDF boundary, which
     Spark's own partial HashAggregate cannot cross): the kernel emits
     per-batch counts keyed by (conv_id, tool, date, rule-sink); the JVM
-    side broadcast-joins the ontology, applies dead-letter rerouting to
-    the partials (1:1 on the key, counts unaffected), and runs the final
-    sum / countDistinct. Aggregate-identical to the unfused path
+    side broadcast-joins the ontology, applies ``route_facts``'s
+    dead-letter rerouting to the partials (1:1 on the key, counts
+    unaffected), and runs the final sum / countDistinct. Aggregate-identical to the unfused path
     (test_fused_pipeline_agg_equivalence); at 10^12 turns this shrinks
     Arrow egress by the per-batch fact/key ratio (~15x here)."""
     from pyspark.sql import functions as F
 
     from cca_spark.ontology import tool_ontology_df
     from cca_spark.operators.parse import parse_fact_partials
-    from cca_spark.rules import DEAD_LETTER_SINK
 
     partials = parse_fact_partials(transcripts)
     tools = F.broadcast(tool_ontology_df(spark).select("tool", "category"))
-    routed = partials.join(tools, "tool", "left").withColumn(
-        "sink",
-        F.when(
-            (F.col("sink") == "tool_invocation") & F.col("category").isNull(),
-            F.lit(DEAD_LETTER_SINK),
-        ).otherwise(F.col("sink")),
-    )
+    routed = route_facts(partials.join(tools, "tool", "left"))
     return routed.groupBy(
         "sink", "tool", F.col("date_bucket").cast("date").alias("date_bucket")
     ).agg(

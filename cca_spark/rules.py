@@ -16,7 +16,7 @@ DOTALL flags for portability.
 reference's per-language rule banks (the Java bank only runs on Java pairs;
 here the ``bash`` sub-bank only runs on ``tool='bash'`` turns). A scoped
 rule is evaluated only on rows whose ``tool`` column equals the scope, in
-all three evaluation paths (pandas kernel, Spark SQL strategy, DuckDB
+all three evaluation paths (Python kernel, Spark SQL strategy, DuckDB
 oracle).
 
 Unmatched turns route nowhere (only turn-level facts); rows can match
@@ -49,7 +49,7 @@ class SigDerive:
     sig = ``sig_true`` when ``int(group lhs_group) <op> rhs`` else the
     rule's static ``significance`` (the base). ``rhs`` is either a
     constant or ANOTHER captured group (two-capture comparison). The spec
-    is declarative so all three evaluation paths — pandas kernel, Spark
+    is declarative so all three evaluation paths — Python kernel, Spark
     SQL strategy, DuckDB oracle — are GENERATED from this one definition
     (``sig_fn`` / ``sig_case_sql`` below) and cannot drift."""
 
@@ -82,7 +82,7 @@ class Rule:
     # banks (the Java bank parses only Java files, diffastcore.ml:42-48):
     # a rule for tool-output spans (tracebacks, exit codes) runs only on
     # tool turns, assistant-message rules only on assistant turns. This is
-    # rule SEMANTICS (applied identically in the pandas kernel, the Spark
+    # rule SEMANTICS (applied identically in the Python kernel, the Spark
     # SQL strategy, and the DuckDB oracle), and it is also the bank's main
     # compute prune: each turn is scanned by its role's sub-bank (~14
     # rules avg), not all 62.
@@ -90,8 +90,8 @@ class Rule:
 
 
 def sig_fn(rule: Rule):
-    """Python evaluator of a rule's derived significance for the pandas
-    kernels: ``fn(match) -> int``. None for static rules (callers use the
+    """Python evaluator of a rule's derived significance for the Python
+    kernel: ``fn(match) -> int``. None for static rules (callers use the
     constant). Non-numeric captures fall back to the base significance —
     the same NULL-comparison semantics as the SQL CASE below."""
     if rule.derive is None:
@@ -104,7 +104,7 @@ def sig_fn(rule: Rule):
         # domain (every deriving capture is (\d+)/(\d), so the string is
         # pure ASCII digits): values past int32 come back NULL in SQL and
         # must fall through to the base here too, or an 11-digit capture
-        # (bytes=, user id) silently forks the pandas kernel from the
+        # (bytes=, user id) silently forks the Python kernel from the
         # Spark-SQL strategy and the DuckDB oracle. Pinned by the
         # tests/test_properties.py three-way fuzz.
         if s is None:
@@ -227,10 +227,14 @@ RULES: list[Rule] = [
         3,
         "ERROR ",
     ),
+    # \w{1,64}, not \w+: with an unbounded run every start position inside a
+    # long word re-scans it, which is quadratic in Python re and Java regex
+    # (RE2 is linear either way); the bound keeps all three engines linear
+    # and identical on class names of up to 64 word characters
     Rule(
         "r_exc_class",
         "error_signature",
-        r"(\w+Error): [^\n]*",
+        r"(\w{1,64}Error): [^\n]*",
         3,
         "Error",
     ),

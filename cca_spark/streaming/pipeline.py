@@ -5,7 +5,7 @@ The reference is strictly batch (incrementality via content-hash caches,
 resume. This module is the *streaming* extension the north star allows:
 the same parse/enrich/route operators applied to a ``readStream`` source —
 the operator code is shared verbatim because they are all
-stream-compatible (mapInPandas, broadcast joins, column expressions).
+stream-compatible (mapInArrow, broadcast joins, column expressions).
 
 Aggregation differs: streaming group-bys need watermarks —
 ``stream_windowed_agg_exact`` counts per (day window, sink, tool) under a

@@ -153,7 +153,7 @@ def load_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange on the PRE-synthesis event bytes (~60 B/row) and coalesces it
     to ~3 partitions at sf0.1, while the rows LEAVING the projection carry
     the synthesized ~200 B ``text`` — and every downstream opaque kernel
-    (the mapInPandas parse, which Catalyst cannot see into) then runs
+    (the mapInArrow parse, which Catalyst cannot see into) then runs
     3-wide on a 32-core machine (measured: the sf0.1 fact stream took
     3.7 s derived-width vs 2.2 s repartitioned). Width follows
     ``defaultParallelism`` (scale-adaptive, never a local constant); the

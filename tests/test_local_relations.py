@@ -71,17 +71,20 @@ def test_lookup_tables_are_local_relations(spark, tmp_path, monkeypatch):
 
 
 def test_fused_pipeline_runs_python_only_in_its_kernel(spark):
-    from cca_spark.plans.pipeline import fused_pipeline_agg
+    """The fused report pipeline and the full fact stream each cross one
+    Python boundary, and it is the Arrow one."""
+    from cca_spark.plans.pipeline import fused_pipeline_agg, routed_facts
     from cca_spark.transcripts import load_transcripts
     from tests.conftest import SF_SMOKE
 
-    df = fused_pipeline_agg(spark, load_transcripts(spark, SF_SMOKE))
-    names = _executed_node_names(df)
-    python = [n for n in names if re.search(r"Python|InPandas|InArrow", n)]
-    assert python == ["MapInArrow"], names
-    assert "Scan ExistingRDD" not in names, names
-    # the broadcast ontology side
-    assert "LocalTableScan" in names, names
+    t = load_transcripts(spark, SF_SMOKE)
+    for df in (fused_pipeline_agg(spark, t), routed_facts(spark, t)):
+        names = _executed_node_names(df)
+        python = [n for n in names if re.search(r"Python|InPandas|InArrow", n)]
+        assert python == ["MapInArrow"], names
+        assert "Scan ExistingRDD" not in names, names
+        # the broadcast ontology side
+        assert "LocalTableScan" in names, names
 
 
 def test_create_dataframe_only_inside_local_frame():

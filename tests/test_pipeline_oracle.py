@@ -117,13 +117,13 @@ def test_dead_letter_nonempty(spark, sf_dir):
 
 
 def test_parse_strategies_agree(spark, sf_dir):
-    """pandas-UDF and JVM-regexp physical strategies, identical logical
+    """Python-kernel and JVM-regexp physical strategies, identical logical
     result (same discipline as reference -check invariant validation,
     analyzing.ml:1251-1270)."""
     from cca_spark.plans.pipeline import routed_facts
     from cca_spark.transcripts import load_transcripts
 
     t = load_transcripts(spark, sf_dir)
-    a = normalize(routed_facts(spark, t, parse_strategy="pandas").toPandas())
+    a = normalize(routed_facts(spark, t, parse_strategy="python").toPandas())
     b = normalize(routed_facts(spark, t, parse_strategy="sql").toPandas())
     assert a.equals(b)

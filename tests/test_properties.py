@@ -150,7 +150,7 @@ def test_multimodal_wav_payload_roundtrip(doc_id):
 def test_sig_derive_python_matches_duckdb_case(lhs, rhs):
     """Three-way significance parity on the reachable capture domain
     (every deriving rule captures (\\d+)/(\\d) — pure digit strings,
-    including ones past int32): the pandas kernel's sig_fn must equal the
+    including ones past int32): the Python kernel's sig_fn must equal the
     generated SQL CASE evaluated by the oracle engine, for EVERY deriving
     rule in the bank. Past-int32 captures are where Python int() and SQL
     try_cast(int) genuinely diverge unless the kernel clamps."""

@@ -100,8 +100,10 @@ def test_simhash64_banded_catches_twins(spark, sf_dir):
 
 def test_parse_handles_null_empty_huge_text(spark):
     """Edge probes from the verify recipe, pinned: NULL text, empty text,
-    1 MB text, and a multi-match text — both physical strategies, no
-    crash, same results (empty Arrow batches carry explicit dtypes)."""
+    1 MB texts, and a multi-match text — both physical strategies, no
+    crash, the same fact rows. The 1 MB word run ending in ``Error`` is
+    the backtracking probe for ``r_exc_class``: an unbounded ``\\w+`` in
+    front of a literal is quadratic in Python re and Java regex."""
     import datetime
 
     from cca_spark.operators.parse import parse_facts
@@ -113,6 +115,7 @@ def test_parse_handles_null_empty_huge_text(spark):
         ("c1", 1, "assistant", "", None, ts),
         ("c1", 2, "assistant", "```python\nx = 1\nprint(x)\n```" * 1, None, ts),
         ("c1", 3, "tool", "x" * 1_000_000, "bash", ts),
+        ("c1", 4, "tool", "x" * 1_000_000 + "Error", "bash", ts),
         # multi-match probe on an ASSISTANT turn (r_error_code is
         # assistant-scoped since the r3 role sub-banks)
         ("c2", 0, "assistant", "ERROR 1: a\nERROR 2: b", None, ts),
@@ -122,10 +125,12 @@ def test_parse_handles_null_empty_huge_text(spark):
         "conv_id string, turn_idx int, role string, text string, "
         "tool string, ts timestamp_ntz",
     )
-    pandas_res = normalize(parse_facts(t, strategy="pandas").toPandas())
+    python_res = normalize(parse_facts(t, strategy="python").toPandas())
+    sql_res = normalize(parse_facts(t, strategy="sql").toPandas())
+    assert python_res.equals(sql_res), (python_res, sql_res)
     # null/empty rows emit nothing; multi-match emits one fact per match
-    assert (pandas_res["turn_idx"].astype(int) >= 0).all()
-    assert len(pandas_res[pandas_res["rule_id"] == "r_error_code"]) == 2
+    assert (python_res["turn_idx"].astype(int) >= 0).all()
+    assert len(python_res[python_res["rule_id"] == "r_error_code"]) == 2
 
 
 def test_snapshot_mapping_all_classes_present(spark, sf_dir):

@@ -164,7 +164,7 @@ def test_tree_delta_subtree_semantics(spark, sf_dir):
 
 
 def test_derived_significance_parity_pandas_vs_sql(spark, sf_dir):
-    """The pandas kernel and the JVM SQL strategy must emit identical
+    """The Python kernel and the JVM SQL strategy must emit identical
     (entity_id, significance) multisets — including every value-derived
     rule — on the real generated corpus."""
     from pyspark.sql import functions as F
@@ -174,14 +174,14 @@ def test_derived_significance_parity_pandas_vs_sql(spark, sf_dir):
 
     t = load_transcripts(spark, sf_dir)
     cols = ["entity_id", "significance"]
-    a = parse_facts(t, strategy="pandas").select(*cols)
+    a = parse_facts(t, strategy="python").select(*cols)
     b = parse_facts(t, strategy="sql").select(*cols)
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
     # derived rules must actually vary: at least one rule with BOTH its
     # base and its escalated significance present in the corpus
     per_rule = (
-        parse_facts(t, strategy="pandas")
+        parse_facts(t, strategy="python")
         .groupBy("rule_id")
         .agg(F.countDistinct("significance").alias("n_sigs"))
         .filter(F.col("n_sigs") >= 2)
@@ -195,7 +195,7 @@ def test_derived_significance_matches_duckdb(spark, sf_dir):
     from cca_spark.operators.parse import parse_facts
     from cca_spark.transcripts import load_transcripts
 
-    got = parse_facts(load_transcripts(spark, sf_dir), strategy="pandas").select(
+    got = parse_facts(load_transcripts(spark, sf_dir), strategy="python").select(
         "entity_id", "rule_id", "significance"
     )
     assert_matches_oracle(

@@ -10,7 +10,7 @@ import pytest
 
 
 def test_bank_ascii_class_parity():
-    """All three evaluation paths (pandas/Python re, Spark/Java regex,
+    """All three evaluation paths (Python re, Spark/Java regex,
     DuckDB/RE2) must share ASCII character-class semantics (ADVICE r03):
     every compiled bank pattern carries re.ASCII, and a Unicode digit
     must NOT satisfy \\d in the Python kernel (it would match nowhere
@@ -28,14 +28,14 @@ def test_bank_ascii_class_parity():
     assert cre.search("exit code 3"), "ASCII digit must still match"
     # fullwidth '３' (U+FF13) and Arabic-Indic '٣' (U+0663) match \d under
     # default Python re but not under Java regex or RE2 — with re.ASCII the
-    # pandas kernel agrees with the other engines and rejects both
+    # Python kernel agrees with the other engines and rejects both
     assert cre.search("exit code ３") is None
     assert cre.search("exit code ٣") is None
 
 
 def test_bank_ascii_sig_derivation_not_escalated():
     """A Unicode digit in the significance-deriving capture must not match
-    at all (so it cannot escalate significance only in the pandas path)."""
+    at all (so it cannot escalate significance only in the Python path)."""
     from cca_spark.rules import RULES, sig_fn
 
     rule = next(r for r in RULES if r.rule_id == "r_exit_severity")

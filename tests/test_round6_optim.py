@@ -2,9 +2,9 @@
 took this round keeps a focused parity pin here (the brief's rule —
 optimizations must not change what any query computes).
 
-- the Arrow/RE2 partials kernel vs the full-fact pandas/re kernel's
+- the Arrow/RE2 partials kernel vs the full-fact Python re kernel's
   per-key counts, on corpus text and on hostile text
-- the single-generate (inline) SQL parse strategy vs the pandas strategy
+- the single-generate (inline) SQL parse strategy vs the Python strategy
 - the JVM-side entity_id projection vs the kernel-derived fields
 - the dedup materialization changes (distinct-before-persist) vs a
   from-scratch recompute of the verified pair set
@@ -30,12 +30,12 @@ def _multiset_equal(df_a, df_b, cols):
 _PARTIAL_KEYS = ["conv_id", "tool", "date_bucket", "sink"]
 
 
-def _full_kernel_counts(pdf):
-    """Reference for the counting kernel: the full-fact pandas/re kernel's
+def _full_kernel_counts(batch):
+    """Reference for the counting kernel: the full-fact Python re kernel's
     rows counted per (conv_id, tool, floor(ts, day), sink)."""
-    from cca_spark.operators.parse import _extract_batch, compile_bank
+    from cca_spark.operators.parse import _extract_facts_arrow, compile_bank
 
-    facts = _extract_batch(pdf, compile_bank())
+    facts = _extract_facts_arrow(batch, compile_bank()).to_pandas()
     facts["date_bucket"] = facts["ts"].dt.floor("D")
     return facts.groupby(_PARTIAL_KEYS, dropna=False).size().rename("n").reset_index()
 
@@ -51,18 +51,16 @@ def _assert_same_counts(ref, got):
 
 
 def test_arrow_partials_kernel_parity(spark, sf_dir):
-    """The RE2 counting kernel must reproduce the full-fact pandas/re
+    """The RE2 counting kernel must reproduce the full-fact Python re
     kernel's per-key counts bit-for-bit on real corpus text — per-rule
     counts, role/tool scoping, date flooring and the grouping tail."""
-    import pyarrow as pa
-
     from cca_spark.operators.parse import _extract_partials_arrow
     from cca_spark.transcripts import load_transcripts
 
-    pdf = load_transcripts(spark, sf_dir).toPandas()
-    batch = pa.RecordBatch.from_pandas(pdf, preserve_index=False)
+    table = load_transcripts(spark, sf_dir).toArrow().combine_chunks()
+    (batch,) = table.to_batches()
     _assert_same_counts(
-        _full_kernel_counts(pdf), _extract_partials_arrow(batch).to_pandas()
+        _full_kernel_counts(batch), _extract_partials_arrow(batch).to_pandas()
     )
 
 
@@ -111,7 +109,7 @@ def test_partials_kernel_hostile_input_parity():
         ]
     )
     batch = pa.RecordBatch.from_pandas(pdf, schema=schema, preserve_index=False)
-    ref = _full_kernel_counts(pdf)
+    ref = _full_kernel_counts(batch)
     got = _extract_partials_arrow(batch).to_pandas()
     _assert_same_counts(ref, got)
     # the probes reach the paths they target: both multi-match days count
@@ -124,15 +122,26 @@ def test_partials_kernel_hostile_input_parity():
     assert bash["n"].tolist() == [2]  # two rules on exit code 4; not \u0663
 
 
+def test_kernel_fact_arrow_schema_matches_ddl(spark):
+    """The full-fact kernel's Arrow schema, derived without a session, is
+    the one pyspark derives from the DDL that mapInArrow declares."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    from cca_spark.operators.parse import KERNEL_FACT_ARROW_SCHEMA, KERNEL_FACT_SCHEMA
+
+    assert KERNEL_FACT_ARROW_SCHEMA == to_arrow_schema(StructType.fromDDL(KERNEL_FACT_SCHEMA))
+
+
 def test_sql_parse_strategy_single_generate_parity(spark, sf_dir):
     """The r6 inline(flatten(transform(...))) SQL strategy must emit the
-    identical fact multiset (all 12 columns) as the pandas kernel."""
+    identical fact multiset (all 12 columns) as the Python kernel."""
     from cca_spark.operators.parse import FACT_COLUMNS, parse_facts
     from cca_spark.transcripts import load_transcripts
 
     t = load_transcripts(spark, sf_dir)
     sql = parse_facts(t, strategy="sql").select(*FACT_COLUMNS)
-    pd_ = parse_facts(t, strategy="pandas").select(*FACT_COLUMNS)
+    pd_ = parse_facts(t, strategy="python").select(*FACT_COLUMNS)
     assert _multiset_equal(sql, pd_, FACT_COLUMNS)
 
 
@@ -158,7 +167,7 @@ def test_jvm_entity_id_matches_kernel_fields(spark, sf_dir):
     from cca_spark.operators.parse import parse_facts
     from cca_spark.transcripts import load_transcripts
 
-    facts = parse_facts(load_transcripts(spark, sf_dir), strategy="pandas")
+    facts = parse_facts(load_transcripts(spark, sf_dir), strategy="python")
     rebuilt = F.concat_ws(
         "-", "conv_id", "turn_idx", "span_start", "span_end", "rule_id"
     )

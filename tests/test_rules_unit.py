@@ -1,6 +1,6 @@
 """Pure-Python rule-bank unit tests (no SparkSession — run instantly).
 
-The anchor prefilter in ``operators/parse.py::_extract_batch`` skips any
+The anchor prefilter in ``operators/parse.py::_extract_facts_arrow`` skips any
 row whose text lacks ``rule.anchor``. That is only sound if EVERY match of
 the rule's pattern contains the anchor verbatim; these tests pin that
 invariant against representative texts from the transcript templates
