@@ -141,8 +141,8 @@ def test_sql_parse_strategy_single_generate_parity(spark, sf_dir):
 
     t = load_transcripts(spark, sf_dir)
     sql = parse_facts(t, strategy="sql").select(*FACT_COLUMNS)
-    pd_ = parse_facts(t, strategy="python").select(*FACT_COLUMNS)
-    assert _multiset_equal(sql, pd_, FACT_COLUMNS)
+    python = parse_facts(t, strategy="python").select(*FACT_COLUMNS)
+    assert _multiset_equal(sql, python, FACT_COLUMNS)
 
 
 def test_sql_parse_plan_has_single_generate(spark, sf_dir):
