@@ -18,6 +18,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cca_spark.pyworker import in_worker
+
 
 def fragment_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D6: per-turn sorted span-interval set with hash identity.
@@ -172,7 +174,7 @@ def lcs_pair_alignment(spark: SparkSession, sf_dir: str, n_pairs: int = 50) -> D
                 {"doc_a": "int64", "doc_b": "int64", "lcs_len": "int32", "sim_ratio": "float64"}
             )
 
-    return pairs.mapInPandas(align, schema=LCS_SCHEMA)
+    return pairs.mapInPandas(in_worker(align), schema=LCS_SCHEMA)
 
 
 # A2's HAVING floor: conversations with fewer routed facts are dropped

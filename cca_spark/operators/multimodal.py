@@ -36,6 +36,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cca_spark.pyworker import in_worker
+
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 # PNG color type -> sample channels (PNG spec, table 11.1)
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
@@ -120,7 +122,7 @@ def _media_corpus(
                 }
             )
 
-    return docs.mapInPandas(enc, schema="doc_id long, content binary")
+    return docs.mapInPandas(in_worker(enc), schema="doc_id long, content binary")
 
 
 # ------------------------------------------------------- header decode
@@ -192,7 +194,8 @@ def multimodal_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The header-codec query: encode -> shuffle-free Arrow decode -> typed
     features; the oracle recomputes the expected features arithmetically."""
     return _media_corpus(spark, sf_dir, _encode_png, _encode_wav).mapInPandas(
-        lambda batches: map(_real_decode_features, batches), schema=REAL_FEATURE_SCHEMA
+        in_worker(lambda batches: map(_real_decode_features, batches)),
+        schema=REAL_FEATURE_SCHEMA,
     )
 
 
@@ -354,7 +357,8 @@ def multimodal_payload_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (zlib inflate + unfilter / PCM read) -> per-doc sample statistics the
     oracle states arithmetically from the sample formulas."""
     return _media_corpus(spark, sf_dir, _encode_png_payload, _encode_wav_payload).mapInPandas(
-        lambda batches: map(_payload_decode_features, batches), schema=PAYLOAD_SCHEMA
+        in_worker(lambda batches: map(_payload_decode_features, batches)),
+        schema=PAYLOAD_SCHEMA,
     )
 
 

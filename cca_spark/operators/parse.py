@@ -28,12 +28,14 @@ and one rule-scope decision (``_scope_masks``):
   consumers ship keys, not facts. It trades Python ``re`` for RE2
   semantics, which the DuckDB oracle shares.
 
-Python-boundary task layout: both Python stages take their input through
-``python_stage_input``. Scans split at 2x task slots so the hot
-conversation's split cannot hold a whole wave back (session.py); a small
-input instead runs as one wave of ``defaultParallelism`` fuller tasks,
-because every Python task pays a fixed start-up cost that a small input's
-kernel work does not amortise (see ``ONE_WAVE_MAX_BYTES``).
+Python-boundary task layout: both kernels reach Spark through
+``pyworker.in_worker``, which keeps a reused worker's per-task set-up to
+stat calls, and take their input through ``python_stage_input``. Scans
+split at 2x task slots so the hot conversation's split cannot hold a whole
+wave back (session.py); a small input instead runs as one wave of
+``defaultParallelism`` fuller tasks, because every Python task still pays
+a fixed cost before its function runs that a small input's kernel work
+does not amortise (see ``ONE_WAVE_MAX_BYTES``).
 """
 
 from __future__ import annotations
@@ -46,6 +48,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cca_spark.pyworker import in_worker
 from cca_spark.rules import RULES, Rule, sig_fn
 
 # Bank entry: (rule, compiled pattern, derived-significance fn or None).
@@ -139,20 +142,16 @@ PARTIAL_AGG_SCHEMA = (
 
 # Below this Catalyst size estimate of the kernel input, a Python stage runs
 # as one wave of defaultParallelism tasks instead of one task per scan split.
-# Every Python-UDF task pays a fixed cost c before its function runs: the
-# worker calls importlib.invalidate_caches() per task, so each task re-reads
-# the directory of every zip on its sys.path (the spark-core jar's 5,359
-# entries ~51 ms, pyspark.zip ~12 ms, before any import). A no-op mapInArrow
-# over 8 rows at local[4] measures c = 0.28-0.44 s from task launch to the
-# function's first call. One wave saves about one c per slot and gives up
-# the 2x split's straggler balance, which costs a share of the per-slot
-# kernel work. Measured at local[4] on 4 vCPUs, the Arrow/RE2 kernel covers
-# ~1.3 MB of estimate per second per slot (~50 ms per 2.3k-turn file). A
-# 40k-turn corpus (estimate 1.1 MB, ~0.2 s of kernel per slot) runs 21%
-# faster as one wave; the 1.6M-turn bench corpus (estimate 42 MB, ~8 s per
-# slot) runs 6% slower, an imbalance of ~12% of the per-slot work. That
-# imbalance equals c at 12-18 MB, so 4 MiB sits 3-4x below the crossover
-# and 4x above the small corpus.
+# One wave saves one fixed per-task cost c per slot and gives up the 2x
+# split's straggler balance, which costs about 12% of the per-slot kernel
+# work. c is the time from job submit to the function's first call: a no-op
+# mapInArrow at local[4] on 4 vCPUs measures 0.15 s with the worker set-up
+# of pyworker.in_worker (0.48 s without it, when the worker re-reads every
+# zip on its sys.path per task). The Arrow/RE2 kernel covers ~1.3 MB of
+# estimate per second per slot, so 12% of the per-slot work equals c at
+# about 6 MB of estimate. 4 MiB sits below that crossover and 4x above a
+# 40k-turn corpus (estimate 1.1 MB), which runs 11% faster as one wave;
+# the 1.6M-turn bench corpus (estimate 42 MB) keeps its 2x split.
 ONE_WAVE_MAX_BYTES = 4 << 20
 
 
@@ -271,7 +270,9 @@ def parse_fact_partials(transcripts: DataFrame) -> DataFrame:
             if out is not None:
                 yield out
 
-    return python_stage_input(transcripts).mapInArrow(run, schema=PARTIAL_AGG_SCHEMA)
+    return python_stage_input(transcripts).mapInArrow(
+        in_worker(run), schema=PARTIAL_AGG_SCHEMA
+    )
 
 
 def _extract_facts_arrow(batch, bank: list[BankEntry]):
@@ -350,7 +351,7 @@ def parse_facts(transcripts: DataFrame, strategy: str = "python") -> DataFrame:
                 yield _extract_facts_arrow(batch, bank)
 
         facts = python_stage_input(transcripts).mapInArrow(
-            run, schema=KERNEL_FACT_SCHEMA
+            in_worker(run), schema=KERNEL_FACT_SCHEMA
         )
         return facts.select(
             F.concat_ws(

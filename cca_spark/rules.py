@@ -213,10 +213,13 @@ RULES: list[Rule] = [
         "x = ",
     ),
     # ------------------------------------------------ error_signature bank
+    # \w{1,64}, as in r_exc_class: after the header the lazy [\s\S]*? tries
+    # the class run at every later position, so an unbounded \w+ is
+    # quadratic in Python re and Java regex on a long word after a header
     Rule(
         "r_traceback",
         "error_signature",
-        r"Traceback \(most recent call last\):\n[\s\S]*?(\w+Error): ([^\n]*)",
+        r"Traceback \(most recent call last\):\n[\s\S]*?(\w{1,64}Error): ([^\n]*)",
         4,
         "Traceback (most recent call last):",
     ),

@@ -85,11 +85,11 @@ def get_spark(
         # local[32], 1.6M turns: 32 splits 5.7-7.4 s, 64 splits 4.6 s
         # (±0.2%), 128 splits 7.6 s (per-batch overhead dominates).
         # The tradeoff is two waves of Python-UDF tasks, and each Python
-        # task pays a fixed 0.28-0.44 s start-up at local[4] (the worker
-        # re-reads every zip on its sys.path per task). On a small input
-        # that fixed cost outweighs the balance, so the Python stages
-        # collapse to one wave below parse.ONE_WAVE_MAX_BYTES (40k turns:
-        # 21% less wall time); the 1.6M-turn corpus keeps its 2x split.
+        # task pays a fixed cost before its function runs (0.15 s at
+        # local[4], see parse.ONE_WAVE_MAX_BYTES). On a small input that
+        # fixed cost outweighs the balance, so the Python stages collapse
+        # to one wave below parse.ONE_WAVE_MAX_BYTES; the 1.6M-turn corpus
+        # keeps its 2x split.
         .config("spark.sql.files.minPartitionNum", str(2 * int(cpus_for_splits)))
     )
     if extra_conf:
@@ -106,8 +106,9 @@ def local_frame(spark: SparkSession, rows: Iterable[Sequence], ddl: str) -> Data
 
     ``createDataFrame`` over a Python list plans as a ``LogicalRDD`` over a
     Python RDD: every query that reads it runs ``defaultParallelism``
-    Python-worker tasks, each paying PySpark's fixed per-task cost (about
-    0.3 s at local[4]) to ship a few rows. An Arrow table under
+    Python-worker tasks, each paying PySpark's fixed per-task cost (0.15 s
+    at local[4] in a worker set up by ``pyworker.in_worker``, 0.48 s in one
+    that is not) to ship a few rows. An Arrow table under
     ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB) is sent to
     the JVM once and becomes a ``LocalRelation``, whatever
     ``spark.sql.execution.arrow.pyspark.enabled`` says, so reading it runs no

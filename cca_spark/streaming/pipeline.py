@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from cca_spark.pyworker import in_worker
 from cca_spark.transcripts import TRANSCRIPT_DDL
 
 
@@ -78,7 +79,7 @@ def running_conv_state(routed: DataFrame) -> DataFrame:
     return (
         routed.groupBy("conv_id")
         .applyInPandasWithState(
-            _update_conv_state,
+            in_worker(_update_conv_state),
             outputStructType=_OUT_SCHEMA,
             stateStructType=_STATE_SCHEMA,
             outputMode="update",
@@ -124,7 +125,7 @@ def streaming_first_seen_dedup(stream: DataFrame) -> DataFrame:
         ).alias("doc_key"),
     )
     return keyed.groupBy("text_md5").applyInPandasWithState(
-        _update_dedup_state,
+        in_worker(_update_dedup_state),
         outputStructType=_DEDUP_OUT_SCHEMA,
         stateStructType=_DEDUP_STATE_SCHEMA,
         outputMode="update",
@@ -222,7 +223,7 @@ def streaming_dedup_ttl(stream: DataFrame) -> DataFrame:
         ).alias("doc_key"),
     ).withWatermark("ts_tz", WATERMARK_DELAY)
     return keyed.groupBy("text_md5", "day").applyInPandasWithState(
-        _update_dedup_ttl_state,
+        in_worker(_update_dedup_ttl_state),
         outputStructType=_TTL_OUT_SCHEMA,
         stateStructType=_TTL_STATE_SCHEMA,
         outputMode="update",

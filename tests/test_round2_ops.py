@@ -102,8 +102,9 @@ def test_parse_handles_null_empty_huge_text(spark):
     """Edge probes from the verify recipe, pinned: NULL text, empty text,
     1 MB texts, and a multi-match text — both physical strategies, no
     crash, the same fact rows. The 1 MB word run ending in ``Error`` is
-    the backtracking probe for ``r_exc_class``: an unbounded ``\\w+`` in
-    front of a literal is quadratic in Python re and Java regex."""
+    the backtracking probe for ``r_exc_class``, and the 1 MB word run after
+    a traceback header the one for ``r_traceback``: an unbounded ``\\w+``
+    in front of a literal is quadratic in Python re and Java regex."""
     import datetime
 
     from cca_spark.operators.parse import parse_facts
@@ -116,6 +117,7 @@ def test_parse_handles_null_empty_huge_text(spark):
         ("c1", 2, "assistant", "```python\nx = 1\nprint(x)\n```" * 1, None, ts),
         ("c1", 3, "tool", "x" * 1_000_000, "bash", ts),
         ("c1", 4, "tool", "x" * 1_000_000 + "Error", "bash", ts),
+        ("c1", 5, "tool", "Traceback (most recent call last):\n" + "x" * 1_000_000, "bash", ts),
         # multi-match probe on an ASSISTANT turn (r_error_code is
         # assistant-scoped since the r3 role sub-banks)
         ("c2", 0, "assistant", "ERROR 1: a\nERROR 2: b", None, ts),
