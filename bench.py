@@ -43,9 +43,10 @@ def run_bench(sf_dir: str, master: str | None, replicas: int = 1) -> dict:
     from cca_spark.operators import similarity as SIM
     from cca_spark.operators.aggregate import agg_per_sink
     from cca_spark.plans.pipeline import fused_pipeline_agg, routed_facts
-    from cca_spark.session import get_spark
+    from cca_spark.session import codegen_counts, get_spark
 
     spark = get_spark(app_name="cca_spark_bench", master=master)
+    classes0, compile_ms0 = codegen_counts(spark)
     ncores = spark.sparkContext.defaultParallelism
 
     if replicas > 1:
@@ -116,6 +117,7 @@ def run_bench(sf_dir: str, master: str | None, replicas: int = 1) -> dict:
     if not headline_only:
         _run_secondary(bench, spark, sf_dir, transcripts)
 
+    classes, compile_ms = codegen_counts(spark)
     result = {
         "metric": "end_to_end_pipeline_sec",
         "value": round(pipeline_sec, 3),
@@ -130,6 +132,13 @@ def run_bench(sf_dir: str, master: str | None, replicas: int = 1) -> dict:
         # raw best-of-N walls (kept out of "queries": that dict is
         # name->seconds per the driver contract)
         "pipeline_pandas_trials": [round(s, 3) for s in trial_secs],
+        # generated classes Janino compiled over the run, and its compile
+        # time: a codegen cache smaller than the working set shows here as
+        # recompiles of every repeated query
+        "codegen": {
+            "classes": classes - classes0,
+            "compile_ms": round(compile_ms - compile_ms0, 1),
+        },
     }
     spark.stop()
     return result

@@ -144,14 +144,17 @@ PARTIAL_AGG_SCHEMA = (
 # as one wave of defaultParallelism tasks instead of one task per scan split.
 # One wave saves one fixed per-task cost c per slot and gives up the 2x
 # split's straggler balance, which costs about 12% of the per-slot kernel
-# work. c is the time from job submit to the function's first call: a no-op
-# mapInArrow at local[4] on 4 vCPUs measures 0.15 s with the worker set-up
-# of pyworker.in_worker (0.48 s without it, when the worker re-reads every
-# zip on its sys.path per task). The Arrow/RE2 kernel covers ~1.3 MB of
+# work. Warm no-op 4-task mapInArrow jobs at local[4] on 4 vCPUs, in workers
+# set up by pyworker.in_worker, split their 0.17-0.24 s into submit to first
+# task launch, 0.06-0.12 s, paid once per job whatever the wave count;
+# launch to function call, 0.02-0.04 s; and executor run time, 15-85 ms per
+# task. So c is about 0.06 s. The Arrow/RE2 kernel covers ~1.3 MB of
 # estimate per second per slot, so 12% of the per-slot work equals c at
-# about 6 MB of estimate. 4 MiB sits below that crossover and 4x above a
-# 40k-turn corpus (estimate 1.1 MB), which runs 11% faster as one wave;
-# the 1.6M-turn bench corpus (estimate 42 MB) keeps its 2x split.
+# about 0.65 MB per slot, 2.6 MB of estimate at local[4]. 4 MiB sits above
+# that model crossover; it is kept on measurement: a 40k-turn corpus
+# (estimate 1.1 MB) runs 11% faster as one wave, and setting this to 0 lost
+# every alternated report pair. Inputs between 2.6 MB and 4 MiB are not
+# measured. The 1.6M-turn bench corpus (estimate 42 MB) keeps its 2x split.
 ONE_WAVE_MAX_BYTES = 4 << 20
 
 

@@ -84,13 +84,31 @@ def get_spark(
         # parse work and the other cores idle behind it. Measured at
         # local[32], 1.6M turns: 32 splits 5.7-7.4 s, 64 splits 4.6 s
         # (±0.2%), 128 splits 7.6 s (per-batch overhead dominates).
-        # The tradeoff is two waves of Python-UDF tasks, and each Python
-        # task pays a fixed cost before its function runs (0.15 s at
-        # local[4], see parse.ONE_WAVE_MAX_BYTES). On a small input that
-        # fixed cost outweighs the balance, so the Python stages collapse
-        # to one wave below parse.ONE_WAVE_MAX_BYTES; the 1.6M-turn corpus
-        # keeps its 2x split.
+        # The tradeoff is two waves of Python-UDF tasks, and each extra
+        # wave costs every slot about 0.06 s before its function runs (at
+        # local[4]: launch to function call plus the task's fixed run time;
+        # submit to first launch is paid once per job, see
+        # parse.ONE_WAVE_MAX_BYTES). On a small input that fixed cost
+        # outweighs the balance, so the Python stages collapse to one wave
+        # below parse.ONE_WAVE_MAX_BYTES; the 1.6M-turn corpus keeps its
+        # 2x split.
         .config("spark.sql.files.minPartitionNum", str(2 * int(cpus_for_splits)))
+        # Generated-code cache (static; Spark's default is 100 entries). A
+        # job that cycles through more distinct generated classes than the
+        # cache holds misses on every lookup of an LRU, so each run
+        # recompiles them all in Janino and the JVM re-JITs the fresh
+        # classes. Distinct classes per run, counted with codegen_counts
+        # under a cache that holds them all: perfbench near_dup 147, report
+        # 21, ingest 52, bench.py's battery 311 (sf0.01); 1000 leaves 3x
+        # headroom over the largest. At the default
+        # every warm near_dup job recompiled 130 classes, 1.6-1.8 s of
+        # Janino and 3-5 s more JIT CPU than with this cache. The cost is
+        # metaspace and code cache kept for up to 1000 loaded classes:
+        # about 5 KB of metaspace per class (600 classes held 12.5 MB after
+        # a full GC, 10.1 MB at the default). scripts/driver_sim.py builds
+        # its own session; its one pass over the battery compiles 1071
+        # classes, each query once, so it has no cycle to thrash.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if extra_conf:
         for k, v in extra_conf.items():
@@ -100,15 +118,28 @@ def get_spark(
     return spark
 
 
+def codegen_counts(spark: SparkSession) -> tuple[int, float]:
+    """``(classes, compile_ms)`` that this JVM's whole-stage and expression
+    code generator has compiled with Janino since it started: each cache
+    miss counts one class, a cache hit none."""
+    jvm = spark._jvm
+    classes = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    generator = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    return int(classes.getCount()), generator.compileTime() / 1e6
+
+
 def local_frame(spark: SparkSession, rows: Iterable[Sequence], ddl: str) -> DataFrame:
     """A small driver-side table (``rows`` of tuples typed by ``ddl``) that
     plans as a JVM ``LocalRelation``.
 
     ``createDataFrame`` over a Python list plans as a ``LogicalRDD`` over a
-    Python RDD: every query that reads it runs ``defaultParallelism``
-    Python-worker tasks, each paying PySpark's fixed per-task cost (0.15 s
-    at local[4] in a worker set up by ``pyworker.in_worker``, 0.48 s in one
-    that is not) to ship a few rows. An Arrow table under
+    Python RDD: every query that reads it runs a job of
+    ``defaultParallelism`` Python-worker tasks to ship a few rows. At
+    local[4] the job waits 0.06-0.12 s from submit to its first task launch,
+    and each task then spends 0.02-0.04 s from launch to the function call
+    and 15-85 ms of run time, in a worker set up by ``pyworker.in_worker``
+    (one that is not re-reads every zip on its sys.path per task, 0.24-0.41
+    s more). An Arrow table under
     ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB) is sent to
     the JVM once and becomes a ``LocalRelation``, whatever
     ``spark.sql.execution.arrow.pyspark.enabled`` says, so reading it runs no

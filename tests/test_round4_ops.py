@@ -137,6 +137,25 @@ def test_connected_min_labels_long_chain_raises(spark):
         connected_min_labels(_chain_pairs(spark, 30), max_iters=3)
 
 
+def test_connected_min_labels_job_count(spark):
+    """Each round is one eager checkpoint whose Observation carries the
+    change count. On the 30-hop chain one call ran 82-83 Spark jobs when a
+    round also checkpointed its one-hop labels and counted changes in a
+    join of its own; measured now: 43. The bound is 60% of the former."""
+    from cca_spark.operators.dedup import connected_min_labels
+
+    sc = spark.sparkContext
+    pairs = _chain_pairs(spark, 30)
+    sc.setJobGroup("connected_min_labels_job_count", "job count")
+    try:
+        labels = connected_min_labels(pairs, max_iters=8)
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = sc.statusTracker().getJobIdsForGroup("connected_min_labels_job_count")
+    assert {r["doc_id"]: r["label"] for r in labels.collect()} == {i: 0 for i in range(31)}
+    assert 0 < len(jobs) <= 49
+
+
 def test_payload_decode_matches_oracle(spark, sf_dir):
     from cca_spark.operators.multimodal import multimodal_payload_decode
     from cca_spark.oracles_training import multimodal_payload_decode_sql
