@@ -28,7 +28,7 @@ is derived: every 3rd document gets a suffix-perturbed copy
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 TWIN_SUFFIX = " near duplicate twin suffix"
@@ -530,20 +530,25 @@ def simhash64_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def connected_min_labels(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     """Connected components over a pair graph by min-label propagation
     WITH pointer doubling: ``(doc_id, label)`` where label = min doc_id
-    reachable in the component. Each round does (1) a one-hop neighbor-min
-    and (2) a doubling step (label := label of my label), so reach doubles
-    per round and convergence is O(log diameter) rounds, not O(diameter)
-    — the standard Hash-to-Min style shortcut for Pregel-free connected
-    components. A 30-hop chain converges in 5 rounds.
+    reachable in the component. Each round does (1) a one-hop neighbor-min,
+    (2) root hooking (every node that had the same label takes the
+    smallest one-hop label among them) and (3) a doubling step (label :=
+    label of my label) — the hook-and-shortcut scheme of Shiloach-Vishkin
+    style connected components, Pregel-free. Without (2) only the nodes
+    on a tree's border move, and rounds grow with the diameter whenever
+    ids are not ordered along the paths: a 31-node chain with shuffled ids
+    took 11-20 rounds, 5 with it. A 30-hop chain with ordered ids
+    converges in 5 rounds either way; each perfbench near_dup seed 1-10
+    needs 4 (5 or 6 without the hook, by seed).
 
     Each round is ONE eager ``localCheckpoint`` of the new labels, which
     carry the round's previous label as ``old``; the number of changed
     labels is read from an ``Observation`` (``count_if(label != old)``) on
     that same checkpoint, so convergence costs no job of its own. The
-    one-hop result feeds both sides of the doubling join within that query
+    hooked result feeds both sides of the doubling join within that query
     and is computed once through exchange reuse. AQE runs each shuffle and
     broadcast stage as a Spark job of its own: measured on the 30-hop
-    chain, 8 jobs per round and 43 per call, against 82 when each round
+    chain, 9 jobs per round and 48 per call, against 82 when each round
     also checkpointed the one-hop labels and counted its changes in a
     separate join. The label table stays pair-graph-sized and is
     checkpointed per round, so the plan never grows. Bounded at
@@ -575,6 +580,12 @@ def connected_min_labels(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
             F.least(F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))).alias(
                 "label"
             ),
+        )
+        # root hooking: every node that shared an old label adopts the
+        # smallest one-hop label among them, so a whole tree moves at once,
+        # not only its members that border a smaller tree
+        hop = hop.select(
+            "doc_id", "old", F.min("label").over(Window.partitionBy("old")).alias("label")
         )
         # pointer doubling: adopt my label's own label (labels are ids of
         # in-component nodes, so chasing one link per round doubles the

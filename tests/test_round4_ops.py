@@ -141,7 +141,8 @@ def test_connected_min_labels_job_count(spark):
     """Each round is one eager checkpoint whose Observation carries the
     change count. On the 30-hop chain one call ran 82-83 Spark jobs when a
     round also checkpointed its one-hop labels and counted changes in a
-    join of its own; measured now: 43. The bound is 60% of the former."""
+    join of its own; measured now: 48 (43 before the root-hooking step
+    added a window stage per round). The bound is 60% of the former."""
     from cca_spark.operators.dedup import connected_min_labels
 
     sc = spark.sparkContext
@@ -220,6 +221,20 @@ def test_wav_payload_roundtrip():
             for i in range(doc_id % 200 + 40)
         ]
         assert (n, s, sq) == (len(want), sum(want), sum(v * v for v in want))
+
+
+def test_connected_min_labels_shuffled_chain_converges_in_few_rounds(spark):
+    """Root hooking: on a 31-node chain whose ids are not ordered along the
+    path, min-label propagation with pointer doubling alone needed 20
+    rounds (only the nodes on a tree's border moved); with every node of a
+    label adopting the tree's smallest one-hop label it needs 5."""
+    from cca_spark.operators.dedup import connected_min_labels
+
+    ids = [3, 22, 17, 15, 0, 25, 4, 7, 14, 16, 20, 24, 12, 18, 10, 13]
+    ids += [23, 28, 6, 19, 8, 9, 21, 5, 11, 26, 2, 1, 29, 27, 30]
+    pairs = spark.createDataFrame(list(zip(ids, ids[1:])), "doc_a long, doc_b long")
+    labels = connected_min_labels(pairs, max_iters=6)
+    assert {r["doc_id"]: r["label"] for r in labels.collect()} == {i: 0 for i in range(31)}
 
 
 def test_connected_min_labels_long_chain_converges(spark):
