@@ -38,6 +38,7 @@ def run_bench(sf_dir: str, master: str | None, replicas: int = 1) -> dict:
     from pyspark.sql import functions as F
 
     from cca_spark.bench_corpus import replicated_transcripts
+    from cca_spark.dist import ensure_on_executors
     from cca_spark.operators import dedup as DD
     from cca_spark.operators import relational as R
     from cca_spark.operators import similarity as SIM
@@ -46,6 +47,7 @@ def run_bench(sf_dir: str, master: str | None, replicas: int = 1) -> dict:
     from cca_spark.session import codegen_counts, get_spark
 
     spark = get_spark(app_name="cca_spark_bench", master=master)
+    ensure_on_executors(spark)
     classes0, compile_ms0 = codegen_counts(spark)
     ncores = spark.sparkContext.defaultParallelism
 

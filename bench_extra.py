@@ -120,9 +120,11 @@ def main() -> None:
     args = ap.parse_args()
 
     from cca_spark.bench_corpus import ensure_bench_corpus, read_bench_corpus
+    from cca_spark.dist import ensure_on_executors
     from cca_spark.session import get_spark
 
     spark = get_spark(app_name="cca_spark_bench_extra")
+    ensure_on_executors(spark)
     corpus_path = ensure_bench_corpus(spark, args.sf_dir, args.replicas)
     transcripts = read_bench_corpus(spark, corpus_path)
 

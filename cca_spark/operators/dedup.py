@@ -28,7 +28,7 @@ is derived: every 3rd document gets a suffix-perturbed copy
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 TWIN_SUFFIX = " near duplicate twin suffix"
@@ -527,81 +527,83 @@ def simhash64_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# One connected-components round as one statement over DataFrame parameters
+# ({edges}: symmetric (src, dst); {labels}: current (doc_id, label)), so the
+# round is analysed once.
+_CC_ROUND_SQL = """
+WITH hop AS (
+  -- one-hop min: each node's own label and its neighbours' labels meet in
+  -- one aggregate (old = the own label, the one non-NULL `own`), so the
+  -- node table is not joined back to the neighbour mins
+  SELECT doc_id, max(own) AS old, min(label) AS label
+  FROM (
+    SELECT doc_id, label AS own, label FROM {labels}
+    UNION ALL
+    SELECT e.src, NULL, l.label FROM {edges} e JOIN {labels} l ON e.dst = l.doc_id
+  )
+  GROUP BY doc_id
+),
+hooked AS (
+  -- root hooking: every node that shared an old label adopts the smallest
+  -- one-hop label among them, so a whole tree moves at once, not only its
+  -- members that border a smaller tree
+  SELECT doc_id, old, min(label) OVER (PARTITION BY old) AS label FROM hop
+)
+-- pointer doubling: adopt my label's own label (labels are ids of
+-- in-component nodes, so chasing one link per round doubles the reach;
+-- least() skips the NULL of an unmatched LEFT JOIN and keeps the labels
+-- monotone)
+SELECT h.doc_id, h.old, least(h.label, p.label) AS label
+FROM hooked h LEFT JOIN hooked p ON h.label = p.doc_id
+"""
+
+
 def connected_min_labels(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     """Connected components over a pair graph by min-label propagation
     WITH pointer doubling: ``(doc_id, label)`` where label = min doc_id
-    reachable in the component. Each round does (1) a one-hop neighbor-min,
-    (2) root hooking (every node that had the same label takes the
-    smallest one-hop label among them) and (3) a doubling step (label :=
-    label of my label) — the hook-and-shortcut scheme of Shiloach-Vishkin
-    style connected components, Pregel-free. Without (2) only the nodes
-    on a tree's border move, and rounds grow with the diameter whenever
-    ids are not ordered along the paths: a 31-node chain with shuffled ids
-    took 11-20 rounds, 5 with it. A 30-hop chain with ordered ids
-    converges in 5 rounds either way; each perfbench near_dup seed 1-10
-    needs 4 (5 or 6 without the hook, by seed).
+    reachable in the component. The initial labels are each node's one-hop
+    minimum (``least(src, min(dst))``, one shuffle). Each round
+    (``_CC_ROUND_SQL``) does (1) a one-hop neighbour min, (2) root hooking
+    (every node that had the same label takes the smallest one-hop label
+    among them) and (3) a doubling step (label := label of my label) — the
+    hook-and-shortcut scheme of Shiloach-Vishkin style connected
+    components, Pregel-free. Without (2) rounds grow with the diameter
+    whenever ids are not ordered along the paths.
 
-    Each round is ONE eager ``localCheckpoint`` of the new labels, which
-    carry the round's previous label as ``old``; the number of changed
-    labels is read from an ``Observation`` (``count_if(label != old)``) on
-    that same checkpoint, so convergence costs no job of its own. The
-    hooked result feeds both sides of the doubling join within that query
-    and is computed once through exchange reuse. AQE runs each shuffle and
-    broadcast stage as a Spark job of its own: measured on the 30-hop
-    chain, 9 jobs per round and 48 per call, against 82 when each round
-    also checkpointed the one-hop labels and counted its changes in a
-    separate join. The label table stays pair-graph-sized and is
-    checkpointed per round, so the plan never grows. Bounded at
-    ``max_iters`` and loud on non-convergence."""
+    Each round is ONE ``spark.sql`` statement over DataFrame parameters,
+    so it is analysed once instead of once per DataFrame operator, and ONE
+    eager ``localCheckpoint`` of the new labels, which carry the round's
+    previous label as ``old``; the number of changed labels is read from an
+    ``Observation`` (``count_if(label != old)``) on that checkpoint, so
+    convergence costs no job of its own. The hooked labels feed both sides
+    of the doubling join and are computed once through exchange reuse. AQE
+    runs each shuffle and broadcast stage as a Spark job of its own.
+    Measured: perfbench near_dup seeds 1-10 converge in 3 rounds (seed 3 in
+    4), the last round only confirming that nothing changed, in 24 jobs per
+    call (31 on seed 3); the 30-hop chain takes 5 rounds and 38 jobs, a
+    31-node chain with shuffled ids 4 rounds. The label table stays
+    pair-graph-sized and is checkpointed per round, so the plan never
+    grows. Bounded at ``max_iters`` and loud on non-convergence."""
     if max_iters < 1:
         # with zero iterations the for-else would raise referencing a
         # loop-local `changed` that never existed (ADVICE r03) — reject the
         # degenerate bound explicitly instead
         raise ValueError(f"max_iters must be >= 1, got {max_iters}")
-    edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    sym = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    spark = pairs.sparkSession
+    sym = spark.sql(
+        "SELECT doc_a AS src, doc_b AS dst FROM {pairs} "
+        "UNION ALL SELECT doc_b, doc_a FROM {pairs}",
+        pairs=pairs,
     ).localCheckpoint(eager=True)
-    labels = (
-        sym.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("label", F.col("doc_id"))
-        .localCheckpoint(eager=True)
-    )
+    labels = spark.sql(
+        "SELECT src AS doc_id, least(src, min(dst)) AS label FROM {edges} GROUP BY src",
+        edges=sym,
+    ).localCheckpoint(eager=True)
     for _ in range(max_iters):
-        neigh = (
-            sym.join(labels, sym["dst"] == labels["doc_id"])
-            .groupBy("src")
-            .agg(F.min("label").alias("nmin"))
-        )
-        hop = labels.join(neigh, labels["doc_id"] == neigh["src"], "left").select(
-            labels["doc_id"],
-            labels["label"].alias("old"),
-            F.least(F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))).alias(
-                "label"
-            ),
-        )
-        # root hooking: every node that shared an old label adopts the
-        # smallest one-hop label among them, so a whole tree moves at once,
-        # not only its members that border a smaller tree
-        hop = hop.select(
-            "doc_id", "old", F.min("label").over(Window.partitionBy("old")).alias("label")
-        )
-        # pointer doubling: adopt my label's own label (labels are ids of
-        # in-component nodes, so chasing one link per round doubles the
-        # effective reach; min() keeps the lattice monotone/safe)
-        h, p = hop.alias("h"), hop.alias("p")
         round_changes = Observation()
         labels = (
-            h.join(p, F.col("h.label") == F.col("p.doc_id"), "left")
-            .select(
-                F.col("h.doc_id"),
-                F.col("h.old"),
-                F.least(
-                    F.col("h.label"), F.coalesce(F.col("p.label"), F.col("h.label"))
-                ).alias("label"),
-            )
-            .observe(round_changes, F.count_if(F.col("label") != F.col("old")).alias("n"))
+            spark.sql(_CC_ROUND_SQL, edges=sym, labels=labels)
+            .observe(round_changes, F.expr("count_if(label != old) AS n"))
             .localCheckpoint(eager=True)
             .select("doc_id", "label")
         )

@@ -183,26 +183,38 @@ def _extract_partials_arrow(batch):
     rule bank through RE2 (``regexp_extract_all``) and hash-matches the
     Python-re kernels, so RE2-vs-re count parity on this pattern subset is
     oracle-proven; additionally pinned per-rule by
-    test_arrow_partials_kernel_parity. Scoped rules mask their counts with
-    ``_scope_masks`` BEFORE the per-sink accumulation, like the full-fact
-    kernel. The grouping tail stays in pandas over the (small)
-    nonzero key rows — pyarrow's TableGroupBy was measured emitting
+    test_arrow_partials_kernel_parity. A scoped rule runs only on the rows
+    its ``_scope_masks`` mask admits: each distinct scope's ``text`` rows
+    are taken once per batch, and its rules' counts are scattered back by
+    row index BEFORE the per-sink accumulation. A scope covers about a
+    quarter of the rows on average, so that is the share of the text RE2
+    scans for a scoped rule. The grouping tail stays in pandas over the
+    (small) nonzero key rows — pyarrow's TableGroupBy was measured emitting
     duplicate (unmerged) groups on multi-chunk real-data input, and while
     duplicate PARTIALS would still aggregate correctly downstream, the
     kernel output should stay deterministic.
     """
     texts = batch.column("text")
+    # scope key -> (row indices, or None for every row; those rows' text)
+    scoped: dict[tuple, tuple] = {}
     sink_counts: dict[str, np.ndarray] = {}
     for rule, scope in zip(RULES, _scope_masks(batch, RULES)):
+        key = (rule.role_scope, rule.tool_scope)
+        if key not in scoped:
+            idx = None if scope is None else np.flatnonzero(scope)
+            scoped[key] = (idx, texts if idx is None else texts.take(idx))
+        idx, rows = scoped[key]
         cnt = (
-            pc.fill_null(pc.count_substring_regex(texts, pattern=rule.pattern), 0)
+            pc.fill_null(pc.count_substring_regex(rows, pattern=rule.pattern), 0)
             .to_numpy(zero_copy_only=False)
             .astype(np.int64)
         )
-        if scope is not None:
-            cnt = np.where(scope, cnt, 0)
         if not cnt.any():
             continue
+        if idx is not None:
+            full = np.zeros(len(texts), np.int64)
+            full[idx] = cnt
+            cnt = full
         acc = sink_counts.get(rule.sink)
         if acc is None:
             sink_counts[rule.sink] = cnt

@@ -109,6 +109,18 @@ def get_spark(
         # its own session; its one pass over the battery compiles 1071
         # classes, each query once, so it has no cycle to thrash.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # No per-call origin capture on the driver. With it on, PySpark
+        # wraps F.col and every Column/DataFrame method so that each call
+        # walks the Python stack, tries `import IPython` and sends the call
+        # site to the JVM: building 20 F.col("a") took 260 py4j round trips
+        # with it and 60 without. A warm perfbench near_dup job made about
+        # 6,200 round trips with it, and 2,200 without it and with one
+        # statement per connected-components round. The tradeoff: an error
+        # raised by a query no longer names the Python line that built the
+        # failing expression; its error class and message stay. PySpark
+        # reads this flag once per Python process, at the first wrapped
+        # call.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -245,3 +245,105 @@ def test_connected_min_labels_long_chain_converges(spark):
     labels = connected_min_labels(_chain_pairs(spark, 30), max_iters=8)
     rows = {r["doc_id"]: r["label"] for r in labels.collect()}
     assert rows == {i: 0 for i in range(31)}
+
+
+def test_connected_min_labels_shuffled_chain_converges_in_four_rounds(spark):
+    """The initial labels are each node's one-hop minimum, so round one
+    starts a hop ahead: the shuffled 31-node chain above converges within 4
+    rounds (it needed 5 when every node started from its own id)."""
+    from cca_spark.operators.dedup import connected_min_labels
+
+    ids = [3, 22, 17, 15, 0, 25, 4, 7, 14, 16, 20, 24, 12, 18, 10, 13]
+    ids += [23, 28, 6, 19, 8, 9, 21, 5, 11, 26, 2, 1, 29, 27, 30]
+    pairs = spark.createDataFrame(list(zip(ids, ids[1:])), "doc_a long, doc_b long")
+    labels = connected_min_labels(pairs, max_iters=4)
+    assert {r["doc_id"]: r["label"] for r in labels.collect()} == {i: 0 for i in range(31)}
+
+
+def _shuffled_ids(rng, n: int, base: int) -> list[int]:
+    ids = list(range(base, base + n))
+    rng.shuffle(ids)
+    return ids
+
+
+def _graph_paths(rng) -> list[tuple[int, int]]:
+    """Five paths of 2-40 nodes whose ids are not ordered along them."""
+    edges, base = [], 0
+    for n in (2, 5, 17, 33, 40):
+        ids = _shuffled_ids(rng, n, base)
+        edges += list(zip(ids, ids[1:]))
+        base += n
+    return edges
+
+
+def _graph_star(rng) -> list[tuple[int, int]]:
+    """One hub with 60 leaves; the hub is not the smallest id."""
+    ids = _shuffled_ids(rng, 61, 100)
+    hub = ids.pop(ids.index(130))
+    return [(hub, leaf) if i % 2 else (leaf, hub) for i, leaf in enumerate(ids)]
+
+
+def _graph_hub_chains(rng) -> list[tuple[int, int]]:
+    """A hub with six chains of 12 nodes hanging off it."""
+    ids = _shuffled_ids(rng, 73, 500)
+    hub, rest = ids[0], ids[1:]
+    edges = []
+    for k in range(6):
+        chain = [hub] + rest[12 * k : 12 * (k + 1)]
+        edges += list(zip(chain, chain[1:]))
+    return edges
+
+
+def _graph_isolated_pairs(rng) -> list[tuple[int, int]]:
+    """40 components of exactly two nodes, either orientation."""
+    ids = _shuffled_ids(rng, 80, 1000)
+    return [(ids[2 * k], ids[2 * k + 1]) for k in range(40)]
+
+
+def _graph_random_forest(rng) -> list[tuple[int, int]]:
+    """400 nodes in random trees (each node links to an earlier node of its
+    tree, or starts a new tree), ids shuffled across the whole forest, plus
+    a few duplicate and reversed edges."""
+    ids = _shuffled_ids(rng, 400, 2000)
+    edges, tree_start = [], 0
+    for i in range(1, len(ids)):
+        if rng.random() < 0.04:
+            tree_start = i
+            continue
+        edges.append((ids[i], ids[rng.randrange(tree_start, i)]))
+    edges += [(b, a) for a, b in rng.sample(edges, 20)] + rng.sample(edges, 10)
+    return edges
+
+
+def _union_find_min_labels(edges: list[tuple[int, int]]) -> dict[int, int]:
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)  # the root is the component's min
+    return {x: find(x) for x in parent}
+
+
+@pytest.mark.parametrize(
+    "graph",
+    [_graph_paths, _graph_star, _graph_hub_chains, _graph_isolated_pairs, _graph_random_forest],
+)
+def test_connected_min_labels_matches_union_find(spark, graph):
+    """Every node gets its component's smallest id, as a Python union-find
+    computes it, on seeded graphs whose ids are shuffled."""
+    import random
+
+    from cca_spark.operators.dedup import connected_min_labels
+
+    edges = graph(random.Random(graph.__name__))
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    got = {r["doc_id"]: r["label"] for r in connected_min_labels(pairs).collect()}
+    assert got == _union_find_min_labels(edges)
