@@ -11,6 +11,8 @@ and registers it with ``SparkContext.addPyFile`` — the same mechanism
 
 from __future__ import annotations
 
+import atexit
+import contextlib
 import os
 import tempfile
 import zipfile
@@ -22,9 +24,14 @@ _SENTINEL_ATTR = "_cca_spark_pyfile_added"
 
 
 def build_zip(path: str | None = None) -> str:
-    """Zip the cca_spark package (for --py-files or addPyFile)."""
+    """Zip the cca_spark package (for --py-files or addPyFile).
+
+    The default path names this process, so two processes shipping
+    different checkouts at once never write or register each other's
+    archive; the file is removed when the process exits."""
     if path is None:
-        path = os.path.join(tempfile.gettempdir(), "cca_spark_dist.zip")
+        path = os.path.join(tempfile.gettempdir(), f"cca_spark_dist_{os.getpid()}.zip")
+        atexit.register(_remove, path)
     tmp = path + ".tmp"
     with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
         for root, _dirs, files in os.walk(_PKG_DIR):
@@ -36,6 +43,11 @@ def build_zip(path: str | None = None) -> str:
                 zf.write(full, rel)
     os.replace(tmp, path)
     return path
+
+
+def _remove(path: str) -> None:
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(path)
 
 
 def ensure_on_executors(spark: SparkSession) -> None:

@@ -62,19 +62,6 @@ FANOUT_MAX_RECORDS_PER_FILE = 1_000_000
 FANOUT_COMPRESSION = "zstd"
 
 
-def salted_sink_repartition(routed: DataFrame) -> DataFrame:
-    """The routed fact stream clustered by ``(sink, date_bucket)`` plus a
-    deterministic ``entity_id`` salt, so each write task holds few open
-    writers and each leaf is written by at most ``FANOUT_WRITE_SALTS``
-    tasks. Without it every task keeps a writer open per leaf it touches,
-    which is slower and multiplies the file count."""
-    return (
-        routed.withColumn("_w", F.pmod(F.xxhash64("entity_id"), F.lit(FANOUT_WRITE_SALTS)))
-        .repartition(F.col("sink"), F.col("date_bucket"), F.col("_w"))
-        .drop("_w")
-    )
-
-
 def write_sinks(routed: DataFrame, out_dir: str) -> None:
     """Fan-out write of a routed fact stream: one parquet tree under
     ``out_dir`` partitioned by ``(sink, date_bucket)``.
@@ -90,9 +77,17 @@ def write_sinks(routed: DataFrame, out_dir: str) -> None:
     directory and a rename per written partition, which static overwrite
     of a whole fresh directory would skip. Readers select partitions by
     column name, so the directory nesting order is not part of the
-    contract."""
+    contract.
+
+    The stream is first clustered by ``(sink, date_bucket)`` plus a
+    deterministic ``entity_id`` salt, so each write task holds few open
+    writers and each leaf is written by at most ``FANOUT_WRITE_SALTS``
+    tasks. Without it every task keeps a writer open per leaf it touches,
+    which is slower and multiplies the file count."""
     (
-        salted_sink_repartition(routed)
+        routed.withColumn("_w", F.pmod(F.xxhash64("entity_id"), F.lit(FANOUT_WRITE_SALTS)))
+        .repartition(F.col("sink"), F.col("date_bucket"), F.col("_w"))
+        .drop("_w")
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .option("maxRecordsPerFile", str(FANOUT_MAX_RECORDS_PER_FILE))

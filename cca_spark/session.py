@@ -21,7 +21,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# task slots of the default local master, and its shuffle width: the host's
+# cores unless $SPARK_GRAFT_CPUS says otherwise
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
 
 
 def get_spark(
@@ -32,18 +34,17 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` so the same code
-    runs unchanged under ``spark-submit`` on a real cluster (where the
-    master comes from the submit command and this argument stays None).
+    ``master`` defaults to ``local[CPUS]`` so the same code runs unchanged
+    under ``spark-submit`` on a real cluster (where the master comes from
+    the submit command and this argument stays None).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
-    nshuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{CPUS}]")
+    nshuffle = shuffle_partitions or CPUS
     # split sizing follows the ACTUAL master width (an explicit local[N]
     # master overrides $SPARK_GRAFT_CPUS)
     m = re.fullmatch(r"local\[(\d+|\*)\]", master)
     cpus_for_splits = (
-        os.cpu_count() if m and m.group(1) == "*" else int(m.group(1)) if m else int(cpus)
+        os.cpu_count() if m and m.group(1) == "*" else int(m.group(1)) if m else CPUS
     )
 
     builder = (

@@ -10,7 +10,8 @@ over the stored replicated transcript corpus (default 192 x sf0.1 =
 per-query battery checks (plans/manifest.run_with_resume,
 dedup.lsh_verified_pairs + connected_min_labels,
 textstats.quality_score_over / lang_id_over / tfidf_top_terms_over), so
-this measures cross-operator composition — per-stage wall times plus
+this measures cross-operator composition: per-stage wall times and
+rollups of Spark's task metrics (``cca_spark.metrics.stage``), plus
 arithmetic cross-checks that the stage row counts are mutually
 consistent. Stage outputs are localCheckpointed at each boundary so a
 stage's wall charges its own computation only (and no stage silently
@@ -18,8 +19,8 @@ recomputes its upstream, the cross-operator failure mode a per-query
 battery can't see).
 
 Usage: python scripts/production_day.py [replicas=192]
-Writes BENCH_production_day.json (folded into BENCH.md by
-scripts/scaling_bench.py).
+Prints one JSON report; a run over at least 1M turns also writes it to
+BENCH_production_day.json.
 """
 
 from __future__ import annotations
@@ -29,26 +30,8 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-def _release(spark) -> None:
-    """Free dropped checkpoint/shuffle blocks between stages (the same
-    discipline as bench.py): the ContextCleaner frees them on weak-ref GC,
-    which otherwise lands mid-next-stage and inflates walls/heap. Also
-    drain CacheManager: persist()-based caches (e.g. tfidf's lazy
-    DISK_ONLY tf cache) hold a STRONG reference until explicit
-    unpersist/clearCache — GC alone never frees them, and a corpus-sized
-    cache pinned across stages is exactly the disk hazard the wave
-    discipline exists to avoid. localCheckpoints are NOT in CacheManager,
-    so stage boundaries survive this."""
-    import gc
-
-    spark.catalog.clearCache()
-    gc.collect()
-    spark._jvm.System.gc()
 
 
 def main() -> None:
@@ -57,10 +40,11 @@ def main() -> None:
 
     from cca_spark import chain
     from cca_spark.bench_corpus import ensure_bench_corpus, read_bench_corpus
+    from cca_spark.dist import ensure_on_executors
+    from cca_spark.metrics import FIELDS, release, stage
     from cca_spark.plans.manifest import read_facts, read_manifest, run_with_resume
     from cca_spark.session import get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     # local-mode driver == the whole cluster: the 19.2M-turn chain holds
     # the 200M-fact ingest write plus stage-boundary checkpoint blocks, and
     # the default 8g heap OOMed the context cleaner at stage ~85. A real
@@ -71,7 +55,6 @@ def main() -> None:
     def fresh_session():
         s = get_spark(
             app_name="production_day",
-            master=f"local[{cpus}]",
             # 256 (not cores) shuffle partitions: the ingest write sorts
             # long-span fact rows; at 64 partitions a reducer's sort
             # exceeded its execution-memory share (UNABLE_TO_ACQUIRE_MEMORY
@@ -85,16 +68,23 @@ def main() -> None:
             extra_conf={"spark.io.compression.codec": "zstd"},
         )
         s.sparkContext.setLogLevel("ERROR")
+        ensure_on_executors(s)
         return s
 
     spark = fresh_session()
     # corpus materialization is the stored input table, not the pipeline —
-    # excluded from stage timing (same rule as the scaling bench)
+    # excluded from stage timing (same rule as bench.py)
     path = ensure_bench_corpus(spark, sf_dir, replicas)
     n_turns = read_bench_corpus(spark, path).count()
     spark.stop()
 
     stages: list[dict] = []
+
+    def record(name: str, m: dict, **counts) -> None:
+        """A report stage entry: its wall in ``sec``, the row counts, and the
+        block's rollup of Spark's task metrics."""
+        stages.append({"stage": name, "sec": round(m["wall_s"], 1), **counts, **m})
+
     checks: dict[str, bool] = {}
     out_dir = tempfile.mkdtemp(prefix="cca_production_day_")
     try:
@@ -107,153 +97,121 @@ def main() -> None:
         # a single-session 30-partition run overran this sandbox's ~80 GB
         # free disk. (On a real cluster the same math sizes
         # spark.local.dir per executor.) The manifest makes the waves a
-        # resume chain, which is precisely the operator under test.
-        t0 = time.time()
+        # resume chain, which is precisely the operator under test. The
+        # stage sums one rollup per wave, each read before its session
+        # stops (the status store goes with the session); session start
+        # and stop are not in it.
+        ingest = dict.fromkeys(FIELDS, 0)
         waves = 0
         while True:
             spark = fresh_session()
             corpus = read_bench_corpus(spark, path)
-            r = run_with_resume(
-                spark, sf_dir, out_dir, max_partitions=5, transcripts=corpus
-            )
+            with stage(spark, "ingest_resume_manifest") as m:
+                r = run_with_resume(
+                    spark, sf_dir, out_dir, max_partitions=5, transcripts=corpus
+                )
             spark.stop()  # frees the wave's shuffle + spill files
+            ingest = {k: round(ingest[k] + m[k], 3) for k in FIELDS}
             if not r["processed"]:
                 break
             waves += 1
         spark = fresh_session()
         corpus = read_bench_corpus(spark, path)
-        w = time.time() - t0
         # integrity read-back is verification, not pipeline work: it gets
         # its OWN wall (VERDICT r04 #7) so the ingest number stays honest
         # and the verify cost is visible instead of vanishing
-        tv = time.time()
-        facts_committed = read_facts(spark, out_dir).count()
-        manifest_sum = (
-            read_manifest(spark, out_dir).agg(F.sum("n_facts")).collect()[0][0]
-        )
-        verify_w = time.time() - tv
+        with stage(spark, "ingest_readback_verify") as verify:
+            facts_committed = read_facts(spark, out_dir).count()
+            manifest_sum = (
+                read_manifest(spark, out_dir).agg(F.sum("n_facts")).collect()[0][0]
+            )
         checks["ingest_readback_equals_manifest"] = facts_committed == manifest_sum
-        stages.append(
-            {
-                "stage": "ingest_resume_manifest",
-                "sec": round(w, 1),
-                "rows_in": n_turns,
-                "rows_out": facts_committed,
-                "waves": waves,
-            }
+        record(
+            "ingest_resume_manifest", ingest, rows_in=n_turns, rows_out=facts_committed, waves=waves
         )
-        stages.append(
-            {
-                "stage": "ingest_readback_verify",
-                "sec": round(verify_w, 1),
-                "rows_in": facts_committed,
-                "rows_out": facts_committed,
-                "note": "verification only — full fact read-back + manifest sum; not pipeline work",
-            }
+        record(
+            "ingest_readback_verify",
+            verify,
+            rows_in=facts_committed,
+            rows_out=facts_committed,
+            note="verification only — full fact read-back + manifest sum; not pipeline work",
         )
 
-        _release(spark)
+        release(spark)
 
         # ---- stage 2: exact dedup (turns as documents); stage dataflow
         # is the SHARED builders in cca_spark/chain.py — the same
         # expressions scripts/plan_evidence.py audits, by construction
-        t0 = time.time()
-        docs = chain.turns_as_docs(corpus)
-        groups = chain.exact_dedup_groups(docs).localCheckpoint(eager=True)
-        survivors = chain.exact_dedup_survivors(groups, docs).localCheckpoint(
-            eager=True
-        )
-        n_exact_survivors = survivors.count()
-        w = time.time() - t0
+        with stage(spark, "exact_dedup") as m:
+            docs = chain.turns_as_docs(corpus)
+            groups = chain.exact_dedup_groups(docs).localCheckpoint(eager=True)
+            survivors = chain.exact_dedup_survivors(groups, docs).localCheckpoint(
+                eager=True
+            )
+            n_exact_survivors = survivors.count()
         copies_total = groups.agg(F.sum("n_copies")).collect()[0][0]
         checks["exact_dedup_copies_sum_to_input"] = copies_total == n_turns
         checks["exact_dedup_one_keeper_per_hash"] = (
             n_exact_survivors == groups.count()
         )
-        stages.append(
-            {
-                "stage": "exact_dedup",
-                "sec": round(w, 1),
-                "rows_in": n_turns,
-                "rows_out": n_exact_survivors,
-            }
-        )
+        record("exact_dedup", m, rows_in=n_turns, rows_out=n_exact_survivors)
 
-        _release(spark)
+        release(spark)
 
         # ---- stage 3: transitive near-dup keep-list on the survivors
-        t0 = time.time()
-        labels = chain.near_dup_labels(survivors)
-        kept = chain.apply_keep_list(survivors, labels).localCheckpoint(eager=True)
-        n_kept = kept.count()
-        w = time.time() - t0
+        with stage(spark, "near_dup_keep_list_transitive") as m:
+            labels = chain.near_dup_labels(survivors)
+            kept = chain.apply_keep_list(survivors, labels).localCheckpoint(eager=True)
+            n_kept = kept.count()
         n_labeled = labels.count()
         n_label_dupes = labels.filter(F.col("label") != F.col("doc_id")).count()
         checks["near_dup_counts_consistent"] = (
             n_kept == n_exact_survivors - n_label_dupes
         )
-        stages.append(
-            {
-                "stage": "near_dup_keep_list_transitive",
-                "sec": round(w, 1),
-                "rows_in": n_exact_survivors,
-                "rows_out": n_kept,
-                "pair_graph_nodes": n_labeled,
-                "components_removed_docs": n_label_dupes,
-            }
+        record(
+            "near_dup_keep_list_transitive",
+            m,
+            rows_in=n_exact_survivors,
+            rows_out=n_kept,
+            pair_graph_nodes=n_labeled,
+            components_removed_docs=n_label_dupes,
         )
 
-        _release(spark)
+        release(spark)
 
         # ---- stage 4: quality + language filter (battery-checked
         # operators; thresholds are the log-corpus POLICY — see
         # chain.LOG_QUALITY_POLICY for the prose-default rationale)
-        t0 = time.time()
-        filtered = chain.quality_lang_filtered(kept).localCheckpoint(eager=True)
-        n_filtered = filtered.count()
-        w = time.time() - t0
+        with stage(spark, "quality_lang_filter") as m:
+            filtered = chain.quality_lang_filtered(kept).localCheckpoint(eager=True)
+            n_filtered = filtered.count()
         checks["filter_is_subset"] = n_filtered <= n_kept
-        stages.append(
-            {
-                "stage": "quality_lang_filter",
-                "sec": round(w, 1),
-                "rows_in": n_kept,
-                "rows_out": n_filtered,
-            }
-        )
+        record("quality_lang_filter", m, rows_in=n_kept, rows_out=n_filtered)
 
-        _release(spark)
+        release(spark)
 
         # ---- stage 5: TF-IDF top-3 index over the filtered corpus
-        t0 = time.time()
-        idx = chain.build_tfidf_index(filtered).localCheckpoint(eager=True)
-        n_index_rows = idx.count()
-        w = time.time() - t0
+        with stage(spark, "tfidf_index") as m:
+            idx = chain.build_tfidf_index(filtered).localCheckpoint(eager=True)
+            n_index_rows = idx.count()
         n_indexed_docs = idx.select("doc_id").distinct().count()
         checks["index_covers_all_nonempty_docs"] = (
             n_indexed_docs
             == filtered.filter(F.trim(F.col("text")) != "").count()
         )
         checks["index_at_most_k_rows_per_doc"] = n_index_rows <= 3 * n_indexed_docs
-        stages.append(
-            {
-                "stage": "tfidf_index",
-                "sec": round(w, 1),
-                "rows_in": n_filtered,
-                "rows_out": n_index_rows,
-                "indexed_docs": n_indexed_docs,
-            }
+        record(
+            "tfidf_index", m, rows_in=n_filtered, rows_out=n_index_rows, indexed_docs=n_indexed_docs
         )
 
-        _release(spark)
+        release(spark)
 
         # ---- stage 6 (r5): repetition gate + PII scrub — the hygiene
         # steps between "filtered" and "trainable" (battery-oracled
         # operators via the shared chain builder)
-        t0 = time.time()
-        scrubbed = chain.repetition_scrubbed(filtered).localCheckpoint(eager=True)
-        n_scrubbed = scrubbed.count()
-        w = time.time() - t0
+        with stage(spark, "repetition_gate_pii_scrub") as m:
+            scrubbed = chain.repetition_scrubbed(filtered).localCheckpoint(eager=True)
+            n_scrubbed = scrubbed.count()
         n_redacted = scrubbed.filter("was_redacted").count()
         checks["scrub_is_subset"] = n_scrubbed <= n_filtered
         # completeness: NO scrubbed text may still match any PII pattern
@@ -267,27 +225,24 @@ def main() -> None:
         checks["scrub_leaves_no_residual_pii"] = (
             scrubbed.filter(residual).count() == 0
         )
-        stages.append(
-            {
-                "stage": "repetition_gate_pii_scrub",
-                "sec": round(w, 1),
-                "rows_in": n_filtered,
-                "rows_out": n_scrubbed,
-                "redacted_docs": n_redacted,
-            }
+        record(
+            "repetition_gate_pii_scrub",
+            m,
+            rows_in=n_filtered,
+            rows_out=n_scrubbed,
+            redacted_docs=n_redacted,
         )
 
-        _release(spark)
+        release(spark)
 
         # ---- stage 7 (r5): token-budget sequence packing of the clean
         # scrubbed corpus — the batch-assembly step (battery-oracled
         # operator via the shared chain builder; shard-local cumsum)
-        t0 = time.time()
         from cca_spark.operators.corpus_prep import PACK_BUDGET
 
-        packed = chain.pack_sequences(scrubbed).localCheckpoint(eager=True)
-        n_packed = packed.count()
-        w = time.time() - t0
+        with stage(spark, "sequence_packing") as m:
+            packed = chain.pack_sequences(scrubbed).localCheckpoint(eager=True)
+            n_packed = packed.count()
         agg = packed.agg(
             F.countDistinct("shard", "bin_id").alias("n_bins"),
             F.sum("n_tokens").alias("total_tokens"),
@@ -323,28 +278,25 @@ def main() -> None:
         checks["packing_bin_count_bounded"] = (
             agg["n_bins"] <= agg["total_tokens"] // PACK_BUDGET + packed.select("shard").distinct().count()
         )
-        stages.append(
-            {
-                "stage": "sequence_packing",
-                "sec": round(w, 1),
-                "rows_in": n_scrubbed,
-                "rows_out": n_packed,
-                "bins": int(agg["n_bins"]),
-                "total_tokens": int(agg["total_tokens"]),
-            }
+        record(
+            "sequence_packing",
+            m,
+            rows_in=n_scrubbed,
+            rows_out=n_packed,
+            bins=int(agg["n_bins"]),
+            total_tokens=int(agg["total_tokens"]),
         )
 
-        _release(spark)
+        release(spark)
 
         # ---- stage 8 (r5): per-epoch training-shard shuffle of the
         # final clean corpus (battery-oracled operator via the shared
         # chain builder; shard-partitioned rank window, no global sort)
-        t0 = time.time()
         from cca_spark.operators.corpus_prep import SHUFFLE_SHARDS
 
-        shuffled = chain.epoch_shuffle(scrubbed).localCheckpoint(eager=True)
-        n_shuffled = shuffled.count()
-        w = time.time() - t0
+        with stage(spark, "epoch_shard_shuffle") as m:
+            shuffled = chain.epoch_shuffle(scrubbed).localCheckpoint(eager=True)
+            n_shuffled = shuffled.count()
         checks["shuffle_preserves_rows"] = n_shuffled == n_scrubbed
         # positions must be a permutation of 0..n_i-1 within every shard.
         # min==0 and max+1==n alone pass on duplicated positions with a
@@ -368,14 +320,8 @@ def main() -> None:
         checks["shuffle_positions_contiguous"] = bool(
             perm["mn_ok"] and perm["mx_ok"] and perm["distinct_ok"]
         )
-        stages.append(
-            {
-                "stage": "epoch_shard_shuffle",
-                "sec": round(w, 1),
-                "rows_in": n_scrubbed,
-                "rows_out": n_shuffled,
-                "shards": SHUFFLE_SHARDS,
-            }
+        record(
+            "epoch_shard_shuffle", m, rows_in=n_scrubbed, rows_out=n_shuffled, shards=SHUFFLE_SHARDS
         )
 
         report = {

@@ -1,10 +1,18 @@
-"""Driver-side cost of building DataFrame expressions. With PySpark's
-per-call origin capture on, every wrapped call (``F.col``, each Column and
-DataFrame method) walks the Python stack and sends its call site to the JVM
-over py4j; ``get_spark`` turns it off."""
+"""Session and distribution set-up. Driver-side cost of building DataFrame
+expressions: with PySpark's per-call origin capture on, every wrapped call
+(``F.col``, each Column and DataFrame method) walks the Python stack and
+sends its call site to the JVM over py4j; ``get_spark`` turns it off. The
+default core count comes from the host, and each process ships its own
+package archive."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parent.parent
 DEBUG_CONF = "spark.python.sql.dataFrameDebugging.enabled"
 
 
@@ -44,3 +52,33 @@ def test_column_building_skips_origin_capture(spark, monkeypatch):
     assert _round_trips_for_20_cols(monkeypatch, None) <= 3 * 20
     # the bound above would not notice a capture this count could not see
     assert _round_trips_for_20_cols(monkeypatch, True) > 6 * 20
+
+
+def _python(code: str, env: dict) -> str:
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=REPO, env=env, capture_output=True, text=True
+    )
+    assert out.returncode == 0, out.stderr
+    return out.stdout.strip()
+
+
+def test_cpus_default_to_the_host():
+    """With ``SPARK_GRAFT_CPUS`` unset, the default local master and its
+    shuffle width take the host's cores; set, the variable wins."""
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    code = "import os, cca_spark.session as s; print(s.CPUS, os.cpu_count())"
+    cpus, host = _python(code, env).split()
+    assert cpus == host
+    assert _python(code, {**env, "SPARK_GRAFT_CPUS": "3"}).split()[0] == "3"
+
+
+def test_build_zip_default_path_is_per_process():
+    """Two processes never share the default archive, and a process's
+    archive goes when it exits."""
+    from cca_spark.dist import build_zip
+
+    other = _python("from cca_spark.dist import build_zip; print(build_zip())", dict(os.environ))
+    mine = build_zip()
+    assert other != mine
+    assert os.path.exists(mine)
+    assert not os.path.exists(other)
