@@ -9,7 +9,9 @@ change_base.ml:951-956); per-key fact buffers write one file per category
 Spark mapping: the sink is a column (assigned by the rule bank at parse
 time, overridden to ``dead_letter`` for unknown tools); fan-out is one
 partitioned write — ``partitionBy("sink", "date_bucket")`` — not N filtered
-jobs. Hot conversations (the reference's "huge node" special-case,
+jobs; files per leaf are bounded by AQE's advisory partition size, not a
+fixed salt (``write_sinks``). Hot conversations in the compute stages (the
+reference's "huge node" special-case,
 /root/reference/src/ast/analyzing/diffast.ml:294-305) are defused by a
 salted repartition that spreads one conv's rows over ``n_salts`` tasks;
 the salt never reaches a key of any order-sensitive window (the
@@ -18,7 +20,7 @@ the salt never reaches a key of any order-sensitive window (the
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from cca_spark.rules import DEAD_LETTER_SINK
@@ -51,20 +53,16 @@ def salted_repartition(df: DataFrame, n_salts: int = 16) -> DataFrame:
     return salted.repartition(F.col("conv_id"), F.col("_salt")).drop("_salt")
 
 
-# Fan-out write layout. Two salts per (sink, date_bucket) leaf keep the
-# files few and large, which lets parquet's dictionary encoding amortize
-# (with 32 shuffle partitions and ~165 leaves writer parallelism is already
-# saturated); at production scale raise the salts until a salt-partition
-# reaches the table's target file size. zstd writes fewer bytes than
-# snappy at equal-or-better wall on local disk.
-FANOUT_WRITE_SALTS = 2
+# zstd writes fewer bytes than snappy at equal-or-better wall on local disk
 FANOUT_MAX_RECORDS_PER_FILE = 1_000_000
 FANOUT_COMPRESSION = "zstd"
 
 
-def write_sinks(routed: DataFrame, out_dir: str) -> None:
+def write_sinks(routed: DataFrame, out_dir: str, *metrics: Column) -> dict:
     """Fan-out write of a routed fact stream: one parquet tree under
-    ``out_dir`` partitioned by ``(sink, date_bucket)``.
+    ``out_dir`` partitioned by ``(sink, date_bucket)``. Returns the rows
+    written as ``n_facts`` plus the caller's named aggregate ``metrics``
+    over the same rows.
 
     Reference: size-rotated per-category N-Triples shards
     (triple.ml:839-935, fact_size_threshold fact_options.ml:37);
@@ -79,15 +77,20 @@ def write_sinks(routed: DataFrame, out_dir: str) -> None:
     column name, so the directory nesting order is not part of the
     contract.
 
-    The stream is first clustered by ``(sink, date_bucket)`` plus a
-    deterministic ``entity_id`` salt, so each write task holds few open
-    writers and each leaf is written by at most ``FANOUT_WRITE_SALTS``
-    tasks. Without it every task keeps a writer open per leaf it touches,
-    which is slower and multiplies the file count."""
+    The stream is clustered by ``REBALANCE(sink, date_bucket)``: AQE packs
+    small leaves into one task and splits a leaf above
+    ``advisoryPartitionSizeInBytes`` over several, so a leaf is one file
+    unless it is larger than that. The tradeoff: the file count follows the
+    data and the session's advisory size, not a constant.
+
+    The observed counts are exact only while the ``Observation`` sits above
+    the rebalance exchange, in the write's result stage, where Spark applies
+    each task's accumulator update once; in the map stage below it a re-run
+    map task would count its rows twice."""
+    obs = Observation()
     (
-        routed.withColumn("_w", F.pmod(F.xxhash64("entity_id"), F.lit(FANOUT_WRITE_SALTS)))
-        .repartition(F.col("sink"), F.col("date_bucket"), F.col("_w"))
-        .drop("_w")
+        routed.hint("rebalance", "sink", "date_bucket")
+        .observe(obs, F.count(F.lit(1)).alias("n_facts"), *metrics)
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .option("maxRecordsPerFile", str(FANOUT_MAX_RECORDS_PER_FILE))
@@ -95,6 +98,7 @@ def write_sinks(routed: DataFrame, out_dir: str) -> None:
         .partitionBy("sink", "date_bucket")
         .parquet(out_dir)
     )
+    return obs.get
 
 
 # rows one salted task should hold: smaller splits hot conversations into

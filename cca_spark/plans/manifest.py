@@ -11,15 +11,18 @@ Spark mapping (Iceberg-shaped, parquet-backed in this sandbox):
 - the unit of work is an input partition (``date_bucket``) — the same
   granularity a production job gets from ``days(ts)`` Iceberg partitions;
 - a **manifest table** records one lineage row per processed partition:
-  input rows seen, facts routed per sink, wall time, run id;
+  input rows seen, facts and dead letters written, wall time, run id;
 - a run processes only unmanifested partitions; the data write uses
   dynamic partition overwrite so a crash between data-write and
   manifest-write re-runs that partition idempotently (write is atomic per
   partition, manifest is the commit record — the same two-phase discipline
   as Iceberg snapshot + metadata commit);
-- metrics come from one aggregate over the routed output (observable in
-  the manifest), mirroring CCA's per-pair ``stat``/``info`` sidecars
-  (stat.ml:233-284).
+- the lineage counts are what the run itself saw, mirroring CCA's
+  per-pair ``stat``/``info`` sidecars (stat.ml:233-284): ``n_turns`` from
+  the per-day input count that also finds the pending days, ``n_facts`` and
+  ``n_dead_letter`` observed by the data write. Nothing is read back, so
+  checking the committed files against the manifest is left to readers
+  (perfbench ``ingest`` checks read-back = manifest = DuckDB oracle).
 """
 
 from __future__ import annotations
@@ -31,6 +34,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cca_spark.rules import DEAD_LETTER_SINK
 from cca_spark.session import local_frame
 
 MANIFEST_SCHEMA = (
@@ -86,7 +90,11 @@ def run_with_resume(
     ``transcripts`` overrides the sf_dir derivation — used to resume over a
     STORED corpus (the bench-scale kill/resume evidence in BENCH.md reads
     the materialized 19.2M-turn table, as production reads Iceberg).
-    """
+
+    One ``groupBy(day).count()`` over the input gives the pending days and
+    their ``n_turns``; the write observes a facts and a dead-letter
+    ``count_if`` per pending day. Manifest rows are appended only after the
+    write returns."""
     from cca_spark.operators.route import write_sinks
     from cca_spark.plans.pipeline import routed_facts
     from cca_spark.transcripts import load_transcripts
@@ -95,58 +103,36 @@ def run_with_resume(
     run_id = uuid.uuid4().hex[:12]
     if transcripts is None:
         transcripts = load_transcripts(spark, sf_dir)
-    transcripts = transcripts.withColumn(
-        "date_bucket_in", F.col("ts").cast("date").cast("string")
-    )
+    day = F.col("ts").cast("date").cast("string")
 
-    all_parts = {
-        r["date_bucket_in"]
-        for r in transcripts.select("date_bucket_in").distinct().collect()
-    }
+    n_turns = dict(transcripts.groupBy(day).count().collect())
     done = processed_partitions(spark, out_dir)
-    pending = sorted(all_parts - done)
+    pending = sorted(n_turns.keys() - done)
     if max_partitions is not None:
         pending = pending[:max_partitions]
     if not pending:
         return {"run_id": run_id, "processed": [], "skipped": len(done)}
 
-    subset = transcripts.filter(F.col("date_bucket_in").isin(pending)).drop("date_bucket_in")
-    routed = routed_facts(spark, subset).withColumn(
+    routed = routed_facts(spark, transcripts.filter(day.isin(pending))).withColumn(
         "date_bucket", F.col("date_bucket").cast("string")
     )
+    dead = F.col("sink") == DEAD_LETTER_SINK
+    per_day = [(d, F.col("date_bucket") == d) for d in pending]
     # dynamic partition overwrite => a re-run replaces only its own days
-    write_sinks(routed, _facts_dir(out_dir))
-
-    # lineage metrics from the committed output (read-back = what a
-    # downstream consumer will see, not what we hoped we wrote)
-    committed = spark.read.parquet(_facts_dir(out_dir)).filter(
-        F.col("date_bucket").isin(pending)
-    )
-    per_part = (
-        committed.groupBy("date_bucket")
-        .agg(
-            F.count("*").alias("n_facts"),
-            F.sum(F.when(F.col("sink") == "dead_letter", 1).otherwise(0)).alias("n_dead_letter"),
-        )
-    )
-    turns_per_part = (
-        subset.withColumn("date_bucket", F.col("ts").cast("date").cast("string"))
-        .groupBy("date_bucket")
-        .agg(F.count("*").alias("n_turns"))
+    seen = write_sinks(
+        routed,
+        _facts_dir(out_dir),
+        *[F.count_if(c).alias(f"facts {d}") for d, c in per_day],
+        *[F.count_if(c & dead).alias(f"dead {d}") for d, c in per_day],
     )
     wall_ms = int((time.time() - t0) * 1000)
-    manifest_rows = (
-        turns_per_part.join(per_part, "date_bucket", "left")
-        .select(
-            "date_bucket",
-            F.col("n_turns").cast("long"),
-            F.coalesce(F.col("n_facts"), F.lit(0)).cast("long").alias("n_facts"),
-            F.coalesce(F.col("n_dead_letter"), F.lit(0)).cast("long").alias("n_dead_letter"),
-            F.lit(wall_ms).cast("long").alias("wall_ms"),
-            F.lit(run_id).alias("run_id"),
-        )
+    rows = [
+        (d, n_turns[d], seen[f"facts {d}"], seen[f"dead {d}"], wall_ms, run_id)
+        for d in pending
+    ]
+    local_frame(spark, rows, MANIFEST_SCHEMA).write.mode("append").parquet(
+        _manifest_dir(out_dir)
     )
-    manifest_rows.write.mode("append").parquet(_manifest_dir(out_dir))
     return {"run_id": run_id, "processed": pending, "skipped": len(done)}
 
 

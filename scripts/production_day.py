@@ -43,7 +43,7 @@ def main() -> None:
     from cca_spark.dist import ensure_on_executors
     from cca_spark.metrics import FIELDS, release, stage
     from cca_spark.plans.manifest import read_facts, read_manifest, run_with_resume
-    from cca_spark.session import get_spark
+    from cca_spark.session import CPUS, get_spark
 
     # local-mode driver == the whole cluster: the 19.2M-turn chain holds
     # the 200M-fact ingest write plus stage-boundary checkpoint blocks, and
@@ -52,15 +52,10 @@ def main() -> None:
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "40g")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    def fresh_session():
+    def fresh_session(shuffle_partitions: int):
         s = get_spark(
             app_name="production_day",
-            # 256 (not cores) shuffle partitions: the ingest write sorts
-            # long-span fact rows; at 64 partitions a reducer's sort
-            # exceeded its execution-memory share (UNABLE_TO_ACQUIRE_MEMORY
-            # with 32 concurrent tasks). 4x smaller per-task sorts fit;
-            # AQE coalesces the small ones back up for the cheap stages.
-            shuffle_partitions=256,
+            shuffle_partitions=shuffle_partitions,
             # zstd halves the on-disk shuffle volume of the long-span fact
             # rows vs lz4 (measured ~1 KB/fact lz4): at 200M facts the
             # ingest shuffle is the disk budget, exactly as it would be
@@ -71,12 +66,19 @@ def main() -> None:
         ensure_on_executors(s)
         return s
 
-    spark = fresh_session()
+    spark = fresh_session(CPUS)
     # corpus materialization is the stored input table, not the pipeline —
     # excluded from stage timing (same rule as bench.py)
     path = ensure_bench_corpus(spark, sf_dir, replicas)
     n_turns = read_bench_corpus(spark, path).count()
     spark.stop()
+    # Shuffle width follows the corpus: one partition per 75k turns, at
+    # least one per core (256 at the 19.2M-turn default, the width that run
+    # was measured at), so a small corpus does not run thousands of
+    # near-empty tasks. The ingest write's reducer sort needs no extra
+    # width: route.write_sinks splits any write task above AQE's advisory
+    # partition size.
+    partitions = max(CPUS, n_turns // 75_000)
 
     stages: list[dict] = []
 
@@ -104,7 +106,7 @@ def main() -> None:
         ingest = dict.fromkeys(FIELDS, 0)
         waves = 0
         while True:
-            spark = fresh_session()
+            spark = fresh_session(partitions)
             corpus = read_bench_corpus(spark, path)
             with stage(spark, "ingest_resume_manifest") as m:
                 r = run_with_resume(
@@ -115,7 +117,7 @@ def main() -> None:
             if not r["processed"]:
                 break
             waves += 1
-        spark = fresh_session()
+        spark = fresh_session(partitions)
         corpus = read_bench_corpus(spark, path)
         # integrity read-back is verification, not pipeline work: it gets
         # its OWN wall (VERDICT r04 #7) so the ingest number stays honest

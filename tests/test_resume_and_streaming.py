@@ -9,6 +9,7 @@
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -53,23 +54,97 @@ def test_resume_partial_then_full(spark, sf_dir, tmp_out):
 
 
 def test_manifest_lineage_metrics(spark, sf_dir, tmp_out):
+    """The manifest's counts are observed during the run, never read back;
+    per partition they must equal the committed output and the input."""
     from cca_spark.plans.manifest import read_facts, read_manifest, run_with_resume
+    from cca_spark.transcripts import load_transcripts
 
     run_with_resume(spark, sf_dir, tmp_out)
-    manifest = read_manifest(spark, tmp_out)
-    facts = read_facts(spark, tmp_out)
-
-    # lineage counts equal committed output counts, per partition
-    m = {r["date_bucket"]: r["n_facts"] for r in manifest.collect()}
+    manifest = read_manifest(spark, tmp_out).collect()
     # partitionBy round-trip infers date_bucket back as a date — compare as strings
-    f = {
+    committed = {
+        r["db"]: (r["n"], r["n_dead"])
+        for r in read_facts(spark, tmp_out)
+        .groupBy(F.col("date_bucket").cast("string").alias("db"))
+        .agg(
+            F.count("*").alias("n"),
+            F.count_if(F.col("sink") == "dead_letter").alias("n_dead"),
+        )
+        .collect()
+    }
+    turns = {
         r["db"]: r["n"]
-        for r in facts.groupBy(F.col("date_bucket").cast("string").alias("db"))
+        for r in load_transcripts(spark, sf_dir)
+        .groupBy(F.col("ts").cast("date").cast("string").alias("db"))
         .agg(F.count("*").alias("n"))
         .collect()
     }
-    assert m == f
-    assert all(r["n_turns"] > 0 and r["run_id"] for r in manifest.collect())
+    assert {r["date_bucket"]: (r["n_facts"], r["n_dead_letter"]) for r in manifest} == committed
+    assert {r["date_bucket"]: r["n_turns"] for r in manifest} == turns
+    assert any(n_dead > 0 for _, n_dead in committed.values())
+    assert all(r["run_id"] for r in manifest)
+
+
+def test_resume_job_count(spark, sf_dir, tmp_out):
+    """One count of the input finds the pending days and their turns, and
+    the write observes the fact counts. Measured at sf0.001, local[4], 8
+    shuffle partitions: 12 and 13 jobs for the two writing calls (18 and 19
+    when the run also scanned the input for distinct days, re-counted its
+    turns and read the committed facts back), 6 for the call with nothing
+    left."""
+    from cca_spark.plans.manifest import run_with_resume
+
+    sc = spark.sparkContext
+    jobs = []
+    for i, max_partitions in enumerate((2, None, None)):
+        group = f"resume_job_count_{i}"
+        sc.setJobGroup(group, "job count")
+        try:
+            r = run_with_resume(spark, sf_dir, tmp_out, max_partitions=max_partitions)
+        finally:
+            sc._jsc.clearJobGroup()
+        jobs.append((len(r["processed"]), len(sc.statusTracker().getJobIdsForGroup(group))))
+    (n1, jobs1), (n2, jobs2), (n3, jobs3) = jobs
+    assert n1 == 2 and n2 > 0 and n3 == 0
+    assert 0 < jobs1 <= 13 and 0 < jobs2 <= 13
+    assert 0 < jobs3 <= 6
+
+
+def _files_per_leaf(out_dir: str) -> dict[str, int]:
+    leaves: dict[str, int] = {}
+    for root, _, names in os.walk(out_dir):
+        n = sum(name.endswith(".parquet") for name in names)
+        if n:
+            leaves[os.path.relpath(root, out_dir)] = n
+    return leaves
+
+
+def test_write_sinks_leaf_layout(spark, sf_dir, tmp_out):
+    """REBALANCE(sink, date_bucket) bounds the files per leaf by the
+    advisory partition size: at the default every leaf of sf0.001 is one
+    file; at 4 KB the larger leaves are split over several tasks, so over
+    several files. The observed ``n_facts`` is exact either way."""
+    from cca_spark.operators.route import write_sinks
+    from cca_spark.plans.pipeline import routed_facts
+    from cca_spark.transcripts import load_transcripts
+
+    routed = routed_facts(spark, load_transcripts(spark, sf_dir))
+    default_dir, small_dir = f"{tmp_out}/default", f"{tmp_out}/small"
+    seen_default = write_sinks(routed, default_dir)
+    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4k")
+    try:
+        seen_small = write_sinks(routed, small_dir)
+    finally:
+        spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+
+    default_leaves, small_leaves = _files_per_leaf(default_dir), _files_per_leaf(small_dir)
+    assert len(default_leaves) > 100
+    assert set(default_leaves.values()) == {1}
+    assert small_leaves.keys() == default_leaves.keys()
+    assert max(small_leaves.values()) > 1
+    assert spark.read.parquet(default_dir).count() == seen_default["n_facts"] > 0
+    assert spark.read.parquet(small_dir).count() == seen_small["n_facts"]
+    assert seen_small["n_facts"] == seen_default["n_facts"]
 
 
 def test_crash_between_data_and_manifest_is_idempotent(spark, sf_dir, tmp_out):
